@@ -200,14 +200,8 @@ private[graft] object BenchKit {
       .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
   }
 
-  def buildSession(cpus: String): SparkSession = {
-    val spark = graft.model.SessionTuning.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+  def buildSession(): SparkSession = {
+    val spark = graft.model.SessionTuning.session().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // the iterative kernels INTENTIONALLY unpersist locally-checkpointed
     // round state once the next state is materialized; Spark logs an
@@ -240,7 +234,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.model.SessionTuning.defaultCores.toString
     // Each query is timed `reps` times and the BEST is reported (the
     // ScaleProbe convention): a single-sample bench let one burst of
     // machine contention forge a >2× "regression" on unchanged code in
@@ -249,7 +243,7 @@ object Bench {
     // are emitted alongside so any contention is visible in the
     // artifact itself.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val spark = buildSession(cpus)
+    val spark = buildSession()
     // Warehouse RETENTION runs where the warehouse is actually used
     // (VERDICT r12 #5): sweep orphaned fixture generations before the
     // first at-rest query re-registers anything, and record the
@@ -496,8 +490,8 @@ object Bench {
     // build-complete markers. Round 12 detached the catalog entries
     // in-JVM; the receipts still inherited the bench JVM's
     // accumulated JIT/heap/ambient state (q141 27.1 s, q150 8.58 s —
-    // both DiagS2-proven NOT the operator). Round 13 runs the leg in
-    // a FRESH CHILD JVM (the literal driver-restart shape): same
+    // a phase split showed neither was the operator). Round 13 runs
+    // the leg in a FRESH CHILD JVM (the literal driver-restart shape): same
     // classpath and module flags as this process, its own
     // SparkSession over the same warehouse dir, so the first sample
     // pays exactly marker re-registration + fresh-JVM first execution
@@ -1073,7 +1067,6 @@ object BenchS2 {
   /** Child entrypoint. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val refs: Seq[(String, Option[Sample])] =
       sys.env.getOrElse("SPARK_GRAFT_S2_REFS", "").split(",").toSeq
         .filter(_.nonEmpty).map { r =>
@@ -1088,7 +1081,7 @@ object BenchS2 {
               Store(0, 0, f(5))))
           (parts(0), best)
         }
-    val spark = buildSession(cpus)
+    val spark = buildSession()
     val meter = new TaskMeter
     spark.sparkContext.addSparkListener(meter)
     // same warm-up as the parent bench, so the child's samples start

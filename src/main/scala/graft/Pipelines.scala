@@ -406,7 +406,7 @@ object Pipelines {
     // without a hold the exact-dedup aggregation re-executes from the
     // source per branch (round 17; the minhashLshPairs shRows/cand
     // holds' argument, one level up). Same RelCache slot lifecycle.
-    val exact = graft.model.RelCache.holding("pipelines.curation.exact", exact0k)
+    val exact = graft.model.RelCache.hold("pipelines.curation.exact", exact0k)
     val pairs = TextDedup
       .minhashLshPairs(exact, k = 8, bands = 4, shingleWidth = 3,
         minJaccard = nearDupJaccard, md5Hashes = md5Hashes, dfCap = dfCap)
@@ -524,7 +524,7 @@ object Pipelines {
     // survivor branch (→ near-dup pairs AND the lang/quality scoring)
     // plus the final attribution join — without a hold each branch
     // re-executed the fingerprint aggregation from the source
-    val withWin = graft.model.RelCache.holding("pipelines.curationAudit.withWin",
+    val withWin = graft.model.RelCache.hold("pipelines.curationAudit.withWin",
       fp.join(win, Seq("__fp")))
     val exact = withWin.filter(col("doc_id") === col("__win"))
       .select(col("doc_id"), col("text"))

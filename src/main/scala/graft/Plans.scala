@@ -8,11 +8,7 @@ import org.apache.spark.sql.SparkSession
   * `sbt "runMain graft.Plans [queryName ...]"`. */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = graft.model.SessionTuning.tuned(SparkSession.builder())
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.model.SessionTuning.session(8)
       // the auditor inspects STATIC physical plans: with AQE on,
       // executedPlan is an AdaptiveSparkPlanExec shell whose inputPlan
       // predates EnsureRequirements — no exchange nodes exist yet, so
@@ -20,7 +16,6 @@ object Plans {
       // dead code. Production sessions keep AQE; only the audit
       // session turns it off.
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")

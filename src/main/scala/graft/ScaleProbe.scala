@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale spot-proof (docs/SCALING.md): derive a 10× dataset from
@@ -39,14 +39,7 @@ object ScaleProbe {
     val queries =
       if (args.nonEmpty) args(0).split(",").toSeq.filter(q => q.nonEmpty && q != "none")
       else headline
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.model.SessionTuning.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.model.SessionTuning.session().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val keyShift = 10000000L

@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke-runs the driver contract surface: `SparkEntry.entry` must
   * return rows on sf0.001. Mirrors the driver's t1 check. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = graft.model.SessionTuning.tuned(SparkSession.builder())
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.model.SessionTuning.session().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val n = df.count()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Warehouse retention sweep (VERDICT r11 #6): delete at-rest table
   * generations whose fixture key no longer matches any current
   * testdata directory. Run via `tools/warehouse_gc.sh` or
@@ -13,11 +11,7 @@ object WarehouseGC {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_TESTDATA", "/root/testdata"))
-    val spark = graft.model.SessionTuning.tuned(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.model.SessionTuning.session(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val (deleted, kept) = graft.model.AtRest.gcWarehouse(spark, root)
     def arr(xs: Seq[String]) = xs.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")

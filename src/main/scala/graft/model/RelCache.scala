@@ -13,9 +13,10 @@ import org.apache.spark.storage.StorageLevel
   * Contract (VERDICT r9 #7):
   *  - every operator persist goes through [[hold]] under a per-
   *    operator slot name; a RE-invocation of the same operator
-  *    releases the previous invocation's blocks, so a long-lived
-  *    session holds at most ONE live invocation's blocks per operator
-  *    (steady-state bounded by code, not by a comment);
+  *    releases the oldest invocation's blocks beyond the slot's `keep`
+  *    depth, so a long-lived session holds at most `keep` live
+  *    invocations' blocks per operator (steady-state bounded by code,
+  *    not by a comment);
   *  - [[release]]/[[releaseAll]] are the explicit close for callers
   *    that want the blocks gone before the next invocation (the
   *    session cache sweep [[graft.SparkEntry.clearQueryCaches]] calls
@@ -25,96 +26,54 @@ import org.apache.spark.storage.StorageLevel
   * building the same query) must NOT drop the cache it just re-used:
   * Spark's CacheManager keys entries by canonicalized plan, so
   * unpersisting the previous invocation's same-plan DataFrame would
-  * evict the new invocation's entry too. [[hold]] therefore releases
-  * only previous relations whose plan differs (`sameResult`) from
-  * every newly held one.
+  * evict the new invocation's entry too. [[hold]] therefore forgets a
+  * same-plan (`sameResult`) predecessor without unpersisting it.
+  *
+  * `keep` (round 18, VERDICT r17 #7): operators invoked several times
+  * while building ONE query (bhAdjustScalable per contrast/platform,
+  * moderatedT per platform) pass `keep` above any single query's
+  * invocation count, so the second invocation never releases blocks
+  * the first invocation's branches still need at action time.
   *
   * Unpersisting a persisted-but-still-referenced relation is always
   * CORRECT (branches recompute from lineage) — this registry manages
   * memory lifecycle, never results. */
 object RelCache {
-  private val slots =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[DataFrame]]
+  private val slots = scala.collection.mutable.Map.empty[String, Vector[DataFrame]]
 
-  /** Persist `dfs` (MEMORY_AND_DISK) under `slot`, releasing whatever
-    * a previous invocation held there — except same-plan relations,
-    * whose cache entry the new invocation shares. Returns the persisted
-    * relations in order (for single-df call sites: `hold(s, df); df`). */
-  def hold(slot: String, dfs: DataFrame*): Unit = {
-    dfs.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
-    val prev = slots.put(slot, dfs.toSeq).getOrElse(Seq.empty)
-    prev.filterNot(p => dfs.exists(n =>
-        try n.queryExecution.analyzed.sameResult(p.queryExecution.analyzed)
-        catch { case _: Throwable => false }))
-      .foreach(unpersistQuietly)
-  }
-
-  /** [[hold]] for the single-relation call shape, returning the held
-    * relation so call sites can bind it inline. */
-  def holding(slot: String, df: DataFrame): DataFrame = { hold(slot, df); df }
-
-  /** Explicitly release one operator slot's blocks. */
-  def release(slot: String): Unit =
-    slots.remove(slot).foreach(_.foreach(unpersistQuietly))
-
-  /** Explicit close for the whole registry — every held block is
-    * unpersisted and the bookkeeping cleared. */
-  def releaseAll(): Unit = { slots.keys.foreach(release); releaseRolling() }
-
-  /** Slots currently holding blocks (spec introspection). */
-  def liveSlots: Set[String] = slots.keySet.toSet
-
-  // ----- rolling holds (round 18, VERDICT r17 #7) -------------------
-  // Operators whose persists are consumed INSIDE one query's final
-  // action but may be invoked several times while building that one
-  // query (bhAdjustScalable per contrast/platform, moderatedT per
-  // platform) can't use [[hold]]'s one-live-invocation rule — the
-  // second invocation would release blocks the first invocation's
-  // branches still need at action time. [[holdRolling]] keeps the
-  // last `keep` invocations per family instead: bounded in a
-  // long-lived session (Verify never sweeps), and `keep` is sized
-  // above any single query's invocation count so nothing live is
-  // evicted mid-query. Evicting a still-referenced relation would be
-  // CORRECT anyway (branches recompute from lineage) — this registry
-  // manages memory lifecycle, never results.
-
-  private val rollingSlots =
-    scala.collection.concurrent.TrieMap.empty[String,
-      scala.collection.mutable.ArrayDeque[DataFrame]]
-
-  /** Persist `df` (MEMORY_AND_DISK) under rolling family `family`,
-    * evicting beyond the `keep` most recent distinct-plan relations.
-    * A same-plan re-hold (a bench warm sample rebuilding the query)
-    * replaces its predecessor WITHOUT unpersisting — Spark's
-    * CacheManager keys entries by canonicalized plan, so unpersisting
-    * the old twin would evict the entry the new one shares. */
-  def holdRolling(family: String, df: DataFrame, keep: Int = 4): DataFrame = {
+  /** Persist `df` (MEMORY_AND_DISK) under `slot`, keeping the `keep`
+    * most recent distinct-plan relations there and releasing older
+    * ones. Returns `df` so call sites can bind it inline. */
+  def hold(slot: String, df: DataFrame, keep: Int = 1): DataFrame = {
+    require(keep >= 1, s"keep must be at least 1, got $keep")
     df.persist(StorageLevel.MEMORY_AND_DISK)
-    val q = rollingSlots.getOrElseUpdate(family,
-      scala.collection.mutable.ArrayDeque.empty[DataFrame])
-    q.synchronized {
-      val (same, different) = q.partition(p =>
+    val evicted = synchronized {
+      // drop same-plan twins' references, keep their cache
+      val others = slots.getOrElse(slot, Vector.empty).filterNot(p =>
         try df.queryExecution.analyzed.sameResult(p.queryExecution.analyzed)
         catch { case _: Throwable => false })
-      q.clear()
-      q ++= different // drop same-plan twins' references, keep their cache
-      q += df
-      while (q.length > keep) unpersistQuietly(q.removeHead())
+      slots(slot) = others.takeRight(keep - 1) :+ df
+      others.dropRight(keep - 1)
     }
+    evicted.foreach(unpersistQuietly)
     df
   }
 
-  /** Release every rolling family's blocks (the [[releaseAll]] sweep). */
-  private def releaseRolling(): Unit =
-    rollingSlots.keys.foreach { f =>
-      rollingSlots.remove(f).foreach(q =>
-        q.synchronized { q.foreach(unpersistQuietly); q.clear() })
-    }
+  /** Explicitly release one operator slot's blocks. */
+  def release(slot: String): Unit =
+    synchronized(slots.remove(slot)).foreach(_.foreach(unpersistQuietly))
 
-  /** Rolling families currently holding blocks (spec introspection),
-    * with their live counts. */
-  def liveRolling: Map[String, Int] =
-    rollingSlots.map { case (k, q) => k -> q.synchronized(q.length) }.toMap
+  /** Explicit close for the whole registry — every held block is
+    * unpersisted and the bookkeeping cleared. */
+  def releaseAll(): Unit = {
+    val all = synchronized { val v = slots.values.flatten.toSeq; slots.clear(); v }
+    all.foreach(unpersistQuietly)
+  }
+
+  /** Slots currently holding blocks, with their live relation counts
+    * (spec introspection). */
+  def liveSlots: Map[String, Int] =
+    synchronized(slots.map { case (k, v) => k -> v.size }.toMap)
 
   private def unpersistQuietly(df: DataFrame): Unit =
     try df.unpersist(blocking = false)

@@ -1,15 +1,18 @@
 package graft.model
 
-/** Host-level session tuning shared by every entrypoint session
-  * (round 17, guide §6 "I/O and file layout").
+/** The one session factory ([[session]]) and the host-level tuning
+  * it applies (round 17, guide §6 "I/O and file layout"). Every
+  * entrypoint builds its session here, so the core count, shuffle
+  * partitioning and SQL extensions are decided in one place.
   *
   * Shuffle/spill local directories: Spark defaults its local dirs to
   * `java.io.tmpdir` (/tmp), which on this class of host is a slow
   * virtual disk — a MEASURED ~350-400 ms of the ~450-550 ms cost of
   * one tiny 32-partition shuffle job is shuffle-file I/O latency
-  * (DiagFrag floors: 1-task no-shuffle job 68-92 ms, same job + one
-  * 100k-row shuffle 455-549 ms, and 213-255 ms with local dirs on
-  * tmpfs). A query chain with ~30 exchanges pays that per exchange.
+  * (host floors, as `perfbench --trace 1` reports them in
+  * `spark.job_floor_ms` / `spark.shuffle_floor_ms`: 1-task no-shuffle
+  * job 68-92 ms, same job + one 100k-row shuffle 455-549 ms, and
+  * 213-255 ms with local dirs on tmpfs). A query chain with ~30 exchanges pays that per exchange.
   * Production guidance is the same ranked choice — put shuffle dirs
   * on the fastest local medium available (NVMe on real clusters); in
   * this sandbox that is the RAM-backed /dev/shm.
@@ -25,6 +28,23 @@ package graft.model
   * knob is the contract, the tmpfs default is the measured local
   * optimum. */
 object SessionTuning {
+  import org.apache.spark.sql.SparkSession
+
+  /** Cores a session runs on: `SPARK_GRAFT_CPUS`, else every processor
+    * the JVM sees. */
+  def defaultCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").filter(_.nonEmpty).map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The session builder every entrypoint uses: [[tuned]] local dirs,
+    * `local[cores]`, one shuffle partition per core, UI off and the
+    * graft SQL extensions. Callers add only their own settings. */
+  def session(cores: Int = defaultCores): SparkSession.Builder =
+    tuned(SparkSession.builder())
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
 
   /** tmpfs is RAM: require this much free space before defaulting
     * shuffle dirs onto it (round 18, VERDICT r17 #5 — a node whose
@@ -43,22 +63,48 @@ object SessionTuning {
         // a crashed/killed JVM leaves its dir consuming RAM until a
         // reboot (deleteOnExit only runs on NORMAL shutdown and cannot
         // remove non-empty dirs — ADVICE r17): sweep siblings whose
-        // owning pid is dead before creating ours
+        // owner is gone before creating ours
         sweepStaleDirs(shm)
         // per-process subdir so concurrent JVMs never share block dirs;
         // Spark removes its blockmgr/spill subdirs on clean shutdown,
         // and the startup sweep above reclaims dirs an abnormal exit
         // left behind
-        val d = new java.io.File(shm,
-          s"graft-spark-${java.lang.ProcessHandle.current().pid()}")
+        val d = new java.io.File(shm, s"graft-spark-$ownPid")
         d.mkdirs()
+        lockOwnDir(d)
         Some(d.getAbsolutePath)
       } else None
     }
 
-  /** Remove `graft-spark-<pid>` dirs whose pid no longer exists
-    * (ADVICE r17: abnormal exits orphan RAM-backed shuffle dirs). */
-  private def sweepStaleDirs(shm: java.io.File): Unit =
+  private val ownPid = java.lang.ProcessHandle.current().pid()
+
+  /** Each JVM holds an exclusive lock on the `.lock` file inside its
+    * own dir for its whole life; the OS drops the lock when the
+    * process dies, however it dies. */
+  private def lockFile(d: java.io.File): java.nio.channels.FileChannel =
+    java.nio.channels.FileChannel.open(new java.io.File(d, ".lock").toPath,
+      java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.WRITE)
+
+  private var ownLock: Option[java.nio.channels.FileLock] = None
+
+  private[graft] def lockOwnDir(d: java.io.File): Unit = synchronized {
+    if (ownLock.isEmpty) ownLock =
+      try {
+        val ch = lockFile(d)
+        val l = Option(ch.tryLock())
+        if (l.isEmpty) ch.close()
+        l
+      } catch { case _: Throwable => None }
+  }
+
+  /** Remove `graft-spark-<pid>` dirs left by dead JVMs (ADVICE r17:
+    * abnormal exits orphan RAM-backed shuffle dirs). A pid alone cannot
+    * tell: across pid namespaces a live foreign JVM's pid looks dead
+    * (ADVICE r18), so a dir also needs its lock file to be free. This
+    * JVM's own dir is never probed — closing a second channel on a
+    * file would drop the lock this JVM holds on it. */
+  private[graft] def sweepStaleDirs(shm: java.io.File): Unit =
     try {
       val rx = "^graft-spark-(\\d+)$".r
       Option(shm.listFiles()).getOrElse(Array.empty).foreach { f =>
@@ -66,10 +112,19 @@ object SessionTuning {
           val pid = m.group(1).toLong
           val alive = java.lang.ProcessHandle.of(pid)
             .map[java.lang.Boolean](h => h.isAlive).orElse(false)
-          if (!alive && f.isDirectory) deleteRecursively(f)
+          if (pid != ownPid && !alive && f.isDirectory && unlocked(f))
+            deleteRecursively(f)
         }
       }
     } catch { case _: Throwable => () }
+
+  /** True iff no process holds the lock file inside `d`. */
+  private def unlocked(d: java.io.File): Boolean =
+    try {
+      val ch = lockFile(d)
+      try Option(ch.tryLock()).exists { l => l.release(); true }
+      finally ch.close()
+    } catch { case _: Throwable => false }
 
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory)

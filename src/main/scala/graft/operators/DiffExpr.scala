@@ -232,7 +232,7 @@ object DiffExpr {
     // platform inside one query, so the per-invocation blocks roll
     // out after `keep` invocations instead of accumulating for the
     // session (VERDICT r17 #7).
-    val perGene = graft.model.RelCache.holdRolling("diffexpr.moderatedt.pergene",
+    val perGene = graft.model.RelCache.hold("diffexpr.moderatedt.pergene",
       stats.filter(col(groupCol).isin(groupA, groupB))
       .groupBy(col(gene))
       .agg(sum(nDf).as("n_tot"), count(lit(1)).as("k"),
@@ -244,7 +244,7 @@ object DiffExpr {
       .filter(col("k") === 2 && col("n_tot") > 2 && col("ma").isNotNull && col("mb").isNotNull)
       .withColumn("df_resid", col("n_tot") - 2)
       .withColumn("s2", col("ss_resid") / col("df_resid"))
-      .filter(col("s2") > 0))
+      .filter(col("s2") > 0), keep = 4)
     // method-of-moments on z = log(s2): E[z] and Var[z] give (d0, s0).
     // Null-guarded: an empty perGene (every gene filtered) leaves all
     // three moments NULL, and a single gene leaves zvar NULL — both
@@ -298,7 +298,7 @@ object DiffExpr {
     val nDf = if (stats.columns.contains("n_obs")) col("n_obs") else col("n")
     // see moderatedT: two executions (moments collect + output plan);
     // rolling RelCache slot, same lifecycle rationale
-    val perGene = graft.model.RelCache.holdRolling("diffexpr.moderatedtall.pergene",
+    val perGene = graft.model.RelCache.hold("diffexpr.moderatedtall.pergene",
       stats
       .groupBy(col(gene))
       .agg(sum(nDf).as("n_tot"), count(lit(1)).as("k"),
@@ -306,7 +306,7 @@ object DiffExpr {
       .filter(col("n_tot") > col("k"))
       .withColumn("df_resid", col("n_tot") - col("k"))
       .withColumn("s2", col("ss_resid") / col("df_resid"))
-      .filter(col("s2") > 0))
+      .filter(col("s2") > 0), keep = 4)
     // null-guarded like moderatedT: empty/single-gene moment rows
     // degrade to the d0 = 1e6 branch instead of an NPE
     val moments = perGene
@@ -365,9 +365,9 @@ object DiffExpr {
     // gene×sample bounded; referenced by BOTH the unit decomposition
     // and the per-gene group count below — persist or the cell-mean
     // join lineage executes twice (round 17; sweep-owned lifecycle)
-    val resid = graft.model.RelCache.holdRolling("diffexpr.dupcorr.resid",
+    val resid = graft.model.RelCache.hold("diffexpr.dupcorr.resid",
       joined.join(cells, Seq("gene_id", groupCol))
-        .withColumn("__e", col("value") - col("__mu")))
+        .withColumn("__e", col("value") - col("__mu")), keep = 4)
     val unit = resid.groupBy(col("gene_id"), col("unit"))
       .agg(avg("__e").as("__eu"), count(lit(1)).as("__m"),
            sum(col("__e") * col("__e")).as("__se2"))
@@ -555,16 +555,16 @@ object DiffExpr {
     resid.select(col("sample_id"), (col("__w_raw") / meanW).as("weight"))
   }
 
-  /** W5/A13 — Benjamini–Hochberg adjustment as a window program:
-    * rank p ascending (deterministic tiebreak), candidate = p·n/rank,
-    * adjusted = running minimum of candidates from the current row to
-    * the largest p, capped at 1. Identical to R `p.adjust(method="BH")`.
-    *
-    * The global window is over one row per test — at scale, p-value
-    * relations are ≤ genes × contrasts, far below data volume. */
-  def bhAdjust(df: DataFrame, p: String, tiebreak: Seq[Column], out: String = "p_bh"): DataFrame = {
-    val n = count(lit(1)).over(Window.partitionBy())
-    val wRank = Window.orderBy(col(p).asc +: tiebreak.map(_.asc): _*)
+  /** The Benjamini–Hochberg window program, once for every BH entry
+    * point: within each `partCols` partition rank p ascending
+    * (deterministic tiebreak), candidate = p·n/rank, adjusted = running
+    * minimum of candidates from the current row to the largest p,
+    * capped at 1. `n` is the test count per partition (a window count
+    * or a driver literal). */
+  private def bhWindow(df: DataFrame, p: String, partCols: Seq[Column],
+      tiebreak: Seq[Column], n: Column, out: String): DataFrame = {
+    val wRank = Window.partitionBy(partCols: _*)
+      .orderBy(col(p).asc +: tiebreak.map(_.asc): _*)
     // The running min "from here to the largest p" is expressed as a
     // GROWING frame over the reverse ordering: Spark evaluates
     // unbounded-preceding frames incrementally (O(n)), whereas an
@@ -573,13 +573,22 @@ object DiffExpr {
     // __rk is the final tie-break so the reverse ordering is the exact
     // mirror of the ranking order even when (p, tiebreak) has
     // duplicate keys.
-    val wRevCum = Window.orderBy(col(p).desc +: tiebreak.map(_.desc) :+ col("__rk").desc: _*)
+    val wRevCum = Window.partitionBy(partCols: _*)
+      .orderBy(col(p).desc +: tiebreak.map(_.desc) :+ col("__rk").desc: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     df.withColumn("__n", n)
       .withColumn("__rk", row_number().over(wRank))
       .withColumn(out, least(lit(1.0), min(col(p) * col("__n") / col("__rk")).over(wRevCum)))
       .drop("__n", "__rk")
   }
+
+  /** W5/A13 — Benjamini–Hochberg adjustment as one global window
+    * program ([[bhWindow]]). Identical to R `p.adjust(method="BH")`.
+    *
+    * The global window is over one row per test — at scale, p-value
+    * relations are ≤ genes × contrasts, far below data volume. */
+  def bhAdjust(df: DataFrame, p: String, tiebreak: Seq[Column], out: String = "p_bh"): DataFrame =
+    bhWindow(df, p, Nil, tiebreak, count(lit(1)).over(Window.partitionBy()), out)
 
   /** W5/A13 at data scale — BH without the single-partition global
     * window of [[bhAdjust]]: range-partition on the ranking key, take
@@ -601,7 +610,7 @@ object DiffExpr {
     // go through rolling RelCache slots (round 18, VERDICT r17 #7):
     // one query may invoke BH per contrast/platform, so slots roll
     // instead of releasing the previous invocation mid-query.
-    val base = graft.model.RelCache.holdRolling("diffexpr.bhadjust.base", df)
+    val base = graft.model.RelCache.hold("diffexpr.bhadjust.base", df, keep = 4)
     // n as a DRIVER scalar (round 18, the DE-chain job-floor fix):
     // counting the persisted base materializes it once and replaces
     // the broadcast-count subquery stage inside the action — and the
@@ -610,29 +619,22 @@ object DiffExpr {
     val n = base.count()
     val smallMax = spark.conf.getOption("spark.graft.bh.smallThreshold")
       .map(_.toLong).getOrElse(100000L)
-    val orderAsc = col(p).asc +: tiebreak.map(_.asc)
     if (n <= smallMax) {
-      // gene-grain input: the [[bhAdjust]] window program with the
+      // gene-grain input: the [[bhWindow]] program with the
       // known n injected — numerically identical (same p·n/rank
       // candidates, same running min; DiffExprSpec pins both paths),
       // one single-task sort instead of the stitch's range exchange +
       // two persisted window passes + two broadcast joins. The
       // single-partition window is exactly what `n ≤ smallMax` makes
       // safe; data-sized relations take the stitch below.
-      val wRank = Window.orderBy(orderAsc: _*)
-      val wRevCum = Window.orderBy(
-          col(p).desc +: tiebreak.map(_.desc) :+ col("__rk").desc: _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      base.withColumn("__rk", row_number().over(wRank))
-        .withColumn(out,
-          least(lit(1.0), min(col(p) * lit(n) / col("__rk")).over(wRevCum)))
-        .drop("__rk")
+      bhWindow(base, p, Nil, tiebreak, lit(n), out)
     } else {
+      val orderAsc = col(p).asc +: tiebreak.map(_.asc)
       val ranged = base.repartitionByRange(parts, orderAsc: _*)
         .withColumn("__pid", spark_partition_id())
       val wLocal = Window.partitionBy("__pid").orderBy(orderAsc: _*)
-      val withLrk = graft.model.RelCache.holdRolling("diffexpr.bhadjust.lrk",
-        ranged.withColumn("__lrk", row_number().over(wLocal)))
+      val withLrk = graft.model.RelCache.hold("diffexpr.bhadjust.lrk",
+        ranged.withColumn("__lrk", row_number().over(wLocal)), keep = 4)
       val wOff = Window.partitionBy(lit(0)).orderBy(col("__pid").asc)
         .rowsBetween(Window.unboundedPreceding, -1)
       val offs = withLrk.groupBy("__pid").agg(count(lit(1)).as("__cnt"))
@@ -644,8 +646,8 @@ object DiffExpr {
       // running min, floored by the min of all later partitions
       val wRevLocal = Window.partitionBy("__pid").orderBy(col("__rk").desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val withLmin = graft.model.RelCache.holdRolling("diffexpr.bhadjust.lmin",
-        cand.withColumn("__lmin", min("__cand").over(wRevLocal)))
+      val withLmin = graft.model.RelCache.hold("diffexpr.bhadjust.lmin",
+        cand.withColumn("__lmin", min("__cand").over(wRevLocal)), keep = 4)
       val wRevOff = Window.partitionBy(lit(0)).orderBy(col("__pid").desc)
         .rowsBetween(Window.unboundedPreceding, -1)
       val sufmins = withLmin.groupBy("__pid").agg(min("__cand").as("__pmin"))
@@ -664,18 +666,9 @@ object DiffExpr {
     * contrast), so the windows are gene-grain bounded — the shape the
     * multi-contrast chain needs at scale. */
   def bhAdjustGrouped(df: DataFrame, p: String, partCols: Seq[Column],
-      tiebreak: Seq[Column], out: String = "p_bh"): DataFrame = {
-    val n = count(lit(1)).over(Window.partitionBy(partCols: _*))
-    val wRank = Window.partitionBy(partCols: _*)
-      .orderBy(col(p).asc +: tiebreak.map(_.asc): _*)
-    val wRevCum = Window.partitionBy(partCols: _*)
-      .orderBy(col(p).desc +: tiebreak.map(_.desc) :+ col("__rk").desc: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("__n", n)
-      .withColumn("__rk", row_number().over(wRank))
-      .withColumn(out, least(lit(1.0), min(col(p) * col("__n") / col("__rk")).over(wRevCum)))
-      .drop("__n", "__rk")
-  }
+      tiebreak: Seq[Column], out: String = "p_bh"): DataFrame =
+    bhWindow(df, p, partCols, tiebreak,
+      count(lit(1)).over(Window.partitionBy(partCols: _*)), out)
 
   /** A13 — decideTests: significance call at (α, lfc) thresholds. */
   def decideTests(df: DataFrame, pAdj: String = "p_bh", lfc: String = "log2fc",

@@ -36,8 +36,8 @@ object Normalize {
     // join back — persist, or the per-sample sort window (and the
     // whole upstream) executes twice (round 17); rolling RelCache
     // slot so a long-lived session stays bounded (round 18)
-    val ranked = graft.model.RelCache.holdRolling("normalize.quantile.ranked",
-      m.df.withColumn("__rk", row_number().over(wRank)))
+    val ranked = graft.model.RelCache.hold("normalize.quantile.ranked",
+      m.df.withColumn("__rk", row_number().over(wRank)), keep = 4)
     val rankMeans = ranked.groupBy(col("__rk")).agg(avg(m.valueCol).as("__rkmean"))
     val normed = ranked.join(rankMeans, Seq("__rk"))
       .select(m.geneCol, m.sampleCol, col("__rkmean").as(m.value))
@@ -101,10 +101,10 @@ object Normalize {
       .withColumn("value", log2((col("value") + 0.5) / (col("__lib") + 1.0) * 1e6))
       .join(broadcast(groups.select(col("sample_id"), col(groupCol))), Seq("sample_id"))
     val cells = y.groupBy(col("gene_id"), col(groupCol)).agg(avg("value").as("__mu"))
-    val obs = graft.model.RelCache.holdRolling("normalize.voom.obs",
+    val obs = graft.model.RelCache.hold("normalize.voom.obs",
       y.join(cells, Seq("gene_id", groupCol))
         .select(col("gene_id"), col("sample_id"), col(groupCol), col("value"),
-          col("__loglib"), col("__mu")))
+          col("__loglib"), col("__mu")), keep = 4)
     // per-gene trend points (genes with residual df and nonzero SS),
     // collected in the fit's ordering (sx, gene) — gene-grain bounded
     val pts = obs.groupBy("gene_id")
@@ -426,9 +426,10 @@ object Normalize {
     // single-row-group scan without round-robin's sort-before-
     // repartition cost
     val spark = m.df.sparkSession
-    val df = graft.model.RelCache.holdRolling("normalize.rmabg",
+    val df = graft.model.RelCache.hold("normalize.rmabg",
       m.canonical.df
-        .repartition(spark.sessionState.conf.numShufflePartitions, col("sample_id")))
+        .repartition(spark.sessionState.conf.numShufflePartitions, col("sample_id")),
+      keep = 4)
     val rng = df.groupBy("sample_id")
       .agg(min("value").as("__lo"), max("value").as("__hi"))
       .withColumn("__w", (col("__hi") - col("__lo")) / bins)

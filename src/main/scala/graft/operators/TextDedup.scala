@@ -1006,12 +1006,6 @@ object TextDedup {
         .unionByName(mins.select(col("src"), col("m").as("dst")))
         .distinct()
     }
-    // dev-only per-phase timing (SPARK_GRAFT_CC_DIAG=1): names where a
-    // closure's wall goes — init materialization, each contraction
-    // action, confirm, final labeling — so floor work is attributable
-    // without re-deriving it from job logs each round
-    val ccDiag = sys.env.get("SPARK_GRAFT_CC_DIAG").contains("1")
-    def diag(msg: => String): Unit = if (ccDiag) println(s"[ccdiag] $msg")
     // gate stats in the SAME single action that materializes the lazy
     // checkpoints: the distinct-edge count + order-insensitive
     // signature (the loop's fixpoint witness) AND the node-universe
@@ -1024,7 +1018,6 @@ object TextDedup {
     // subtrees read the shared pairsC checkpoint; the block manager's
     // per-block write lock keeps the concurrent first computation
     // single-flight.
-    val tInit = System.nanoTime()
     val gr = init
       .select(col("src"), col("dst"), lit(false).as("__self"))
       .unionByName(allNodes.select(col("id").as("src"),
@@ -1035,8 +1028,6 @@ object TextDedup {
       .head()
     var sig = (gr.getLong(0), if (gr.isNullAt(1)) 0L else gr.getLong(1))
     val nNodes = gr.getLong(2)
-    diag(f"init: ${(System.nanoTime() - tInit) / 1e9}%.2fs " +
-      f"edges=${sig._1} nodes=$nNodes")
     // BOUNDED-GRAPH regime (round 16): the distinct edge set AND the
     // node universe fit one task — close it exactly with a single-
     // reducer union-find instead of paying stage-latency-bound
@@ -1069,7 +1060,6 @@ object TextDedup {
       else (localUnionFindMax / 4, localUnionFindNodeMax / 4)
     if ((integralIds || stringIds) && sig._1 <= edgeCap && nNodes <= nodeCap) {
       lastCcRegime = "union-find"
-      val tUf = System.nanoTime()
       val ufEdges = init
         .unionByName(allNodes.select(col("id").as("src"), col("id").as("dst")))
       val lab =
@@ -1111,8 +1101,6 @@ object TextDedup {
             col("id"))
         else labeled
       val out = spread.localCheckpoint(true)
-      diag(f"union-find: ${(System.nanoTime() - tUf) / 1e9}%.2fs" +
-        (if (nNodes > ccLabelSpreadMin) " (spread by id)" else ""))
       releaseState(init)
       releaseState(allNodes)
       releaseState(pairsC)
@@ -1140,12 +1128,9 @@ object TextDedup {
       // non-converging period-2 orbit — impossible; and the exact
       // symmetric-difference check below re-confirms set equality
       // before the loop exits.
-      val tRound = System.nanoTime()
       val half = smallStar(largeStar(edges)).localCheckpoint(false)
       val next = smallStar(largeStar(half)).localCheckpoint(false)
       val nextSig = signature(next) // the round's ONE action
-      diag(f"round $iter: ${(System.nanoTime() - tRound) / 1e9}%.2fs " +
-        f"edges=${nextSig._1}")
       // signature match is necessary for set equality; CONFIRM it with
       // an exact symmetric difference (both sides are DISTINCT sets,
       // so in the bag union a row appears once iff it is in exactly
@@ -1153,13 +1138,10 @@ object TextDedup {
       // cannot forge convergence: the exact check fails and the loop
       // continues; it only prices one extra action at the true
       // fixpoint.
-      if (nextSig == sig) {
-        val tConf = System.nanoTime()
+      if (nextSig == sig)
         done = next.unionByName(edges)
           .groupBy("src", "dst").count()
           .filter(col("count") === 1).isEmpty
-        diag(f"confirm: ${(System.nanoTime() - tConf) / 1e9}%.2fs done=$done")
-      }
       releaseState(half) // intermediate state: dead once next exists
       releaseState(edges) // next is materialized; the old state is dead
       edges = next
@@ -1182,12 +1164,10 @@ object TextDedup {
     // One materialization here makes every later reference a block
     // read, and lets the closure's internal state (final edge set,
     // node universe) release NOW instead of leaking until a driver GC.
-    val tLab = System.nanoTime()
     val out = labeled.unionByName(
       allNodes.join(labeled, Seq("id"), "left_anti")
         .select(col("id"), col("id").as("component")))
       .localCheckpoint(true)
-    diag(f"labeling: ${(System.nanoTime() - tLab) / 1e9}%.2fs rounds=$iter")
     releaseState(edges)
     releaseState(allNodes)
     releaseState(pairsC)
@@ -1724,7 +1704,8 @@ object TextDedup {
       .groupBy(col(id))
       .agg(sort_array(collect_list(col("pos"))).as("__starts"))
     base.join(starts, Seq(id), "left")
-      .withColumn("__tot", size(col("__toks")).cast("long"))
+      // null text has null tokens: count it as 0 tokens, like r17
+      .withColumn("__tot", coalesce(size(col("__toks")), lit(0)).cast("long"))
       .withColumn("__cov",
         coalesce(graft.functions.TextFunctions.coveredCountOf(
           size(col("__toks")), col("__starts"), n), lit(0)).cast("long"))

@@ -19,8 +19,8 @@ object MetaQueries {
 
   /** `events` with a canonical epoch-micros `us` column, regardless of how
     * the generator encoded `ts`: parquet TIMESTAMP(MICROS) resolves to a
-    * Spark TimestampType (use `unix_micros`), while TIMESTAMP(NANOS) read
-    * under `nanosAsLong` resolves to LongType nanos (divide by 1000). The
+    * Spark TimestampType (use `unix_micros`), while a plain INT64 nanos
+    * column resolves to LongType (divide by 1000). The
     * dtype branch happens once at plan time — no per-row dispatch. */
   private def eventsWithMicros(s: SparkSession, dir: String): DataFrame = {
     val ev = t(s, dir, "events")

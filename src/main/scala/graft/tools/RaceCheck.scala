@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Two-JVM write-race harness for the at-rest marker protocol
   * (VERDICT r13 #5). The fresh-JVM session-2 bench leg exercises the
   * cross-process READ side (marker re-registration); this proves the
@@ -150,13 +148,7 @@ object RaceCheck {
 
     // third-session proof: the parent registers from the surviving
     // marker (no rebuild) and reads identical data
-    val spark = graft.model.SessionTuning.tuned(SparkSession.builder())
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.model.SessionTuning.session(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val third = parse(graft.queries.TextQueries.raceProbe(spark, sfDir))
     spark.stop()
@@ -188,13 +180,7 @@ object RaceChild {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val go = new java.io.File(sys.env("SPARK_GRAFT_GO_FILE"))
-    val spark = graft.model.SessionTuning.tuned(SparkSession.builder())
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.model.SessionTuning.session(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the scan path so the barrier releases two equally-ready
     // processes into the build branch

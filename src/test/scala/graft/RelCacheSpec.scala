@@ -36,6 +36,9 @@ class RelCacheSpec extends SparkSpec {
     // (same-plan reference relation may be shared; nothing accumulates)
     assert(persisted <= afterFirst,
       s"chained invocations accumulated blocks: $afterFirst -> $persisted")
+    // every slot the operator used is a keep = 1 slot
+    assert(RelCache.liveSlots.nonEmpty && RelCache.liveSlots.values.forall(_ == 1),
+      s"a keep = 1 slot holds more than one invocation: ${RelCache.liveSlots}")
     // the explicit close drops everything the operators held
     RelCache.releaseAll()
     assert(persisted == 0,
@@ -85,10 +88,10 @@ class RelCacheSpec extends SparkSpec {
     }
     assert(counts.last <= counts(4),
       s"rolling holds kept accumulating: $counts")
-    assert(RelCache.liveRolling.getOrElse("diffexpr.bhadjust.base", 0) <= 4)
+    assert(RelCache.liveSlots.getOrElse("diffexpr.bhadjust.base", 0) <= 4)
     RelCache.releaseAll()
-    assert(persisted == 0, s"releaseAll left rolling blocks: ${RelCache.liveRolling}")
-    assert(RelCache.liveRolling.values.sum == 0)
+    assert(persisted == 0, s"releaseAll left rolling blocks: ${RelCache.liveSlots}")
+    assert(RelCache.liveSlots.values.sum == 0)
   }
 
   test("rolling same-plan re-hold keeps the shared cache entry live") {
@@ -115,13 +118,13 @@ class RelCacheSpec extends SparkSpec {
       .filter(col("doc_id") < 300)
     TextDedup.winnowOverlap(docs, k = 4, window = 4, minShared = 2,
       md5Hashes = true).count()
-    assert(RelCache.liveSlots.contains("textdedup.winnowOverlap"))
+    assert(RelCache.liveSlots.get("textdedup.winnowOverlap").contains(1))
     val ref = docs.filter(col("doc_id") % 7 < 3)
     val inc = docs.filter(col("doc_id") % 7 >= 3)
     val (fp, sizes) = TextDedup.winnowIndex(ref, k = 4, window = 4, md5Hashes = true)
     TextDedup.containmentAgainstIndex(inc, fp, sizes, k = 4, window = 4,
       minShared = 2, minContainment = 0.8, md5Hashes = true).count()
-    assert(RelCache.liveSlots.contains("textdedup.containmentAgainstIndex"))
+    assert(RelCache.liveSlots.get("textdedup.containmentAgainstIndex").contains(1))
     RelCache.releaseAll()
     assert(persisted == 0 && RelCache.liveSlots.isEmpty)
   }

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * load-bearing (VERDICT r17 #4), so the old pipeline is
   * re-implemented here as the reference. Fixtures cover spans at
   * document start/end, overlapping and adjacent spans, fully-masked
-  * documents, docs shorter than / exactly the width, empty and
-  * whitespace-only text, and a minDocs=3 threshold. */
+  * documents, docs shorter than / exactly the width, empty,
+  * whitespace-only and null text, and a minDocs=3 threshold. */
 class RepeatedSpanRewriteSpec extends SparkSpec {
   import graft.functions.TextFunctions.tokens
 
@@ -29,7 +29,8 @@ class RepeatedSpanRewriteSpec extends SparkSpec {
       (7L, "  ,,  "),                                        // no tokens
       (8L, "unique text with no shared spans at all here"),
       (9L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"), // twin of 1
-      (10L, "CASE Folds; alpha beta GAMMA delta epsilon!! tail")        // normalization hits
+      (10L, "CASE Folds; alpha beta GAMMA delta epsilon!! tail"),       // normalization hits
+      (11L, null)                                            // null text
     ).toDF("doc_id", "text")
   }
 

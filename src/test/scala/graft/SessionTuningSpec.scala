@@ -1,0 +1,78 @@
+package graft
+
+import graft.model.SessionTuning
+import java.io.{BufferedReader, File, InputStreamReader}
+import java.nio.file.Files
+
+/** The one session factory: its defaults, what its sessions carry, the
+  * stale-dir sweep it runs, and a guard that no other main-source file
+  * builds a session or reads the core-count knob. */
+class SessionTuningSpec extends SparkSpec {
+
+  test("default cores: SPARK_GRAFT_CPUS, else every available processor") {
+    val expected = sys.env.get("SPARK_GRAFT_CPUS").filter(_.nonEmpty)
+      .map(_.trim.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
+    assert(SessionTuning.defaultCores === expected)
+  }
+
+  test("a factory session has the graft SQL extensions and one shuffle partition per core") {
+    // SparkSpec's session is SessionTuning.session(2)
+    val r = spark.sql("SELECT qnorm(0.975), vec_dot(array(1d), array(2d))").head()
+    assert(math.abs(r.getDouble(0) - 1.959964) < 1e-5)
+    assert(r.getDouble(1) === 2.0)
+    assert(spark.sparkContext.master === "local[2]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "2")
+    assert(spark.sparkContext.defaultParallelism === 2)
+  }
+
+  test("stale-dir sweep spares a dir whose lock is held and removes an unlocked dead-pid dir") {
+    val shm = Files.createTempDirectory("graft-sweep").toFile
+    // pids above the kernel's pid_max: never alive in this namespace,
+    // which is how a live JVM in another pid namespace looks
+    val held = new File(shm, "graft-spark-999999990")
+    val stale = new File(shm, "graft-spark-999999991")
+    Seq(held, stale).foreach(d => new File(d, "blockmgr-0").mkdirs())
+    val java = new File(sys.props("java.home"), "bin/java").getPath
+    val holder = new ProcessBuilder(java, "-cp", sys.props("java.class.path"),
+      "graft.SweepLockHolder", held.getPath).redirectErrorStream(true).start()
+    try {
+      val out = new BufferedReader(new InputStreamReader(holder.getInputStream))
+      assert(out.readLine() === "locked")
+      SessionTuning.sweepStaleDirs(shm)
+      assert(held.isDirectory, "swept a dir whose lock another process holds")
+      assert(!stale.exists(), "kept an unlocked dead-pid dir")
+    } finally { holder.destroy(); holder.waitFor() }
+    // the OS drops the lock with its holder, so the dir is stale now
+    SessionTuning.sweepStaleDirs(shm)
+    assert(!held.exists(), "kept a dir whose holder has exited")
+    shm.delete()
+  }
+
+  test("only SessionTuning builds a session or reads SPARK_GRAFT_CPUS") {
+    val root = new File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root, not ${new File(".").getAbsolutePath}")
+    def files(f: File): Seq[File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val builder = "SparkSession\\s*\\.\\s*builder".r
+    val offenders = for {
+      f <- files(root) if f.getName != "SessionTuning.scala"
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.zipWithIndex
+      // handing the knob to a child process's environment is not a read
+      if builder.findFirstIn(line).isDefined ||
+        (line.contains("SPARK_GRAFT_CPUS") && !line.contains(".put("))
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "build sessions with SessionTuning.session:\n" + offenders.mkString("\n"))
+  }
+}
+
+/** Holds a graft local dir's lock the way a live JVM does, until its
+  * stdin closes or it is killed. */
+object SweepLockHolder {
+  def main(args: Array[String]): Unit = {
+    SessionTuning.lockOwnDir(new File(args(0)))
+    println("locked")
+    System.in.read()
+  }
+}

@@ -11,13 +11,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = graft.model.SessionTuning.tuned(SparkSession.builder())
-      .master("local[2]")
+    val s = graft.model.SessionTuning.session(2)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
