@@ -130,6 +130,12 @@ object Meta {
   def icc(m1: ExpressionMatrix, m2: ExpressionMatrix): DataFrame =
     iccMulti(Seq("p1" -> m1, "p2" -> m2)).select("gene_id", "icc")
 
+  /** One sample-row tile of an [[iccMulti]] cross-product matrix and,
+    * in a gramian's first pass, its s-vector and row count. */
+  private final case class OuterSums(m: Array[Array[Double]], s: Array[Double]) {
+    var rows = 0L
+  }
+
   /** A20 for all platform pairs, standardizing each platform ONCE
     * (`Meta_analysis.R:331` reuses the intermediate across pairs).
     * Returns (p1, p2, gene_id, icc) for every unordered pair. */
@@ -144,14 +150,13 @@ object Meta {
 
     // per-platform standardized dense per-gene vectors over the
     // platform's own sample universe (missing cells = 0 before
-    // centering — the dense-matrix semantics of the reference)
-    def sampleCount(m: ExpressionMatrix): Int =
-      m.canonical.df.select(col("sample_id")).distinct().count().toInt
-    def standardize(m: ExpressionMatrix): Dataset[(String, Array[Double])] = {
+    // centering — the dense-matrix semantics of the reference),
+    // with the platform's sample count: one collect of its sample ids
+    def standardize(m: ExpressionMatrix): (Dataset[(String, Array[Double])], Int) = {
       val sampleIds = m.canonical.df.select(col("sample_id")).distinct()
         .orderBy("sample_id").collect().map(_.getString(0))
       val bc = spark.sparkContext.broadcast(sampleIds.zipWithIndex.toMap)
-      m.canonical.df.join(genes, Seq("gene_id"), "left_semi")
+      val v = m.canonical.df.join(genes, Seq("gene_id"), "left_semi")
         .select(col("gene_id"), col("sample_id"), col("value"))
         .as[(String, String, Double)]
         .groupByKey(_._1)
@@ -166,6 +171,7 @@ object Meta {
           if (norm > 0) { i = 0; while (i < arr.length) { arr(i) /= norm; i += 1 } }
           (g, arr)
         }
+      (v, sampleIds.length)
     }
 
     // The gramian accumulates in SAMPLE-ROW TILES: each treeAggregate
@@ -177,23 +183,29 @@ object Meta {
     // scale one tile covers every row, so the plan (and the q46 hash)
     // is unchanged. Per-entry float accumulation order is identical
     // across tilings — each entry sees the same per-partition gene
-    // sequence and the same combine topology.
+    // sequence and the same combine topology. With `sums`, the first
+    // pass also accumulates the s-vector Σ_g x_g and the row count in
+    // the same seqOp and combine, so they cost no pass of their own.
     val tileBytes = spark.conf.getOption("spark.graft.icc.tileBytes")
       .map(_.toLong).getOrElse(64L * 1024 * 1024)
     def outerAgg(ds: Dataset[(Array[Double], Array[Double])],
-        nRows: Int, nCols: Int): Array[Array[Double]] = {
+        nRows: Int, nCols: Int, sums: Boolean = false): OuterSums = {
       val tileRows = math.max(1, (tileBytes / 8 / math.max(1, nCols)).toInt)
       val rdd = ds.rdd
-      val out = new Array[Array[Double]](nRows)
+      val out = OuterSums(new Array[Array[Double]](nRows),
+        if (sums) new Array[Double](nRows) else null)
       var r0 = 0
       while (r0 < nRows) {
         val r1 = math.min(nRows, r0 + tileRows)
         val lo = r0
         val hi = r1
-        val part = rdd.treeAggregate(null: Array[Array[Double]])(
+        val withSums = sums && lo == 0
+        val part = rdd.treeAggregate(null: OuterSums)(
           (acc, xy) => {
             val (x, y2) = xy
-            val m = if (acc == null) Array.ofDim[Double](hi - lo, y2.length) else acc
+            val a = if (acc != null) acc else OuterSums(Array.ofDim[Double](hi - lo, y2.length),
+              if (withSums) new Array[Double](x.length) else null)
+            val m = a.m
             var i = lo
             while (i < hi) {
               if (x(i) != 0.0) {
@@ -203,38 +215,44 @@ object Meta {
               }
               i += 1
             }
-            m
+            if (withSums) {
+              i = 0; while (i < x.length) { a.s(i) += x(i); i += 1 }
+              a.rows += 1
+            }
+            a
           },
           (a, b) =>
             if (a == null) b else if (b == null) a
             else {
-              for (i <- a.indices; j <- a(i).indices) a(i)(j) += b(i)(j); a
+              for (i <- a.m.indices; j <- a.m(i).indices) a.m(i)(j) += b.m(i)(j)
+              if (withSums) {
+                var i = 0; while (i < a.s.length) { a.s(i) += b.s(i); i += 1 }
+                a.rows += b.rows
+              }
+              a
             })
         var i = lo
         while (i < hi) {
-          out(i) = if (part == null) new Array[Double](nCols) else part(i - lo)
+          out.m(i) = if (part == null) new Array[Double](nCols) else part.m(i - lo)
           i += 1
+        }
+        if (withSums && part != null) {
+          System.arraycopy(part.s, 0, out.s, 0, nRows)
+          out.rows = part.rows
         }
         r0 = r1
       }
       out
     }
 
-    val sizes = platforms.map { case (name, m) => name -> sampleCount(m) }.toMap
-    val std = platforms.map { case (name, m) =>
-      name -> standardize(m).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    val grams = std.map { case (name, v) =>
-      name -> outerAgg(v.map(t => (t._2, t._2)), sizes(name), sizes(name))
-    }.toMap
-    val svecs = std.map { case (name, v) =>
-      name -> v.rdd.map(_._2).treeAggregate(null: Array[Double])(
-        (acc, x) => {
-          val s = if (acc == null) new Array[Double](x.length) else acc
-          var i = 0; while (i < x.length) { s(i) += x(i); i += 1 }; s
-        },
-        (a, b) => if (a == null) b else if (b == null) a
-          else { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
+    val (std, counts) = platforms.map { case (name, m) =>
+      val (v, n) = standardize(m)
+      (name -> v.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), name -> n)
+    }.unzip
+    val sizes = counts.toMap
+    // one pass per platform: gramian, s-vector and gene count
+    val moments = std.map { case (name, v) =>
+      name -> outerAgg(v.map(t => (t._2, t._2)), sizes(name), sizes(name), sums = true)
     }.toMap
 
     def qf(x: Array[Double], mat: Array[Array[Double]], y2: Array[Double]): Double = {
@@ -258,14 +276,15 @@ object Meta {
       acc
     }
 
-    val nGenes = std.head._2.count()
+    // every platform holds exactly the common genes
+    val nGenes = moments(std.head._1).rows
     std.combinations(2).map { case Seq((n1, v1), (n2, v2)) =>
       val joined = v1.joinWith(v2, v1("_1") === v2("_1"))
         .map { case ((g, x1), (_, x2)) => (g, x1, x2) }
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cross = outerAgg(joined.map(t => (t._2, t._3)), sizes(n1), sizes(n2))
+      val cross = outerAgg(joined.map(t => (t._2, t._3)), sizes(n1), sizes(n2)).m
       val bcAll = spark.sparkContext.broadcast(
-        (grams(n1), grams(n2), cross, svecs(n1), svecs(n2), nGenes))
+        (moments(n1).m, moments(n2).m, cross, moments(n1).s, moments(n2).s, nGenes))
       joined.map { case (g, x1, x2) =>
         val (g11, g22, c, s1, s2, gCount) = bcAll.value
         val n = (gCount - 1).toDouble

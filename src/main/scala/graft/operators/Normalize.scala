@@ -1,8 +1,8 @@
 package graft.operators
 
-import graft.functions.StatAlgebra
+import graft.functions.{RmaBgParams, StatAlgebra}
 import graft.model.ExpressionMatrix
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -409,69 +409,21 @@ object Normalize {
     * DuckDB oracle, so the hash gate replays bit-for-bit (the same
     * trick as the Acklam qnorm oracles).
     *
-    * Scale shape: two histogram aggregations + one conditional-moment
-    * aggregation, all keyed by sample (samples are contract-bounded);
-    * parameters re-enter the plan through a broadcast join; the
-    * correction itself is one codegen projection over the cells. */
+    * Scale shape: one aggregation keyed by sample collects each
+    * sample's values and evaluates μ, σ and α in one native expression
+    * ([[graft.functions.RmaBgParams]]); the parameters re-enter the
+    * plan through one broadcast join (samples are contract-bounded);
+    * the correction itself is one codegen projection over the cells.
+    * Per-sample state is one sample's values in one task, about
+    * 2.4 MB at 306k probesets. */
   def rmaBackground(m: ExpressionMatrix, bins: Int = 256): ExpressionMatrix = {
-    // the matrix feeds FIVE consumers (range stats, both histogram
-    // passes, the conditional moments, the corrected projection) —
-    // without persistence each re-executed the upstream lineage
-    // (round 17: q106's cold ran ~5 full input passes); gene×sample
-    // bounded, sweep-owned lifecycle. Cache PARTITIONED BY THE
-    // AGGREGATION KEY: every consumer groups by sample_id, so the
-    // sample-hash layout is reused by all five aggregations with no
-    // further exchange (guide §2.4 "two operations keyed the same way
-    // share one exchange") — and it spreads the harness's 1-task
-    // single-row-group scan without round-robin's sort-before-
-    // repartition cost
-    val spark = m.df.sparkSession
-    val df = graft.model.RelCache.hold("normalize.rmabg",
-      m.canonical.df
-        .repartition(spark.sessionState.conf.numShufflePartitions, col("sample_id")),
-      keep = 4)
-    val rng = df.groupBy("sample_id")
-      .agg(min("value").as("__lo"), max("value").as("__hi"))
-      .withColumn("__w", (col("__hi") - col("__lo")) / bins)
-    def histMode(values: DataFrame, lo: Column, w: Column): DataFrame =
-      // max-count bin, ties to the LOWER bin: max(struct(cnt, -bin)).
-      // w = 0 (constant / single-row sample) → everything in bin 0;
-      // under ANSI the raw division would throw, and downstream the
-      // degenerate sample falls through to the identity branch.
-      values
-        .withColumn("__bin",
-          when(w > 0, least(floor((col("value") - lo) / w), lit(bins - 1)))
-            .otherwise(lit(0L)))
-        .groupBy("sample_id", "__bin").agg(count(lit(1)).as("__c"))
-        .groupBy("sample_id")
-        .agg(max(struct(col("__c").as("c"), (-col("__bin")).as("nb")))
-          .as("__top"))
-        .select(col("sample_id"), (-col("__top.nb")).as("__mbin"))
-    val withRng = df.join(broadcast(rng), Seq("sample_id"))
-    val m1 = histMode(withRng, col("__lo"), col("__w"))
-      .join(broadcast(rng), Seq("sample_id"))
-      .select(col("sample_id"),
-        (col("__lo") + (col("__mbin") + 0.5) * col("__w")).as("__m1"))
-    // lower-half mode: re-histogram the values BELOW m1 over [lo, m1)
-    val lower = withRng.join(broadcast(m1), Seq("sample_id"))
-      .filter(col("value") < col("__m1"))
-      .withColumn("__w2", (col("__m1") - col("__lo")) / bins)
-    val mu = histMode(lower, col("__lo"), col("__w2"))
-      .join(broadcast(m1.join(rng, Seq("sample_id"))), Seq("sample_id"))
-      .select(col("sample_id"),
-        (col("__lo") + (col("__mbin") + 0.5) * (col("__m1") - col("__lo")) / bins)
-          .as("__mu"))
-    // LEFT join: a degenerate sample (constant values → zero-width
-    // histogram bins, or nothing strictly below m1 → empty lower
-    // half) has no mu row; it must fall through to the identity
-    // branch below, not silently vanish from the output.
-    val params = df.join(broadcast(mu), Seq("sample_id"), "left")
-      .groupBy("sample_id")
-      .agg(first(col("__mu")).as("__mu"),
-        sqrt(lit(2.0) * avg(when(col("value") < col("__mu"),
-          (col("value") - col("__mu")) * (col("value") - col("__mu"))))).as("__sigma"),
-        (lit(1.0) / avg(when(col("value") > col("__mu"),
-          col("value") - col("__mu")))).as("__alpha"))
+    val df = m.canonical.df
+    val params = df.groupBy("sample_id")
+      .agg(RmaBgParams.rma_bg_params(
+        collect_list(col("value").cast("double")), count(lit(1)), bins)
+        .as("__p"))
+      .select(col("sample_id"), col("__p.mu").as("__mu"),
+        col("__p.sigma").as("__sigma"), col("__p.alpha").as("__alpha"))
     val a = col("value") - col("__mu") - col("__alpha") * col("__sigma") * col("__sigma")
     val corrected = a + col("__sigma") *
       (StatAlgebra.dnorm(a / col("__sigma")) -

@@ -795,4 +795,42 @@ class PipelinesSpec extends SparkSpec {
     assert(got2 == Long.MaxValue,
       s"capped walk must degrade to live-now, got $got2")
   }
+
+  test("Overlap.inParallel: a failing item cancels a sibling's running job and rethrows") {
+    import org.apache.spark.scheduler.{JobFailed, JobResult, SparkListener,
+      SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val sleeperJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, JobResult]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.job.description") == "overlap-sleeper") {
+          sleeperJob.set(e.jobId); started.countDown()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.put(e.jobId, e.jobResult)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val t0 = System.nanoTime()
+      val err = intercept[IllegalStateException] {
+        Overlap.inParallel(Seq(0, 1)) {
+          case 0 =>
+            assert(started.await(30, java.util.concurrent.TimeUnit.SECONDS))
+            throw new IllegalStateException("item 0 failed")
+          case _ =>
+            sc.setJobDescription("overlap-sleeper")
+            sc.parallelize(1 to 2, 2).map { x => Thread.sleep(60000); x }.collect().sum
+        }
+      }
+      assert(err.getMessage == "item 0 failed")
+      assert((System.nanoTime() - t0) / 1e9 < 30, "the caller waited for the sibling")
+      val deadline = System.nanoTime() + 20e9.toLong
+      while (!ends.containsKey(sleeperJob.get) && System.nanoTime() < deadline) Thread.sleep(50)
+      ends.get(sleeperJob.get) match {
+        case JobFailed(e) => assert(e.getMessage.toLowerCase.contains("cancel"), e.getMessage)
+        case other => fail(s"sibling job ${sleeperJob.get} ended as $other")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
 }
