@@ -43,6 +43,15 @@ private[graft] object BenchKit {
       .filter(_.isCompilationTimeMonitoringSupported)
       .map(_.getTotalCompilationTime).getOrElse(0L)
 
+  // Janino compiles of generated classes and their time, JVM totals.
+  // A compiled class stays in the JVM's class cache across samples,
+  // like JIT code, so a sample's delta is the code generation it
+  // could not reuse: its compile floor.
+  def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  def codegenNanos(): Long =
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime
+
   case class Tasks(jobs: Long, tasks: Long, taskSec: Double,
       cpuFrac: Double, taskGcFrac: Double, shufMb: Double, spillMb: Double)
 
@@ -67,7 +76,8 @@ private[graft] object BenchKit {
 
   case class Sample(wall: Double, err: Option[String],
       steal: Option[Double], gc: Double, jit: Double, t: Tasks,
-      buildSec: Double, store: Store)
+      buildSec: Double, store: Store, codegenCompiles: Long,
+      codegenMs: Double)
 
   // Per-sample JOB/STAGE listener (VERDICT r10 #2): records what the
   // TASKS did during each sample (executor run/cpu time, task GC,
@@ -133,6 +143,7 @@ private[graft] object BenchKit {
     meter.reset()
     val b0 = graft.model.BuildMeter.seconds
     val j0 = cpuJiffies(); val g0 = gcMillis(); val c0 = jitMillis()
+    val cg0 = codegenCompiles(); val cgNs0 = codegenNanos()
     val t0 = System.nanoTime()
     val err =
       try { fn.queryExecution.toRdd.count(); None }
@@ -151,7 +162,8 @@ private[graft] object BenchKit {
     Sample(wall, err, steal,
       (gcMillis() - g0) / 1e3 / wall.max(1e-9),
       (jitMillis() - c0) / 1e3 / wall.max(1e-9), meter.snap(),
-      graft.model.BuildMeter.seconds - b0, storeSnap(spark))
+      graft.model.BuildMeter.seconds - b0, storeSnap(spark),
+      codegenCompiles() - cg0, (codegenNanos() - cgNs0) / 1e6)
   }
 
   // OUTLIER ATTRIBUTION (VERDICT r10 #2): any sample whose wall
@@ -356,9 +368,8 @@ object Bench {
         } else Seq.empty
       val warmOk = warmRes.collect { case s if s.err.isEmpty => s.wall }
       val warm = if (warmOk.nonEmpty) Some(warmOk.min) else None
-      val err = coldSamples.collectFirst { case Sample(_, Some(e), _, _, _, _, _, _) => e }
-        .orElse(warmRes.collectFirst {
-          case Sample(_, Some(e), _, _, _, _, _, _) => s"warm-only: $e" })
+      val err = coldSamples.flatMap(_.err).headOption
+        .orElse(warmRes.flatMap(_.err).headOption.map(e => s"warm-only: $e"))
       // the reported min is over SUCCESSFUL samples: a fast failure
       // must not under-report a query whose other rep succeeded (the
       // headline and the failure set would disagree); only when every
@@ -380,6 +391,8 @@ object Bench {
     // name → {cold (best-of-N, caches cleared), warm (post-cold
     // samples, caches kept), samples (raw cold walls), steal/gc/jit
     // (per-sample fractions of wall, cold samples then warm samples),
+    // codegen_compiles/codegen_ms (per-sample Janino compiles and
+    // their milliseconds; compiled classes survive the cold clear),
     // task_gc/shuf_mb/spill_mb (per-sample task-level costs),
     // store_mb/rdd_mem_mb/rdd_disk_mb (per-sample session storage
     // state — the round-13 channel that names cache-on-disk)}
@@ -390,6 +403,8 @@ object Bench {
         ",\"steal\":" + stealArr(samples.map(_.steal)) +
         ",\"gc\":" + fracArr(samples.map(_.gc)) +
         ",\"jit\":" + fracArr(samples.map(_.jit)) +
+        ",\"codegen_compiles\":" + samples.map(_.codegenCompiles).mkString("[", ",", "]") +
+        ",\"codegen_ms\":" + mbArr(samples.map(_.codegenMs)) +
         ",\"task_sec\":" + fracArr(samples.map(_.t.taskSec)) +
         ",\"cpu_frac\":" + fracArr(samples.map(_.t.cpuFrac)) +
         ",\"task_gc\":" + fracArr(samples.map(_.t.taskGcFrac)) +
@@ -1057,6 +1072,7 @@ object BenchS2 {
         f""""task_sec":${smp.t.taskSec}%.2f,"jobs":${smp.t.jobs},""" +
         f""""cpu_frac":${smp.t.cpuFrac}%.3f,""" +
         f""""gc_frac":${smp.gc}%.3f,"jit_frac":${smp.jit}%.3f,""" +
+        f""""codegen_compiles":${smp.codegenCompiles},"codegen_ms":${smp.codegenMs}%.1f,""" +
         f""""rdd_disk_mb":${smp.store.rddDiskMb}%.1f,""" +
         mainBest.map(b => f""""best_main_wall":${b.wall}%.3f,"best_main_task_sec":${b.t.taskSec}%.2f,""").getOrElse("") +
         s""""cause":${jsonStr(why)}}"""
@@ -1078,7 +1094,7 @@ object BenchS2 {
             if (wall < 0) None
             else Some(Sample(wall, None, None, 0, 0,
               Tasks(0, 0, parts(2).toDouble, f(4), 0, 0, f(3)), 0,
-              Store(0, 0, f(5))))
+              Store(0, 0, f(5)), 0, 0))
           (parts(0), best)
         }
     val spark = buildSession()

@@ -60,6 +60,15 @@ object SparkEntry {
     * per-query headline is always a cold measurement; Verify leaves
     * the caches alone (sharing across queries is the fixture design).
     *
+    * "Cold" means the DATA caches are cleared. Compiled classes stay:
+    * the JVM-wide generated-class cache
+    * ([[graft.model.SessionTuning.codegenCacheEntries]]) keeps them, as
+    * the JVM keeps its JIT code, so a cold sample of a query the session
+    * has run before compiles little. Since that cache was sized to hold
+    * a whole chain, `graft.Bench` per-query cold samples are not
+    * comparable with those taken before (when a re-run recompiled most
+    * of its classes).
+    *
     * CONTRACT: the sweep unpersists EVERY persistent RDD in the
     * session — including localCheckpoint-backed ones whose lineage is
     * truncated, which become unrecomputable ("checkpoint block not

@@ -31,14 +31,22 @@ import org.apache.spark.storage.StorageLevel
   *
   * `keep` (round 18, VERDICT r17 #7): operators invoked several times
   * while building ONE query (bhAdjustScalable per contrast/platform,
-  * moderatedT per platform) pass `keep` above any single query's
-  * invocation count, so the second invocation never releases blocks
-  * the first invocation's branches still need at action time.
+  * moderatedT per platform) pass [[keepPerQuery]], so a later
+  * invocation never releases blocks an earlier invocation's branches
+  * still need at action time.
   *
   * Unpersisting a persisted-but-still-referenced relation is always
   * CORRECT (branches recompute from lineage) — this registry manages
   * memory lifecycle, never results. */
 object RelCache {
+  /** `keep` for operators invoked once per platform or contrast inside
+    * one query. The reference's ceiling is one invocation per
+    * platform: 9 microarray platforms + RNA-seq = 10. Below that, a
+    * later platform's invocation releases an earlier one's blocks while
+    * the query still reads them (still correct: the branches recompute
+    * from lineage). */
+  val keepPerQuery = 10
+
   private val slots = scala.collection.mutable.Map.empty[String, Vector[DataFrame]]
 
   /** Persist `df` (MEMORY_AND_DISK) under `slot`, keeping the `keep`

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.StatKernels
-import graft.model.ExpressionMatrix
+import graft.model.{ExpressionMatrix, RelCache}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -232,7 +232,7 @@ object DiffExpr {
     // platform inside one query, so the per-invocation blocks roll
     // out after `keep` invocations instead of accumulating for the
     // session (VERDICT r17 #7).
-    val perGene = graft.model.RelCache.hold("diffexpr.moderatedt.pergene",
+    val perGene = RelCache.hold("diffexpr.moderatedt.pergene",
       stats.filter(col(groupCol).isin(groupA, groupB))
       .groupBy(col(gene))
       .agg(sum(nDf).as("n_tot"), count(lit(1)).as("k"),
@@ -244,7 +244,7 @@ object DiffExpr {
       .filter(col("k") === 2 && col("n_tot") > 2 && col("ma").isNotNull && col("mb").isNotNull)
       .withColumn("df_resid", col("n_tot") - 2)
       .withColumn("s2", col("ss_resid") / col("df_resid"))
-      .filter(col("s2") > 0), keep = 4)
+      .filter(col("s2") > 0), keep = RelCache.keepPerQuery)
     // method-of-moments on z = log(s2): E[z] and Var[z] give (d0, s0).
     // Null-guarded: an empty perGene (every gene filtered) leaves all
     // three moments NULL, and a single gene leaves zvar NULL — both
@@ -298,7 +298,7 @@ object DiffExpr {
     val nDf = if (stats.columns.contains("n_obs")) col("n_obs") else col("n")
     // see moderatedT: two executions (moments collect + output plan);
     // rolling RelCache slot, same lifecycle rationale
-    val perGene = graft.model.RelCache.hold("diffexpr.moderatedtall.pergene",
+    val perGene = RelCache.hold("diffexpr.moderatedtall.pergene",
       stats
       .groupBy(col(gene))
       .agg(sum(nDf).as("n_tot"), count(lit(1)).as("k"),
@@ -306,7 +306,7 @@ object DiffExpr {
       .filter(col("n_tot") > col("k"))
       .withColumn("df_resid", col("n_tot") - col("k"))
       .withColumn("s2", col("ss_resid") / col("df_resid"))
-      .filter(col("s2") > 0), keep = 4)
+      .filter(col("s2") > 0), keep = RelCache.keepPerQuery)
     // null-guarded like moderatedT: empty/single-gene moment rows
     // degrade to the d0 = 1e6 branch instead of an NPE
     val moments = perGene
@@ -365,9 +365,9 @@ object DiffExpr {
     // gene×sample bounded; referenced by BOTH the unit decomposition
     // and the per-gene group count below — persist or the cell-mean
     // join lineage executes twice (round 17; sweep-owned lifecycle)
-    val resid = graft.model.RelCache.hold("diffexpr.dupcorr.resid",
+    val resid = RelCache.hold("diffexpr.dupcorr.resid",
       joined.join(cells, Seq("gene_id", groupCol))
-        .withColumn("__e", col("value") - col("__mu")), keep = 4)
+        .withColumn("__e", col("value") - col("__mu")), keep = RelCache.keepPerQuery)
     val unit = resid.groupBy(col("gene_id"), col("unit"))
       .agg(avg("__e").as("__eu"), count(lit(1)).as("__m"),
            sum(col("__e") * col("__e")).as("__se2"))
@@ -610,7 +610,7 @@ object DiffExpr {
     // go through rolling RelCache slots (round 18, VERDICT r17 #7):
     // one query may invoke BH per contrast/platform, so slots roll
     // instead of releasing the previous invocation mid-query.
-    val base = graft.model.RelCache.hold("diffexpr.bhadjust.base", df, keep = 4)
+    val base = RelCache.hold("diffexpr.bhadjust.base", df, keep = RelCache.keepPerQuery)
     // n as a DRIVER scalar (round 18, the DE-chain job-floor fix):
     // counting the persisted base materializes it once and replaces
     // the broadcast-count subquery stage inside the action — and the
@@ -633,8 +633,8 @@ object DiffExpr {
       val ranged = base.repartitionByRange(parts, orderAsc: _*)
         .withColumn("__pid", spark_partition_id())
       val wLocal = Window.partitionBy("__pid").orderBy(orderAsc: _*)
-      val withLrk = graft.model.RelCache.hold("diffexpr.bhadjust.lrk",
-        ranged.withColumn("__lrk", row_number().over(wLocal)), keep = 4)
+      val withLrk = RelCache.hold("diffexpr.bhadjust.lrk",
+        ranged.withColumn("__lrk", row_number().over(wLocal)), keep = RelCache.keepPerQuery)
       val wOff = Window.partitionBy(lit(0)).orderBy(col("__pid").asc)
         .rowsBetween(Window.unboundedPreceding, -1)
       val offs = withLrk.groupBy("__pid").agg(count(lit(1)).as("__cnt"))
@@ -646,8 +646,8 @@ object DiffExpr {
       // running min, floored by the min of all later partitions
       val wRevLocal = Window.partitionBy("__pid").orderBy(col("__rk").desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val withLmin = graft.model.RelCache.hold("diffexpr.bhadjust.lmin",
-        cand.withColumn("__lmin", min("__cand").over(wRevLocal)), keep = 4)
+      val withLmin = RelCache.hold("diffexpr.bhadjust.lmin",
+        cand.withColumn("__lmin", min("__cand").over(wRevLocal)), keep = RelCache.keepPerQuery)
       val wRevOff = Window.partitionBy(lit(0)).orderBy(col("__pid").desc)
         .rowsBetween(Window.unboundedPreceding, -1)
       val sufmins = withLmin.groupBy("__pid").agg(min("__cand").as("__pmin"))

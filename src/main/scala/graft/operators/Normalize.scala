@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{RmaBgParams, StatAlgebra}
-import graft.model.ExpressionMatrix
+import graft.model.{ExpressionMatrix, RelCache}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,8 +36,8 @@ object Normalize {
     // join back — persist, or the per-sample sort window (and the
     // whole upstream) executes twice (round 17); rolling RelCache
     // slot so a long-lived session stays bounded (round 18)
-    val ranked = graft.model.RelCache.hold("normalize.quantile.ranked",
-      m.df.withColumn("__rk", row_number().over(wRank)), keep = 4)
+    val ranked = RelCache.hold("normalize.quantile.ranked",
+      m.df.withColumn("__rk", row_number().over(wRank)), keep = RelCache.keepPerQuery)
     val rankMeans = ranked.groupBy(col("__rk")).agg(avg(m.valueCol).as("__rkmean"))
     val normed = ranked.join(rankMeans, Seq("__rk"))
       .select(m.geneCol, m.sampleCol, col("__rkmean").as(m.value))
@@ -101,10 +101,10 @@ object Normalize {
       .withColumn("value", log2((col("value") + 0.5) / (col("__lib") + 1.0) * 1e6))
       .join(broadcast(groups.select(col("sample_id"), col(groupCol))), Seq("sample_id"))
     val cells = y.groupBy(col("gene_id"), col(groupCol)).agg(avg("value").as("__mu"))
-    val obs = graft.model.RelCache.hold("normalize.voom.obs",
+    val obs = RelCache.hold("normalize.voom.obs",
       y.join(cells, Seq("gene_id", groupCol))
         .select(col("gene_id"), col("sample_id"), col(groupCol), col("value"),
-          col("__loglib"), col("__mu")), keep = 4)
+          col("__loglib"), col("__mu")), keep = RelCache.keepPerQuery)
     // per-gene trend points (genes with residual df and nonzero SS),
     // collected in the fit's ordering (sx, gene) — gene-grain bounded
     val pts = obs.groupBy("gene_id")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.model.ExpressionMatrix
+import graft.model.{ExpressionMatrix, RelCache}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,8 +36,8 @@ object QC {
     * exchange"). */
   def rle(m: ExpressionMatrix): DataFrame = {
     val parts = m.df.sparkSession.sessionState.conf.numShufflePartitions
-    val df = graft.model.RelCache.hold("qc.rle.in",
-      m.df.repartition(parts, m.geneCol), keep = 4)
+    val df = RelCache.hold("qc.rle.in",
+      m.df.repartition(parts, m.geneCol), keep = RelCache.keepPerQuery)
     val med = df.groupBy(m.geneCol)
       .agg(expr(s"percentile(${m.value}, 0.5)").as("__med"))
     df.join(med, Seq(m.gene))
@@ -237,8 +237,8 @@ object QC {
     // gene-keyed cache shared by the reference-median aggregation and
     // the M/A join — see [[rle]] (round 18, the rmaBackground pattern)
     val parts = m.df.sparkSession.sessionState.conf.numShufflePartitions
-    val base = graft.model.RelCache.hold("qc.mastats.in",
-      m.canonical.df.repartition(parts, col("gene_id")), keep = 4)
+    val base = RelCache.hold("qc.mastats.in",
+      m.canonical.df.repartition(parts, col("gene_id")), keep = RelCache.keepPerQuery)
     val ref = base.groupBy("gene_id")
       .agg(expr("percentile(value, 0.5)").as("__ref"))
     base.join(ref, Seq("gene_id"))

@@ -77,21 +77,40 @@ class RelCacheSpec extends SparkSpec {
     val docs = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select(col("l_orderkey").as("id"),
         (col("l_extendedprice") % 1.0).as("p"))
-    // 8 DIFFERENT-plan invocations of the bhAdjustScalable persists:
-    // the rolling family must cap at its keep depth, not accumulate
-    // (VERDICT r17 #7 — Verify-style sessions never sweep)
-    val counts = (1 to 8).map { i =>
+    // more DIFFERENT-plan invocations of the bhAdjustScalable persists
+    // than the slot keeps: the rolling family must cap at its keep
+    // depth, not accumulate (VERDICT r17 #7 — Verify-style sessions
+    // never sweep)
+    val keep = RelCache.keepPerQuery
+    val counts = (1 to keep + 3).map { i =>
       graft.operators.DiffExpr.bhAdjustScalable(
-        docs.filter(col("id") % 11 === i % 11), "p",
+        docs.filter(col("id") % 17 === i), "p",
         Seq(col("id"))).count()
       persisted
     }
-    assert(counts.last <= counts(4),
+    assert(counts.last <= counts(keep),
       s"rolling holds kept accumulating: $counts")
-    assert(RelCache.liveSlots.getOrElse("diffexpr.bhadjust.base", 0) <= 4)
+    assert(RelCache.liveSlots.getOrElse("diffexpr.bhadjust.base", 0) <= keep)
     RelCache.releaseAll()
     assert(persisted == 0, s"releaseAll left rolling blocks: ${RelCache.liveSlots}")
     assert(RelCache.liveSlots.values.sum == 0)
+  }
+
+  test("six holds on one slot inside one query all stay live") {
+    SparkEntry.clearQueryCaches()
+    assert(persisted == 0)
+    // one operator invoked per platform while one query is built: every
+    // invocation's relation is still read when the query runs
+    val base = spark.range(0, 100, 1, 2).toDF("id")
+    val held = (1 to 6).map(i => RelCache.hold("relcache.spec.per_query",
+      base.selectExpr(s"id * $i AS v"), keep = RelCache.keepPerQuery))
+    val q = held.reduce(_ union _)
+    assert(q.count() == 600)
+    assert(RelCache.liveSlots.get("relcache.spec.per_query").contains(6),
+      s"a hold released an earlier one of the same query: ${RelCache.liveSlots}")
+    assert(persisted == 6, s"$persisted of 6 held relations are persisted")
+    RelCache.releaseAll()
+    assert(persisted == 0)
   }
 
   test("rolling same-plan re-hold keeps the shared cache entry live") {

@@ -1,12 +1,16 @@
 package graft
 
 import graft.model.SessionTuning
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import java.io.{BufferedReader, File, InputStreamReader}
 import java.nio.file.Files
 
-/** The one session factory: its defaults, what its sessions carry, the
-  * stale-dir sweep it runs, and a guard that no other main-source file
-  * builds a session or reads the core-count knob. */
+/** The one session factory: its defaults, what its sessions carry
+  * (including the code-generation policy: a compiled class is reused
+  * across the queries of a session and across identical subtrees of
+  * one plan), the stale-dir sweep it runs, and a guard that no other
+  * main-source file builds a session or reads the core-count knob. */
 class SessionTuningSpec extends SparkSpec {
 
   test("default cores: SPARK_GRAFT_CPUS, else every available processor") {
@@ -23,6 +27,44 @@ class SessionTuningSpec extends SparkSpec {
     assert(spark.sparkContext.master === "local[2]")
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "2")
     assert(spark.sparkContext.defaultParallelism === 2)
+  }
+
+  test("the policy line names master, cores, partitions, local dir and codegen policy") {
+    val line = SessionTuning.policyLine(spark.sparkContext.getConf)
+    Seq("master=local[2]", "cores=2", "shuffle_partitions=2", "local_dir=",
+      s"codegen_cache_entries=${SessionTuning.codegenCacheEntries}",
+      "codegen_ids_in_class_names=false").foreach(kv => assert(line.contains(kv), line))
+  }
+
+  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  /** Janino compiles while `f` runs (a JVM-wide count; specs run one at
+    * a time in the forked test JVM). */
+  private def compilesOf(f: => Unit): Long = { val c0 = compiles(); f; compiles() - c0 }
+  /** One whole-stage subtree whose generated source is unique to `k`:
+    * the literal is inlined into the code. */
+  private def branch(k: Long) =
+    spark.range(0, 64, 1, 2).selectExpr(s"id * ${k}L + 1 AS x").filter("x % 3 = 0")
+  private def run(df: org.apache.spark.sql.DataFrame): Unit = df.queryExecution.toRdd.count()
+
+  test("re-running a query after more than 100 other distinct queries compiles no class") {
+    run(branch(1000003))
+    // Spark's default cache holds 100 classes: these evict the first
+    // query's classes there, and stay well below the factory's size
+    (1L to 160L).foreach(k => run(branch(k)))
+    val again = compilesOf(run(branch(1000003)))
+    assert(again === 0, s"the re-run compiled $again classes")
+  }
+
+  test("identical subtrees at different codegen stage ids compile one shared class") {
+    def union(k: Long) = { val b = branch(k); b.union(b) }
+    run(union(2000003)) // the classes a union of this shape adds, once
+    val stageIds = union(2000005).queryExecution.executedPlan.collect {
+      case w: WholeStageCodegenExec => w.codegenStageId }
+    assert(stageIds.distinct.size === 2, s"expected two codegen stages: $stageIds")
+    val one = compilesOf(run(branch(2000007)))
+    val two = compilesOf(run(union(2000009)))
+    assert(one > 0, "a fresh subtree compiled nothing")
+    assert(two === one, s"two identical branches compiled $two classes, one branch $one")
   }
 
   test("stale-dir sweep spares a dir whose lock is held and removes an unlocked dead-pid dir") {

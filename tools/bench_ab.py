@@ -13,6 +13,10 @@ and its bound. A gain holds when the change wins at least nine tenths of
 all pairs run and the medians differ by more than the parent's
 interquartile range. It only invokes perfbench/run.py; it writes nothing in either
 checkout beyond what that script writes.
+
+Exit status: 0 when every run succeeded, the output digests are equal at
+every seed and no metric is worse than its bound; 1 otherwise, so the
+script can gate another one.
 """
 import argparse
 import json
@@ -107,6 +111,7 @@ def main():
         args.workload, len(runs), len(good), fails["parent"], fails["change"]))
     if not good:
         return 1
+    over_bound = []
     print("%-15s %-6s %27s %27s %5s %7s %6s %s" % (
         "metric", "unit", "parent q1 / median / q3", "change q1 / median / q3",
         "wins", "ratio", "bound", "verdict"))
@@ -122,6 +127,7 @@ def main():
             verdict = "gain"
         elif worse > m["bound"]:
             verdict = "WORSE than bound"
+            over_bound.append(name)
         else:
             verdict = "within bound"
         print("%-15s %-6s %8.4g / %8.4g / %8.4g %8.4g / %8.4g / %8.4g %2d/%-2d %7.3f %6.2f %s" % (
@@ -132,7 +138,7 @@ def main():
 
     same = all(digest(p["parent"]) == digest(p["change"]) for p in good)
     print("output digest equal at every seed: %s" % ("yes" if same else "NO"))
-    return 0
+    return 1 if any(fails.values()) or not same or over_bound else 0
 
 
 if __name__ == "__main__":
