@@ -617,7 +617,7 @@ object Pipelines {
   def metaAnalysis(platforms0: Seq[(String, ExpressionMatrix)], groups: DataFrame,
       groupA: String, groupB: String): DataFrame = {
     // Stage boundary: each platform matrix is hit by many actions
-    // below (ICC standardize collects + treeAggregates, the per-
+    // below (the ICC sample-id collect and gene-keyed pass, the per-
     // platform DE) — materialize once so upstream lineage doesn't
     // re-execute per action. The platforms are INDEPENDENT, so their
     // eager work (checkpoint materialization here, the eBayes moment
@@ -633,9 +633,9 @@ object Pipelines {
       name -> ExpressionMatrix(
         Workspace.stageCheckpoint(m.canonical.df, s"meta_platform_$name"))
     }
-    // ICC per platform pair (standardized once per platform, reused
-    // across pairs) -> mean per gene; genes with negative mean ICC are
-    // dropped (Meta_analysis.R:620-645)
+    // ICC per platform pair (every pair from one gene-keyed pass) ->
+    // mean per gene; genes with negative mean ICC are dropped
+    // (Meta_analysis.R:620-645)
     val iccPairs = Meta.iccMulti(platforms).select("gene_id", "icc")
     val meanIcc = Meta.meanIcc(iccPairs).filter(col("mean_icc") >= 0)
 

@@ -217,7 +217,7 @@ object Plans {
     "q24_ks" ->
       "KS ECDF: __pid-keyed cumulative sums + the __pid-grain stitch (one row per shuffle partition); value axis is data-grain but range-partitioned first",
     "q47_perm_fdr" ->
-      "n_ge_obs count over the (gene, perm) stat relation — gene x nperm rows, both contract-bounded; per-perm label ranks are sample-grain",
+      "n_ge_obs rank and gene count over the observed per-gene |z| relation — gene-grain (one row per gene), contract-bounded",
     "q91_packing_manifest" ->
       "token-packing prefix sums: __pid-keyed local sums + the one-row-per-pid stitch window",
     "q102_shard_manifest" ->
@@ -272,8 +272,6 @@ object Plans {
     * right. Corpus-axis tables (lineitem, documents, embeddings)
     * never get whitelisted. */
   private val intendedBroadcast = Map(
-    "q47_perm_fdr" ->
-      "sample×perm label relation (supplier scan × Range(nperm)) — samples contract-bounded, nperm fixture-bounded",
     "q81_e1_blocked" ->
       "supplier-derived group/replicate metadata on the build side — the sample axis, ≤ hundreds of rows in every reference config",
     "q141_quality_cluster_amortized" ->
@@ -290,8 +288,6 @@ object Plans {
       "q169's containment join with the compacted generation read from its h-bucketed at-rest table — the bucketed scan arrives pre-partitioned and SMJ reuses the layout's sort order (bucketed_winnow_demo measures the exchange saving); both sides corpus-grain, AQE demotes when small",
     "q172_neardup_compact_amortized" ->
       "q170's candidate/verify joins with the compacted generation read from its band/shingle-bucketed at-rest tables — SMJ rides the bucketed layout (bucketed_neardup_demo measures the exchange saving); both sides corpus-grain, AQE demotes when small",
-    "q47_perm_fdr" ->
-      "per-(gene,perm) stat join against observed stats — both sides gene-grain",
     "q60_nuse" ->
       "SE relation joined with its probeset-grain median — AQE broadcasts when small",
     "q64_cqn" ->

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.model.ExpressionMatrix
+import graft.model.{ExpressionMatrix, RelCache}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -134,13 +134,13 @@ object Batch {
     * row-level standardized mean added back at the end. */
   private def combatCore(standardized: DataFrame, iterations: Int,
       parametric: Boolean, nonparametricGeneCap: Int): ExpressionMatrix = {
-    val z = standardized
-      .select("gene_id", "sample_id", "batch", "__center", "sigma2", "z")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val gb = z.groupBy("gene_id", "batch")
+    // each chain runs ComBat once and stage-checkpoints its output, so
+    // one live relation per slot (keep = 1) is enough
+    val z = RelCache.hold("batch.combat.z", standardized
+      .select("gene_id", "sample_id", "batch", "__center", "sigma2", "z"))
+    val gb = RelCache.hold("batch.combat.gb", z.groupBy("gene_id", "batch")
       .agg(count(lit(1)).as("n_b"), avg("z").as("gamma_hat"), var_samp("z").as("delta2_hat"))
-      .filter(col("delta2_hat").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("delta2_hat").isNotNull))
     val post =
       if (parametric) parametricPosterior(gb, iterations)
       else nonparametricPosterior(z, gb, nonparametricGeneCap)

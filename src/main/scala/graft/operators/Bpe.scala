@@ -291,11 +291,11 @@ object Bpe {
   }
 
   /** Distributed one-pass ENCODE with a trained merge table — the
-    * production counterpart of [[segment]] (which replays each merge
-    * as a separate round of Spark jobs: fine for the 12-merge gate,
+    * production form of the relational segmentation (which replays each
+    * merge as a separate round of Spark jobs: fine for the 12-merge gate,
     * ~10⁵ sequential jobs at a real vocabulary). Each word is encoded
     * independently in one partition-local pass: merges apply in
-    * TRAINING ORDER via the same greedy fold as [[segment]]
+    * TRAINING ORDER via the same greedy fold as the relational form
     * (PropertySpec gates both against the sequential reference), with
     * an adjacent-pair set per word so the nMerges-long table costs one
     * O(1) membership check per merge, not a scan. The merge table
@@ -335,40 +335,5 @@ object Bpe {
         s.iterator.zipWithIndex.map { case (sym, pos) => (w, pos, sym) }
       }
     }.toDF("word", "pos", "sym")
-  }
-
-  /** Segment words with a trained merge table (the ENCODE side):
-    * applies the merges in training order to the (word, freq) symbol
-    * relation and returns the final (word, pos, sym) segmentation —
-    * the subword decomposition a tokenizer built on this vocabulary
-    * would emit. Merge list is bounded (driver-side), application is
-    * the same window algebra as training. */
-  def segment(wf: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    var s = initialSymbols(wf.select(col("word"), lit(1L).as("freq")))
-      .localCheckpoint(true)
-    merges.foreach { case (a, b) =>
-      val w = Window.partitionBy("word").orderBy("pos")
-      val keep = s.withColumn("nxt", lead(col("sym"), 1).over(w))
-        .filter(col("sym") === a && col("nxt") === b)
-        .withColumn("mrank", row_number().over(w))
-        .withColumn("island", col("pos") - col("mrank"))
-        .withColumn("imin",
-          min("pos").over(Window.partitionBy("word", "island")))
-        .filter(((col("pos") - col("imin")) % 2) === 0)
-        .select(col("word"), col("pos"))
-      val dropped = s.join(
-        keep.select(col("word"), (col("pos") + 1).as("pos")),
-        Seq("word", "pos"), "left_anti")
-      val prev = s
-      s = dropped
-        .join(keep.withColumn("hit", lit(true)), Seq("word", "pos"), "left")
-        .withColumn("sym", when(col("hit"), lit(a + b)).otherwise(col("sym")))
-        .withColumn("pos", row_number().over(
-          Window.partitionBy("word").orderBy("pos")) - 1)
-        .select("word", "freq", "pos", "sym")
-        .localCheckpoint(true)
-      prev.unpersist(blocking = false)
-    }
-    s.select("word", "pos", "sym")
   }
 }

@@ -561,7 +561,7 @@ object DiffExpr {
     * minimum of candidates from the current row to the largest p,
     * capped at 1. `n` is the test count per partition (a window count
     * or a driver literal). */
-  private def bhWindow(df: DataFrame, p: String, partCols: Seq[Column],
+  private[graft] def bhWindow(df: DataFrame, p: String, partCols: Seq[Column],
       tiebreak: Seq[Column], n: Column, out: String): DataFrame = {
     val wRank = Window.partitionBy(partCols: _*)
       .orderBy(col(p).asc +: tiebreak.map(_.asc): _*)
@@ -582,19 +582,13 @@ object DiffExpr {
       .drop("__n", "__rk")
   }
 
-  /** W5/A13 — Benjamini–Hochberg adjustment as one global window
-    * program ([[bhWindow]]). Identical to R `p.adjust(method="BH")`.
-    *
-    * The global window is over one row per test — at scale, p-value
-    * relations are ≤ genes × contrasts, far below data volume. */
-  def bhAdjust(df: DataFrame, p: String, tiebreak: Seq[Column], out: String = "p_bh"): DataFrame =
-    bhWindow(df, p, Nil, tiebreak, count(lit(1)).over(Window.partitionBy()), out)
-
   /** W5/A13 at data scale — BH without the single-partition global
-    * window of [[bhAdjust]]: range-partition on the ranking key, take
+    * window of [[bhWindow]] over the whole relation: range-partition on
+    * the ranking key, take
     * local ranks and reverse running-mins per partition, and stitch
     * with per-partition offsets (windows over ≤ #partitions rows).
-    * Numerically identical to [[bhAdjust]] — same p·n/rank candidates,
+    * Numerically identical to that global window, and so to R
+    * `p.adjust(method="BH")` — same p·n/rank candidates,
     * same running min — so use this whenever the p-value relation is
     * data-sized rather than gene-sized. Equal (p, tiebreak) keys land
     * in one range partition, so ranks stitch exactly. */
@@ -660,8 +654,8 @@ object DiffExpr {
   }
 
   /** W5/A13 — BH within groups (limma `decideTests(method="separate")`
-    * adjusts each contrast's p column independently): the [[bhAdjust]]
-    * window program with every window additionally partitioned by
+    * adjusts each contrast's p column independently): the [[bhWindow]]
+    * program with every window additionally partitioned by
     * `partCols`. Each partition holds one test set (≤ genes rows per
     * contrast), so the windows are gene-grain bounded — the shape the
     * multi-contrast chain needs at scale. */
@@ -681,7 +675,7 @@ object DiffExpr {
     * `sort.by="p"`, `DiffExpression_closedPlatform.R:600`).
     *
     * BH runs through [[bhAdjustScalable]] (numerically identical to
-    * [[bhAdjust]], proven by spec) so the one operator users point
+    * the global [[bhWindow]], proven by spec) so the one operator users point
     * data-sized p-relations at never hits a single-partition global
     * window. */
   def topTable(de: DataFrame, p: String = "p", gene: String = "gene_id"): DataFrame =

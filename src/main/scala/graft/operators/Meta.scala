@@ -1,9 +1,16 @@
 package graft.operators
 
-import graft.functions.StatFunctions
-import graft.model.ExpressionMatrix
-import org.apache.spark.sql.{DataFrame, Dataset}
+import java.nio.charset.StandardCharsets
+
+import graft.functions.{IccVectors, PermFdrStats, StatFunctions}
+import graft.model.{ExpressionMatrix, RelCache}
+import org.apache.commons.codec.digest.DigestUtils
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Meta-analysis operators — SURVEY.md §2.4 A20–A25, A30.
   *
@@ -130,179 +137,171 @@ object Meta {
   def icc(m1: ExpressionMatrix, m2: ExpressionMatrix): DataFrame =
     iccMulti(Seq("p1" -> m1, "p2" -> m2)).select("gene_id", "icc")
 
-  /** One sample-row tile of an [[iccMulti]] cross-product matrix and,
-    * in a gramian's first pass, its s-vector and row count. */
+  /** One row tile of the upper block triangle of the gramian of the
+    * concatenated per-platform vectors — every X_iᵀX_j with i ≤ j — as
+    * rows: a row of platform i holds the columns from platform i's
+    * offset on. In the first tile's pass, also Σ_g of the vectors and
+    * the gene count. */
   private final case class OuterSums(m: Array[Array[Double]], s: Array[Double]) {
     var rows = 0L
   }
 
-  /** A20 for all platform pairs, standardizing each platform ONCE
-    * (`Meta_analysis.R:331` reuses the intermediate across pairs).
-    * Returns (p1, p2, gene_id, icc) for every unordered pair. */
+  /** A20 for all platform pairs in gene-keyed passes
+    * (`Meta_analysis.R:331` standardizes each platform once and reuses
+    * it across pairs). Returns (p1, p2, gene_id, icc) for every
+    * unordered pair, in input order.
+    *
+    * One pass-shaped plan for any number of platforms:
+    *  - one collect of every platform's sample ids (per-partition
+    *    distinct, no shuffle) fixes each platform's dense universe;
+    *  - one gene-keyed aggregation over all platforms feeds the native
+    *    [[IccVectors]] kernel: a common gene's standardized vectors,
+    *    concatenated (genes missing from a platform drop out), held
+    *    under `meta.iccmulti.vectors`;
+    *  - one `treeAggregate` accumulates, for the concatenated vector z,
+    *    the upper block triangle of ZᵀZ — every platform's gramian and
+    *    every pair's cross product — plus the s-vector and gene count;
+    *  - one per-gene map evaluates every pair's quadratic forms
+    *    against the broadcast sums.
+    *
+    * The gramian accumulates in row TILES: each pass holds at most
+    * `spark.graft.icc.tileBytes` (default 64 MiB) of accumulator rows
+    * per task, at least one row, so a cohort beyond the per-task
+    * memory envelope costs more passes over the held vectors instead
+    * of an OOM. At reference cohort scale one tile covers every row.
+    * Each entry sees the same per-partition gene sequence and combine
+    * topology under any tiling, so tilings agree bit for bit; the
+    * s-vector and gene count ride in the first pass. */
   def iccMulti(platforms: Seq[(String, ExpressionMatrix)]): DataFrame = {
     val spark = platforms.head._2.df.sparkSession
     import spark.implicits._
 
-    // genes present on every platform (MergeMaid intersects)
-    val genes = platforms.map { case (_, m) =>
-      m.canonical.df.select(col("gene_id")).distinct()
-    }.reduce((a, b) => a.join(b, Seq("gene_id"), "left_semi"))
-
-    // per-platform standardized dense per-gene vectors over the
-    // platform's own sample universe (missing cells = 0 before
-    // centering — the dense-matrix semantics of the reference),
-    // with the platform's sample count: one collect of its sample ids
-    def standardize(m: ExpressionMatrix): (Dataset[(String, Array[Double])], Int) = {
-      val sampleIds = m.canonical.df.select(col("sample_id")).distinct()
-        .orderBy("sample_id").collect().map(_.getString(0))
-      val bc = spark.sparkContext.broadcast(sampleIds.zipWithIndex.toMap)
-      val v = m.canonical.df.join(genes, Seq("gene_id"), "left_semi")
-        .select(col("gene_id"), col("sample_id"), col("value"))
-        .as[(String, String, Double)]
-        .groupByKey(_._1)
-        .mapGroups { (g, it) =>
-          val arr = new Array[Double](bc.value.size)
-          it.foreach { case (_, s, v) => arr(bc.value(s)) = v }
-          val mean = arr.sum / arr.length
-          var ss = 0.0
-          var i = 0
-          while (i < arr.length) { arr(i) -= mean; ss += arr(i) * arr(i); i += 1 }
-          val norm = math.sqrt(ss)
-          if (norm > 0) { i = 0; while (i < arr.length) { arr(i) /= norm; i += 1 } }
-          (g, arr)
-        }
-      (v, sampleIds.length)
+    val cells = platforms.zipWithIndex.map { case ((_, m), k) =>
+      m.canonical.df.select(lit(k).as("p"), col("gene_id"),
+        col("sample_id").cast("string").as("sample_id"), col("value").cast("double").as("value"))
+    }.reduce(_ unionByName _)
+    // each platform's sample universe in Spark's string order
+    val ids = cells.select(col("p"), col("sample_id")).as[(Int, String)]
+      .mapPartitions(_.toSet.iterator).collect().distinct
+    val samples = platforms.indices.map { k =>
+      ids.collect { case (`k`, s) => s }.toSeq.sortWith(sparkStringLt)
     }
+    val offsets = samples.scanLeft(0)(_ + _.size).toIndexedSeq
+    val width = offsets.last
+    val vectors = RelCache.hold("meta.iccmulti.vectors", cells.groupBy(col("gene_id"))
+      .agg(IccVectors.icc_vectors(
+        collect_list(struct(col("p"), col("sample_id"), col("value"))), samples).as("z"))
+      .filter(col("z").isNotNull))
+    val zs = vectors.select(col("z")).as[Array[Double]].rdd
 
-    // The gramian accumulates in SAMPLE-ROW TILES: each treeAggregate
-    // pass holds only tileRows × nCols doubles per task, so a cohort
-    // beyond the per-task memory envelope degrades to MORE PASSES over
-    // the persisted vectors instead of an OOM (the round-4 10× probe
-    // measured exactly that failure). Tile size is governed by
-    // spark.graft.icc.tileBytes (default 64 MiB); at reference cohort
-    // scale one tile covers every row, so the plan (and the q46 hash)
-    // is unchanged. Per-entry float accumulation order is identical
-    // across tilings — each entry sees the same per-partition gene
-    // sequence and the same combine topology. With `sums`, the first
-    // pass also accumulates the s-vector Σ_g x_g and the row count in
-    // the same seqOp and combine, so they cost no pass of their own.
+    // row r belongs to the platform whose offset range holds it, and
+    // its columns start at that platform's offset
+    val rowStart = Array.tabulate(width)(r => offsets(offsets.lastIndexWhere(_ <= r)))
     val tileBytes = spark.conf.getOption("spark.graft.icc.tileBytes")
       .map(_.toLong).getOrElse(64L * 1024 * 1024)
-    def outerAgg(ds: Dataset[(Array[Double], Array[Double])],
-        nRows: Int, nCols: Int, sums: Boolean = false): OuterSums = {
-      val tileRows = math.max(1, (tileBytes / 8 / math.max(1, nCols)).toInt)
-      val rdd = ds.rdd
-      val out = OuterSums(new Array[Array[Double]](nRows),
-        if (sums) new Array[Double](nRows) else null)
-      var r0 = 0
-      while (r0 < nRows) {
-        val r1 = math.min(nRows, r0 + tileRows)
-        val lo = r0
-        val hi = r1
-        val withSums = sums && lo == 0
-        val part = rdd.treeAggregate(null: OuterSums)(
-          (acc, xy) => {
-            val (x, y2) = xy
-            val a = if (acc != null) acc else OuterSums(Array.ofDim[Double](hi - lo, y2.length),
-              if (withSums) new Array[Double](x.length) else null)
-            val m = a.m
-            var i = lo
-            while (i < hi) {
-              if (x(i) != 0.0) {
-                val row = m(i - lo)
-                var j = 0
-                while (j < y2.length) { row(j) += x(i) * y2(j); j += 1 }
-              }
-              i += 1
+    // with no common gene nothing below reads the sums
+    val gram = new Array[Array[Double]](width)
+    var colSums: Array[Double] = null
+    var nGenes = 0L
+    var r0 = 0
+    while (r0 < width) {
+      var r1 = r0 + 1
+      var bytes = 8L * (width - rowStart(r0))
+      while (r1 < width && bytes + 8L * (width - rowStart(r1)) <= tileBytes) {
+        bytes += 8L * (width - rowStart(r1)); r1 += 1
+      }
+      val lo = r0
+      val hi = r1
+      val withSums = lo == 0
+      val part = zs.treeAggregate(null: OuterSums)(
+        (acc, z) => {
+          val a = if (acc != null) acc else OuterSums(
+            Array.tabulate(hi - lo)(i => new Array[Double](width - rowStart(lo + i))),
+            if (withSums) new Array[Double](width) else null)
+          var i = lo
+          while (i < hi) {
+            if (z(i) != 0.0) {
+              val row = a.m(i - lo)
+              val c0 = rowStart(i)
+              var j = 0
+              while (j < row.length) { row(j) += z(i) * z(c0 + j); j += 1 }
             }
+            i += 1
+          }
+          if (withSums) {
+            i = 0; while (i < width) { a.s(i) += z(i); i += 1 }
+            a.rows += 1
+          }
+          a
+        },
+        (a, b) =>
+          if (a == null) b else if (b == null) a
+          else {
+            for (i <- a.m.indices; j <- a.m(i).indices) a.m(i)(j) += b.m(i)(j)
             if (withSums) {
-              i = 0; while (i < x.length) { a.s(i) += x(i); i += 1 }
-              a.rows += 1
+              var i = 0; while (i < width) { a.s(i) += b.s(i); i += 1 }
+              a.rows += b.rows
             }
             a
-          },
-          (a, b) =>
-            if (a == null) b else if (b == null) a
-            else {
-              for (i <- a.m.indices; j <- a.m(i).indices) a.m(i)(j) += b.m(i)(j)
-              if (withSums) {
-                var i = 0; while (i < a.s.length) { a.s(i) += b.s(i); i += 1 }
-                a.rows += b.rows
-              }
-              a
-            })
-        var i = lo
-        while (i < hi) {
-          out.m(i) = if (part == null) new Array[Double](nCols) else part.m(i - lo)
-          i += 1
-        }
-        if (withSums && part != null) {
-          System.arraycopy(part.s, 0, out.s, 0, nRows)
-          out.rows = part.rows
-        }
-        r0 = r1
+          })
+      if (part != null) {
+        System.arraycopy(part.m, 0, gram, lo, hi - lo)
+        if (withSums) { colSums = part.s; nGenes = part.rows }
       }
-      out
+      r0 = r1
     }
 
-    val (std, counts) = platforms.map { case (name, m) =>
-      val (v, n) = standardize(m)
-      (name -> v.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), name -> n)
-    }.unzip
-    val sizes = counts.toMap
-    // one pass per platform: gramian, s-vector and gene count
-    val moments = std.map { case (name, v) =>
-      name -> outerAgg(v.map(t => (t._2, t._2)), sizes(name), sizes(name), sums = true)
-    }.toMap
-
-    def qf(x: Array[Double], mat: Array[Array[Double]], y2: Array[Double]): Double = {
+    // x_aᵀ·M·x_b over platform a's rows and platform b's columns
+    // (a ≤ b) of the block triangle
+    def qf(z: Array[Double], m: Array[Array[Double]], a: Int, b: Int): Double = {
+      val (c0, zb, nb) = (offsets(b) - offsets(a), offsets(b), offsets(b + 1) - offsets(b))
       var acc = 0.0
-      var i = 0
-      while (i < x.length) {
-        if (x(i) != 0.0) {
-          val row = mat(i)
+      var i = offsets(a)
+      while (i < offsets(a + 1)) {
+        if (z(i) != 0.0) {
+          val row = m(i)
           var inner = 0.0
           var j = 0
-          while (j < y2.length) { inner += row(j) * y2(j); j += 1 }
-          acc += x(i) * inner
+          while (j < nb) { inner += row(c0 + j) * z(zb + j); j += 1 }
+          acc += z(i) * inner
         }
         i += 1
       }
       acc
     }
-    def dot(x: Array[Double], y2: Array[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < x.length) { acc += x(i) * y2(i); i += 1 }
+    def dot(x: Array[Double], y: Array[Double], k: Int): Double = {
+      var acc = 0.0; var i = offsets(k)
+      while (i < offsets(k + 1)) { acc += x(i) * y(i); i += 1 }
       acc
     }
 
-    // every platform holds exactly the common genes
-    val nGenes = moments(std.head._1).rows
-    std.combinations(2).map { case Seq((n1, v1), (n2, v2)) =>
-      val joined = v1.joinWith(v2, v1("_1") === v2("_1"))
-        .map { case ((g, x1), (_, x2)) => (g, x1, x2) }
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val cross = outerAgg(joined.map(t => (t._2, t._3)), sizes(n1), sizes(n2)).m
-      val bcAll = spark.sparkContext.broadcast(
-        (moments(n1).m, moments(n2).m, cross, moments(n1).s, moments(n2).s, nGenes))
-      joined.map { case (g, x1, x2) =>
-        val (g11, g22, c, s1, s2, gCount) = bcAll.value
-        val n = (gCount - 1).toDouble
-        val r11 = dot(x1, x1) // 1 for standardized, 0 for zero-variance
-        val r22 = dot(x2, x2)
-        val sa = dot(x1, s1) - r11
-        val sb = dot(x2, s2) - r22
-        val saa = qf(x1, g11, x1) - r11 * r11
-        val sbb = qf(x2, g22, x2) - r22 * r22
-        val sab = qf(x1, c, x2) - r11 * r22
+    val names = platforms.map(_._1)
+    val pairs = platforms.indices.combinations(2).map { case Seq(a, b) => (a, b) }.toSeq
+    val bc = spark.sparkContext.broadcast((gram, colSums, nGenes))
+    vectors.select(col("gene_id"), col("z")).as[(String, Array[Double])].flatMap { case (g, z) =>
+      val (m, s, gCount) = bc.value
+      val n = (gCount - 1).toDouble
+      pairs.map { case (a, b) =>
+        val r11 = dot(z, z, a) // 1 for standardized, 0 for zero-variance
+        val r22 = dot(z, z, b)
+        val sa = dot(z, s, a) - r11
+        val sb = dot(z, s, b) - r22
+        val saa = qf(z, m, a, a) - r11 * r11
+        val sbb = qf(z, m, b, b) - r22 * r22
+        val sab = qf(z, m, a, b) - r11 * r22
         val cov = sab - sa * sb / n
         val va = saa - sa * sa / n
         val vb = sbb - sb * sb / n
         val icc = if (va > 0 && vb > 0) cov / math.sqrt(va * vb) else Double.NaN
-        (n1, n2, g, icc)
-      }.toDF("p1", "p2", "gene_id", "icc")
-    }.reduce(_ unionByName _)
+        (names(a), names(b), g, icc)
+      }
+    }.toDF("p1", "p2", "gene_id", "icc")
   }
+
+  /** Spark's string order (UTF-8 bytes, unsigned), nulls first. */
+  private def sparkStringLt(a: String, b: String): Boolean =
+    if (a == null) b != null
+    else b != null && UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
 
   /** A21 — study-specific per-gene logistic regression
     * (`Meta_analysis.R:581-598`, modelOutcome): for each gene, fit
@@ -356,57 +355,58 @@ object Meta {
   }
 
   /** A23 — permutation FDR (`Meta_analysis.R:896-991`): observed
-    * per-gene effect |z| vs the pooled null distribution from `nperm`
-    * deterministic label permutations. FDR(gene) = (mean permuted
-    * exceedance count) / (observed count at that threshold), the
-    * zScoreFDR estimator shape. One explode fan-out, aggregations
-    * only. */
+    * per-gene two-group |z| against `nperm` deterministic label
+    * permutations. For each gene, e_null is the fraction of the
+    * permutations whose |z| for that gene reaches the observed |z|, and
+    * FDR(gene) = min(1, e_null · nGenes / #{genes with |z| ≥ the
+    * observed |z|}), the zScoreFDR estimator shape.
+    *
+    * The permutations are [[permutedLabels]] of the whole `groups`
+    * relation, computed on the driver from one collect. One
+    * `groupBy(gene_id)` then feeds the native [[PermFdrStats]] kernel,
+    * which scores the observed assignment and every permutation per
+    * gene (no gene × nperm rows), and one gene-grain window ranks the
+    * observed |z| and counts the genes.
+    *
+    * A gene enters when both observed groups have more than one cell,
+    * and is reported when some permutation also does. A zero-variance
+    * gene (constant, or constant within each group) has a null |z| and
+    * a null FDR; a null permuted |z| never counts as an exceedance. */
   def permutationFdr(m: ExpressionMatrix, groups: DataFrame, groupA: String,
       groupB: String, nperm: Int = 50, md5Hashes: Boolean = false): DataFrame = {
-    def zOf(stats: DataFrame, extraKey: Seq[String]): DataFrame = {
-      val keys = (Seq("gene_id") ++ extraKey).map(col)
-      stats.groupBy(keys: _*)
-        .agg(max(when(col("group") === groupA, col("mean"))).as("ma"),
-             max(when(col("group") === groupB, col("mean"))).as("mb"),
-             max(when(col("group") === groupA, col("var"))).as("va"),
-             max(when(col("group") === groupB, col("var"))).as("vb"),
-             max(when(col("group") === groupA, col("n"))).as("na"),
-             max(when(col("group") === groupB, col("n"))).as("nb"))
-        .filter(col("na") > 1 && col("nb") > 1)
-        .withColumn("z", (col("ma") - col("mb")) /
-          sqrt(col("va") / col("na") + col("vb") / col("nb")))
+    val rows = groups.select(col("sample_id").cast("string"), col("group").cast("string"))
+      .collect().map(r => (r.getString(0), r.getString(1))).toIndexedSeq
+    val samples = rows.map(_._1).filter(_ != null).distinct.sortWith(sparkStringLt)
+    val index = samples.zipWithIndex.toMap
+    val labelsA = new Array[Int]((nperm + 1) * samples.size)
+    val labelsB = new Array[Int](labelsA.length)
+    def assign(p: Int, sample: String, label: String): Unit =
+      if (sample != null) {
+        val i = p * samples.size + index(sample)
+        if (label == groupA) labelsA(i) += 1
+        if (label == groupB) labelsB(i) += 1
+      }
+    rows.foreach { case (s, g) => assign(0, s, g) }
+    permutedLabels(rows, nperm, md5Hashes).zipWithIndex.foreach { case (perm, p) =>
+      perm.foreach { case (s, g) => assign(p + 1, s, g) }
     }
-    val obsStats = m.canonical.df.join(broadcast(groups), Seq("sample_id"))
-      .groupBy("gene_id", "group")
-      .agg(count(lit(1)).as("n"), avg("value").as("mean"), var_samp("value").as("var"))
-    // obs is gene-sized and consumed by three actions below (the
-    // count, the exceedance join, and the ranked final join) —
-    // materialize it once so the matrix aggregation doesn't
-    // re-execute per consumer.
-    val obs = zOf(obsStats, Nil).select(col("gene_id"), abs(col("z")).as("z_obs"))
-      .localCheckpoint(true)
 
-    val permLabels = permutationLabels(groups.select(col("sample_id"), col("group")),
-      "sample_id", "group", nperm, md5Hashes)
-    val permStats = m.canonical.df
-      .join(permLabels.withColumnRenamed("perm_label", "group"), Seq("sample_id"))
-      .groupBy(col("gene_id"), col("perm"), col("group"))
-      .agg(count(lit(1)).as("n"), avg("value").as("mean"), var_samp("value").as("var"))
-    val permZ = zOf(permStats, Seq("perm")).select(col("gene_id"), abs(col("z")).as("z_perm"))
-
-    // pooled-null FDR: for each observed |z|, fraction of the pooled
-    // permuted |z| that exceed it, scaled by observed exceedance
-    val nGenes = obs.count().toDouble
-    val exceed = obs.join(permZ, Seq("gene_id"))
-      .groupBy(col("gene_id"), col("z_obs"))
-      .agg((sum((col("z_perm") >= col("z_obs")).cast("int")) / nperm.toDouble).as("e_null"))
-      .select(col("gene_id"), col("e_null"))
-    val obsRank = obs.withColumn("n_ge_obs",
-      count(lit(1)).over(org.apache.spark.sql.expressions.Window
-        .orderBy(col("z_obs").desc)
-        .rangeBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-    obsRank.join(exceed, Seq("gene_id"))
-      .withColumn("fdr", least(lit(1.0), col("e_null") * nGenes / col("n_ge_obs")))
+    val stats = m.canonical.df.groupBy(col("gene_id"))
+      .agg(PermFdrStats.perm_fdr_stats(
+        collect_list(struct(col("sample_id").cast("string"), col("value").cast("double"))),
+        samples, labelsA.toSeq, labelsB.toSeq, nperm).as("__s"))
+      .filter(col("__s").isNotNull)
+      .select(col("gene_id"), col("__s.z_obs").as("z_obs"), col("__s.n_perm").as("__np"),
+        col("__s.n_exceed").as("__ne"))
+    val byZ = Window.orderBy(col("z_obs").desc)
+    stats
+      .withColumn("n_ge_obs", count(lit(1)).over(
+        byZ.rangeBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("__ng", count(lit(1)).over(
+        byZ.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .filter(col("__np") > 0)
+      .withColumn("fdr", when(col("z_obs").isNotNull, least(lit(1.0),
+        col("__ne") / nperm.toDouble * col("__ng").cast("double") / col("n_ge_obs"))))
       .select("gene_id", "z_obs", "fdr")
   }
 
@@ -448,33 +448,32 @@ object Meta {
       .agg(sum((abs(col(zComb)) >= col("t") && abs(col(zMaxSingle)) < col("t")).cast("int"))
         .as("idr_count"))
 
-  /** A23 — permutation FDR (`Meta_analysis.R:896-991`, nperm=50 with
-    * fixed seeds): fan 50 deterministic label permutations out with
-    * explode, recompute the combined z per (gene, perm), and report
-    * the exceedance rate against the observed z. The permutation is a
-    * deterministic pseudo-shuffle: labels reassigned by
-    * xxhash64(sample, seed) rank — reproducible across runs/cluster
-    * sizes, no RNG state. */
-  def permutationLabels(samples: DataFrame, sample: String, label: String,
-      nperm: Int, md5Hashes: Boolean = false): DataFrame = {
-    val perms = samples.crossJoin(broadcast(
-      samples.sparkSession.range(1, nperm + 1).select(col("id").cast("int").as("perm"))))
-    // rank samples by deterministic hash within perm; assign the sorted
-    // label multiset by that rank => a seeded permutation of labels.
-    // md5 is the engine-portable hash family (oracle SQL reproduces
-    // it); xxhash64 is the production path.
-    val hashExpr =
-      if (md5Hashes) md5(concat_ws("#", col("perm").cast("string"), col(sample)))
-      else xxhash64(col(sample), col("perm"))
-    val wHash = org.apache.spark.sql.expressions.Window.partitionBy(col("perm"))
-      .orderBy(hashExpr.asc, col(sample).asc)
-    val wLabel = org.apache.spark.sql.expressions.Window.partitionBy(col("perm"))
-      .orderBy(col(label).asc, col(sample).asc)
-    val ranked = perms.withColumn("__hrk", row_number().over(wHash))
-    val labelByRank = perms.withColumn("__lrk", row_number().over(wLabel))
-      .select(col("perm").as("__perm2"), col("__lrk"), col(label).as("perm_label"))
-    ranked.join(labelByRank,
-        ranked("perm") === labelByRank("__perm2") && ranked("__hrk") === labelByRank("__lrk"))
-      .select(col(sample), col("perm"), col("perm_label"))
+  /** A23's label permutations (`Meta_analysis.R:896-991`, nperm = 50
+    * with fixed seeds): for each of perms 1..nperm, the (sample, label)
+    * rows of `rows` with the labels reassigned by a deterministic
+    * pseudo-shuffle — reproducible across runs and cluster sizes, no
+    * RNG state. Within a perm, rows ranked by (hash, sample) take the
+    * labels ranked by (label, sample), rank for rank, so each perm
+    * permutes the label multiset. The hash is xxhash64(sample, perm),
+    * or with `md5Hashes` md5("<perm>#<sample>"), the engine-portable
+    * family an oracle can replay. Orders are Spark's: strings by UTF-8
+    * bytes, nulls first. */
+  private[graft] def permutedLabels(rows: IndexedSeq[(String, String)], nperm: Int,
+      md5Hashes: Boolean): IndexedSeq[IndexedSeq[(String, String)]] = {
+    def lt(a: (String, String), b: (String, String)): Boolean =
+      if (a._1 == b._1) sparkStringLt(a._2, b._2) else sparkStringLt(a._1, b._1)
+    val labels = rows.map(_.swap).sortWith(lt).map(_._1)
+    (1 to nperm).map { p =>
+      val byHash =
+        if (md5Hashes) rows.map { case (s, _) =>
+          // concat_ws skips a null sample
+          val key = if (s == null) p.toString else s"$p#$s"
+          (DigestUtils.md5Hex(key.getBytes(StandardCharsets.UTF_8)), s)
+        }.sortWith(lt)
+        else rows.map { case (s, _) =>
+          (new XxHash64(Seq(Literal.create(s, StringType), Literal(p))).eval().asInstanceOf[Long], s)
+        }.sortWith { case ((x, a), (y, b)) => if (x != y) x < y else sparkStringLt(a, b) }
+      byHash.map(_._2).zip(labels)
+    }
   }
 }

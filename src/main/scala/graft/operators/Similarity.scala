@@ -136,7 +136,7 @@ object Similarity {
     require(costed.nonEmpty,
       s"no band family within $maxSketchBits sketch bits reaches recall " +
         s"$targetRecall at threshold $threshold — this regime does not admit " +
-        s"sub-quadratic banding; use embeddingDupPairsExact on a bounded relation")
+        s"sub-quadratic banding; use the exact cosinePairs on a bounded relation")
     val (b, l, _) = costed.minBy(_._3)
     (b, l)
   }

@@ -1460,19 +1460,12 @@ object TextDedup {
     * degrading as the threshold approaches the background cosine
     * distribution (where NO sub-quadratic method can be exact). The
     * default 16 bands × 2 bits are sized for recall down to θ ≈ 0.4.
-    * [[embeddingDupPairsExact]] is the all-pairs form, kept only as
-    * the bounded verify stage for tests and small candidate sets. */
+    * The all-pairs exact form, [[Similarity.cosinePairs]] filtered at
+    * the threshold, is for bounded relations only. */
   def embeddingDupPairs(embeddings: DataFrame, threshold: Double, dim: Int = 64,
       bitsPerBand: Int = 2, nBands: Int = 16,
       id: String = "vec_id", vec: String = "embedding"): DataFrame =
     embeddingDupPairsLsh(embeddings, threshold, dim, bitsPerBand, nBands, id, vec)
-
-  /** All-pairs exact form of [[embeddingDupPairs]], via
-    * [[Similarity.cosinePairs]]. Quadratic — bounded relations only
-    * (the recall-gate spec and small within-bucket verifies). */
-  def embeddingDupPairsExact(embeddings: DataFrame, threshold: Double,
-      id: String = "vec_id", vec: String = "embedding"): DataFrame =
-    Similarity.cosinePairs(embeddings, id, vec).filter(col("cosine") >= threshold)
 
   /** The Gopher stop-word set (Rae 2021 §A1.1): the rule requires at
     * least 2 DISTINCT of these 8 English words, not a total

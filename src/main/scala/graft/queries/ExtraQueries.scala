@@ -1093,9 +1093,9 @@ object ExtraQueries {
     // IndexedRow vectors do) and takes corr of correlation vectors. ----
     "q46_icc" -> ((s, dir) => {
       val li = t(s, dir, "lineitem").filter(col("l_partkey") <= 100)
-      // checkpointed: the ICC kernel's standardize collects and
-      // gramian treeAggregates each act on both matrices several
-      // times — without it every action re-runs the lineitem scan+agg
+      // checkpointed: the ICC's sample-id collect and gene-keyed
+      // aggregation each read both matrices — without it each action
+      // re-runs the lineitem scan+agg
       def mat(status: String) = ExpressionMatrix(
         li.filter(col("l_linestatus") === status)
           .groupBy(col("l_partkey"), col("l_suppkey"))
@@ -2983,7 +2983,8 @@ object ExtraQueries {
          ) SELECT g AS l_partkey, round(icc + 1e-7, 4) + 0.0 AS icc FROM icc ORDER BY 1""",
 
     // permutation FDR: md5 rank-hash permutations replayed exactly;
-    // label multiset reassigned by hash rank within each perm
+    // label multiset reassigned by hash rank within each perm; a null
+    // observed |z| (zero variance) has a null fdr
     "q47_perm_fdr" ->
       """WITH m AS (SELECT l_partkey AS gene, CAST(l_suppkey AS VARCHAR) AS samp, avg(l_extendedprice) AS value
                     FROM lineitem WHERE l_partkey <= 300 GROUP BY 1,2),
@@ -3023,7 +3024,9 @@ object ExtraQueries {
                      count(*) OVER (ORDER BY z_obs DESC RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_ge
                      FROM obs_z)
          SELECT o.gene AS l_partkey, round(o.z_obs + 1e-7, 4) + 0.0 AS z_obs,
-                round(least(1.0, e.e_null * (SELECT n_genes FROM ng) / o.n_ge) + 1e-9, 6) + 0.0 AS fdr
+                CASE WHEN o.z_obs IS NOT NULL THEN
+                  round(least(1.0, e.e_null * (SELECT n_genes FROM ng) / o.n_ge) + 1e-9, 6) + 0.0
+                END AS fdr
          FROM obsrank o JOIN exceed e USING (gene) ORDER BY 1""",
 
     // CQN replay: GC-bin medians, Thomas-solve spline (recursive

@@ -12,7 +12,7 @@ class DiffExprSpec extends SparkSpec {
     //    = 0.05 0.05 0.05 0.05 0.50
     val df = Seq(("a", 0.01), ("b", 0.02), ("c", 0.03), ("d", 0.04), ("e", 0.5))
       .toDF("id", "p")
-    val adj = DiffExpr.bhAdjust(df, "p", Seq(col("id")))
+    val adj = SpecReferences.bhAdjust(df, "p", Seq(col("id")))
       .orderBy("id").select("p_bh").as[Double].collect()
     val expected = Array(0.05, 0.05, 0.05, 0.05, 0.5)
     adj.zip(expected).foreach { case (a, e) => assert(math.abs(a - e) < 1e-12) }
@@ -20,7 +20,7 @@ class DiffExprSpec extends SparkSpec {
 
   test("bhAdjust caps at 1 and is monotone in rank order") {
     val df = (1 to 50).map(i => (i, i / 50.0 * 1.5)).toDF("id", "p")
-    val adj = DiffExpr.bhAdjust(df, "p", Seq(col("id")))
+    val adj = SpecReferences.bhAdjust(df, "p", Seq(col("id")))
       .orderBy("p").select("p_bh").as[Double].collect()
     assert(adj.forall(_ <= 1.0))
     adj.sliding(2).foreach { case Array(x, y) => assert(x <= y + 1e-12); case _ => }
@@ -34,7 +34,7 @@ class DiffExprSpec extends SparkSpec {
     // BOTH must equal the reference window program.
     val df = (1 to 500).map(i => (i, ((i * 131) % 97) / 97.0)).toDF("id", "p")
       .repartition(7)
-    val simple = DiffExpr.bhAdjust(df, "p", Seq(col("id")))
+    val simple = SpecReferences.bhAdjust(df, "p", Seq(col("id")))
       .orderBy("id").select("p_bh").as[Double].collect()
     assert(simple.length == 500)
     for (threshold <- Seq("100000", "0")) { // small path, then forced stitch
@@ -151,7 +151,7 @@ class DiffExprSpec extends SparkSpec {
     val grouped = DiffExpr.bhAdjustGrouped(df, "p", Seq(col("contrast")), Seq(col("gene_id")))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(3)).toMap
     for (c <- Seq("x", "y")) {
-      val single = DiffExpr.bhAdjust(df.filter(col("contrast") === c), "p", Seq(col("gene_id")))
+      val single = SpecReferences.bhAdjust(df.filter(col("contrast") === c), "p", Seq(col("gene_id")))
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(3)).toMap
       for ((k, v) <- single)
         assert(math.abs(grouped(k) - v) < 1e-12, s"$k: ${grouped(k)} vs $v")

@@ -445,7 +445,7 @@ class PropertySpec extends SparkSpec {
   test("BH adjustment is monotone and bounded by [p, 1]") {
     for (ps <- cases(Gen.listOfN(15, Gen.choose(0.0, 1.0)))) {
       val df = ps.zipWithIndex.map { case (p, i) => (s"t$i", p) }.toDF("id", "p")
-      val adj = DiffExpr.bhAdjust(df, "p", Seq(col("id")))
+      val adj = SpecReferences.bhAdjust(df, "p", Seq(col("id")))
         .select("p", "p_bh").collect()
         .map(r => (r.getDouble(0), r.getDouble(1)))
       assert(adj.forall { case (p, q) => q >= p - 1e-12 && q <= 1.0 + 1e-12 })
@@ -599,7 +599,7 @@ class PropertySpec extends SparkSpec {
     def collectSeg(df: org.apache.spark.sql.DataFrame) =
       df.collect().groupBy(_.getString(0))
         .map { case (w, rows) => w -> rows.sortBy(_.getInt(1)).map(_.getString(2)).toList }
-    val seg = collectSeg(Bpe.segment(words.keys.toSeq.toDF("word"), merges))
+    val seg = collectSeg(SpecReferences.segment(words.keys.toSeq.toDF("word"), merges))
     val segFast = collectSeg(Bpe.segmentFast(words.keys.toSeq.toDF("word"), merges))
     words.keys.foreach { w =>
       val ref = merges.foldLeft(w.map(_.toString).toList :+ "</w>") {

@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
   * chain incremental invocations without leaking MEMORY_AND_DISK
   * blocks, enforced by code rather than a caller-must-sweep comment. */
 class RelCacheSpec extends SparkSpec {
+  import spark.implicits._
 
   private def persisted: Int = spark.sparkContext.getPersistentRDDs.size
 
@@ -146,5 +147,25 @@ class RelCacheSpec extends SparkSpec {
     assert(RelCache.liveSlots.get("textdedup.containmentAgainstIndex").contains(1))
     RelCache.releaseAll()
     assert(persisted == 0 && RelCache.liveSlots.isEmpty)
+  }
+
+  test("Batch.combat holds its two intermediates: three runs stay bounded by keep") {
+    SparkEntry.clearQueryCaches()
+    assert(persisted == 0)
+    // three DIFFERENT inputs: each run's relations have new plans, so a
+    // session-lifetime persist would leave 3 × 2 blocks behind
+    val batches = (1 to 8).map(s => (s"s$s", if (s <= 4) "b1" else "b2"))
+      .toDF("sample_id", "batch")
+    (1 to 3).foreach { run =>
+      val m = graft.model.ExpressionMatrix((for (g <- 1 to 20; s <- 1 to 8) yield
+        (s"g$g", s"s$s", g * 0.5 + ((g * 7 + s * 3 + run) % 11) * 0.3 + (if (s <= 4) 1.0 else 0.0)))
+        .toDF("gene_id", "sample_id", "value"))
+      assert(graft.operators.Batch.combat(m, batches).df.count() == 160)
+    }
+    assert(RelCache.liveSlots.get("batch.combat.z").contains(1) &&
+      RelCache.liveSlots.get("batch.combat.gb").contains(1), s"${RelCache.liveSlots}")
+    assert(persisted <= 2, s"$persisted persisted RDDs after three ComBat runs (keep = 1, 2 slots)")
+    RelCache.releaseAll()
+    assert(persisted == 0)
   }
 }

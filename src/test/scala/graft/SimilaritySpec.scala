@@ -59,7 +59,7 @@ class SimilaritySpec extends SparkSpec {
     def key(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")) ->
         math.round(r.getAs[Double]("cosine") * 1e9)
-    val exact = TextDedup.embeddingDupPairsExact(emb, threshold = 0.4)
+    val exact = SpecReferences.embeddingDupPairsExact(emb, threshold = 0.4)
       .collect().map(key).toMap
     val banded = TextDedup.embeddingDupPairs(emb, threshold = 0.4, dim = 64)
       .collect().map(key).toMap
@@ -86,7 +86,7 @@ class SimilaritySpec extends SparkSpec {
       yield ((c * 4 + j).toLong, v(c, j))).toDF("vec_id", "embedding")
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(TextDedup.embeddingDupPairsExact(emb, threshold = 0.95)
+    val exact = pairs(SpecReferences.embeddingDupPairsExact(emb, threshold = 0.95)
       .select("id_a", "id_b"))
     val auto = pairs(TextDedup.embeddingDupPairsAuto(emb, threshold = 0.95,
       dim = 16, expectedN = 80L).select("id_a", "id_b"))

@@ -1,0 +1,61 @@
+package graft
+
+import graft.operators.{Bpe, DiffExpr, Similarity}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+
+/** Reference forms that only specs use: the single-window BH adjust
+  * the scalable and grouped paths are checked against, the
+  * relational BPE segmentation that `Bpe.segmentFast` is gated
+  * against, and the all-pairs embedding near-duplicate form that the
+  * banded `TextDedup.embeddingDupPairs` is measured against. */
+object SpecReferences {
+
+  /** W5/A13 — Benjamini–Hochberg adjustment as one global window
+    * program (`DiffExpr.bhWindow`). Identical to R
+    * `p.adjust(method="BH")`. */
+  def bhAdjust(df: DataFrame, p: String, tiebreak: Seq[Column], out: String = "p_bh"): DataFrame =
+    DiffExpr.bhWindow(df, p, Nil, tiebreak, count(lit(1)).over(Window.partitionBy()), out)
+
+  /** All-pairs exact form of `TextDedup.embeddingDupPairs`, via
+    * [[Similarity.cosinePairs]]. Quadratic — bounded relations only. */
+  def embeddingDupPairsExact(embeddings: DataFrame, threshold: Double,
+      id: String = "vec_id", vec: String = "embedding"): DataFrame =
+    Similarity.cosinePairs(embeddings, id, vec).filter(col("cosine") >= threshold)
+
+  /** Segment words with a trained merge table (the ENCODE side):
+    * applies the merges in training order to the (word, freq) symbol
+    * relation and returns the final (word, pos, sym) segmentation —
+    * the subword decomposition a tokenizer built on this vocabulary
+    * would emit. Merge list is bounded (driver-side), application is
+    * the same window algebra as training. */
+  def segment(wf: DataFrame, merges: Seq[(String, String)]): DataFrame = {
+    var s = Bpe.initialSymbols(wf.select(col("word"), lit(1L).as("freq")))
+      .localCheckpoint(true)
+    merges.foreach { case (a, b) =>
+      val w = Window.partitionBy("word").orderBy("pos")
+      val keep = s.withColumn("nxt", lead(col("sym"), 1).over(w))
+        .filter(col("sym") === a && col("nxt") === b)
+        .withColumn("mrank", row_number().over(w))
+        .withColumn("island", col("pos") - col("mrank"))
+        .withColumn("imin",
+          min("pos").over(Window.partitionBy("word", "island")))
+        .filter(((col("pos") - col("imin")) % 2) === 0)
+        .select(col("word"), col("pos"))
+      val dropped = s.join(
+        keep.select(col("word"), (col("pos") + 1).as("pos")),
+        Seq("word", "pos"), "left_anti")
+      val prev = s
+      s = dropped
+        .join(keep.withColumn("hit", lit(true)), Seq("word", "pos"), "left")
+        .withColumn("sym", when(col("hit"), lit(a + b)).otherwise(col("sym")))
+        .withColumn("pos", row_number().over(
+          Window.partitionBy("word").orderBy("pos")) - 1)
+        .select("word", "freq", "pos", "sym")
+        .localCheckpoint(true)
+      prev.unpersist(blocking = false)
+    }
+    s.select("word", "pos", "sym")
+  }
+}

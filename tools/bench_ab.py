@@ -2,7 +2,8 @@
 """Alternating parent/change A/B of one benchmark workload.
 
     python3 tools/bench_ab.py --parent DIR --change DIR \\
-        --workload integration_large --seeds 1-10 [--seconds 40] [--out ab.json]
+        --workload integration_large --seeds 1-10 [--seconds 40] [--out ab.json] \\
+        [--layers Meta,DiffExpr]
 
 Runs `python3 perfbench/run.py` in each checkout, one pair per seed.
 Odd pairs run the parent first, even pairs the change first. Prints each
@@ -11,12 +12,15 @@ BENCHMARK.json: each side's median and quartiles, the number of pairs
 the change wins (ties count for neither), the change/parent median ratio
 and its bound. A gain holds when the change wins at least nine tenths of
 all pairs run and the medians differ by more than the parent's
-interquartile range. It only invokes perfbench/run.py; it writes nothing in either
-checkout beyond what that script writes.
+interquartile range. With --layers, it then runs one `--trace 1` per side at
+the first seed and prints, side by side, each named layer's jobs, s, task_s
+and shuffle_mb, plus the cold and warm job totals (medians over the pairs)
+and the traced run's own job count. It only invokes perfbench/run.py; it
+writes nothing in either checkout beyond what that script writes.
 
-Exit status: 0 when every run succeeded, the output digests are equal at
-every seed and no metric is worse than its bound; 1 otherwise, so the
-script can gate another one.
+Exit status: 0 when every run succeeded (the traced ones included), the
+output digests are equal at every seed and no metric is worse than its
+bound; 1 otherwise, so the script can gate another one.
 """
 import argparse
 import json
@@ -26,7 +30,8 @@ import statistics
 import subprocess
 import sys
 
-SUMMARY = re.compile(r"^\[perfbench\] \S+ seed=\d+ (cold|warm) .*$")
+SUMMARY = re.compile(r"^\[perfbench\] \S+ seed=\d+ (cold|warm|traced) .*$")
+LAYER_STATS = ("jobs", "s", "task_s", "shuffle_mb")
 
 
 def seeds(spec):
@@ -45,9 +50,9 @@ def quartiles(xs):
     return q1, q2, q3
 
 
-def run(checkout, workload, seed, seconds):
+def run(checkout, workload, seed, seconds, trace=0):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
                        stderr=subprocess.STDOUT, text=True)
     lines = p.stdout.splitlines()
@@ -78,6 +83,8 @@ def main():
     ap.add_argument("--seeds", required=True, help="e.g. 1-10 or 1,3,5-7")
     ap.add_argument("--seconds", type=float, default=40)
     ap.add_argument("--out", help="write every run as JSON here")
+    ap.add_argument("--layers", help="comma-separated layers to compare in one traced run "
+                    "per side after the pairs, e.g. Meta,DiffExpr")
     args = ap.parse_args()
 
     with open(os.path.join(args.parent, "BENCHMARK.json")) as fh:
@@ -138,7 +145,43 @@ def main():
 
     same = all(digest(p["parent"]) == digest(p["change"]) for p in good)
     print("output digest equal at every seed: %s" % ("yes" if same else "NO"))
-    return 1 if any(fails.values()) or not same or over_bound else 0
+    traced_ok = True
+    if args.layers:
+        traced_ok = compare_layers(args, sides, good, seeds(args.seeds)[0])
+    return 1 if any(fails.values()) or not same or over_bound or not traced_ok else 0
+
+
+def compare_layers(args, sides, good, seed):
+    """One --trace 1 run per side; prints the named layers side by side.
+    Returns whether both traced runs succeeded."""
+    traced = {}
+    for side in ("parent", "change"):
+        traced[side] = run(sides[side], args.workload, seed, args.seconds, trace=1)
+        print("traced seed %d %-6s %s" % (seed, side, "ok" if ok(traced[side]) else "FAIL"),
+              flush=True)
+
+    def layer(side, key):
+        r = traced[side]["result"]
+        v = r["metrics"].get(key) if r else None
+        return "%.4g" % v["value"] if v else "?"
+
+    def median_jobs(side, run_kind):
+        xs = [int(p[side]["counts"][run_kind]["jobs"]) for p in good
+              if "jobs" in p[side]["counts"].get(run_kind, {})]
+        return "%g" % statistics.median(xs) if xs else "?"
+
+    print()
+    print("%-24s %12s %12s" % ("layer (trace 1, seed %d)" % seed, "parent", "change"))
+    for name in [n.strip() for n in args.layers.split(",") if n.strip()]:
+        for stat in LAYER_STATS:
+            key = "%s.%s" % (name, stat)
+            print("%-24s %12s %12s" % (key, layer("parent", key), layer("change", key)))
+    for run_kind in ("cold", "warm"):
+        print("%-24s %12s %12s" % ("jobs %s (pair median)" % run_kind,
+                                   median_jobs("parent", run_kind), median_jobs("change", run_kind)))
+    print("%-24s %12s %12s" % ("jobs traced run", *(
+        traced[s]["counts"].get("traced", {}).get("jobs", "?") for s in ("parent", "change"))))
+    return ok(traced["parent"]) and ok(traced["change"])
 
 
 if __name__ == "__main__":
