@@ -122,8 +122,8 @@ private[graft] object BenchKit {
   // meter's job/task counters are quiescent (two consecutive
   // identical reads), bounded at 2 s so a wedged bus can't hang the
   // bench. A fixed 50 ms sleep raced multi-second, 100+-job samples
-  // and could bleed task events across samples — exactly the signal
-  // the outlier 'cause' discriminator keys on.
+  // and could bleed one sample's job and task counts into the next
+  // sample's row.
   def drainMeter(meter: TaskMeter): Unit = {
     var lastCounts = (-1L, -1L)
     var settled = 0
@@ -166,42 +166,6 @@ private[graft] object BenchKit {
       codegenCompiles() - cg0, (codegenNanos() - cgNs0) / 1e6)
   }
 
-  // OUTLIER ATTRIBUTION (VERDICT r10 #2): any sample whose wall
-  // exceeds 1.5x the best same-kind sibling gets a NAMED cause from
-  // its task snapshot — the r7 q82 diagnosis pattern, automated.
-  def cause(s: Sample, best: Sample, firstCold: Boolean): String = {
-    val wallR = s.wall / best.wall.max(1e-9)
-    val taskR = s.t.taskSec / best.t.taskSec.max(1e-9)
-    // measured at-rest artifact builds (BuildMeter deltas) explain
-    // the excess wall directly — the sharpest attribution available
-    if (s.buildSec > 0.5 * (s.wall - best.wall).max(1e-9))
-      f"at-rest-build: ${s.buildSec}%.2f s of this sample built warehouse artifacts (one-time, amortized by min-of-N)"
-    // the first cold sample legitimately does MORE work than its
-    // siblings: codegen/JIT, parquet footer reads, memo-cache and
-    // at-rest index builds — when its tasks genuinely ran longer,
-    // name that rather than mislabel it contention
-    else if (firstCold && taskR > 1.5)
-      "first-sample-build: extra task work (memo builds, codegen) the later samples amortize"
-    // cached partitions the storage layer pushed to DISK (unified-
-    // memory pressure: broadcasts + caches + checkpoint blocks
-    // compete in an 8 GB driver heap) make every cache read a disk
-    // read + decompress — real extra task work that is the SESSION's
-    // state, not the query's cost (VERDICT r12 #1: q147's warm
-    // samples did 2x the cold task-seconds)
-    else if (s.store.rddDiskMb > 64 &&
-        s.store.rddDiskMb > 2 * best.store.rddDiskMb + 64)
-      f"disk-backed-cache: ${s.store.rddDiskMb}%.0f MB of cached partitions on disk (best sample: ${best.store.rddDiskMb}%.0f MB) -- storage-memory pressure turned cache reads into disk reads"
-    else if (s.steal.exists(_ > 0.05)) "host-steal"
-    else if (s.gc > 0.20) "driver-gc"
-    else if (s.t.taskGcFrac > 0.20) "task-gc"
-    else if (s.t.spillMb > 2 * best.t.spillMb + 8) "spill"
-    else if (taskR > 0.75 * wallR)
-      if (best.t.cpuFrac > 0 && s.t.cpuFrac < 0.6 * best.t.cpuFrac)
-        "cpu-wait: tasks ran longer at collapsed cpu fraction (unaccounted external contention)"
-      else "uniform-task-slowdown: task time scaled with wall at similar cpu fraction"
-    else "scheduler-idle: wall inflated while task time stayed flat (stragglers/driver gaps)"
-  }
-
   /** Session warm-up (codegen, JIT, parquet footers) so per-query
     * numbers measure the queries, not JVM startup. Shared with the
     * fresh-JVM session-2 child so its samples start from the same
@@ -239,6 +203,19 @@ private[graft] object BenchKit {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
+
+  /** The host a run measured: the cores this JVM sees, its max heap
+    * and the machine's total RAM (-1 when the OS bean cannot say), so
+    * an artifact's walls carry the size of the host behind them. */
+  def hostFacts(): String = {
+    val rt = Runtime.getRuntime
+    val ramMb = java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case os: com.sun.management.OperatingSystemMXBean => os.getTotalMemorySize >> 20
+      case _ => -1L
+    }
+    s"""{"available_processors":${rt.availableProcessors},""" +
+      s""""max_heap_mb":${rt.maxMemory >> 20},"total_ram_mb":$ramMb}"""
+  }
 }
 
 object Bench {
@@ -414,78 +391,10 @@ object Bench {
         ",\"rdd_mem_mb\":" + mbArr(samples.map(_.store.rddMemMb)) +
         ",\"rdd_disk_mb\":" + mbArr(samples.map(_.store.rddDiskMb)) + "}" }
       .mkString("{", ",", "}")
-    val outliers = results.flatMap { case (k, ss, _, _, _, samples) =>
-      val (colds, warms) = samples.splitAt(ss.length)
-      // cold samples compare within their kind; WARM samples compare
-      // against the best of ALL samples — a warm run holds every cache
-      // a cold run holds, so warm >> cold-best is an inversion that
-      // must carry a cause, not just warm-vs-warm spread
-      def flag(kind: String, grp: Seq[Sample], ref: Seq[Sample]): Seq[String] = {
-        val okRef = ref.filter(_.err.isEmpty)
-        if (okRef.isEmpty) Seq.empty else {
-          val best = okRef.minBy(_.wall)
-          grp.zipWithIndex.filter { case (s, _) => s.err.isEmpty &&
-              s.wall > 1.5 * best.wall && s.wall >= 1.0 && !(s eq best) }
-            .map { case (s, i) =>
-            s"""{"kind":"$kind","wall":${f"${s.wall}%.2f"},"best":${f"${best.wall}%.2f"},""" +
-              s""""task_sec":${f"${s.t.taskSec}%.2f"},"best_task_sec":${f"${best.t.taskSec}%.2f"},""" +
-              s""""cpu_frac":${f"${s.t.cpuFrac}%.3f"},"best_cpu_frac":${f"${best.t.cpuFrac}%.3f"},""" +
-              s""""jobs":${s.t.jobs},"spill_mb":${f"${s.t.spillMb}%.1f"},""" +
-              s""""rdd_disk_mb":${f"${s.store.rddDiskMb}%.1f"},""" +
-              s""""cause":"${cause(s, best, kind == "cold" && i == 0)}"}"""
-          }
-        }
-      }
-      val fl = flag("cold", colds, colds) ++ flag("warm", warms, colds ++ warms)
-      if (fl.isEmpty) None
-      else Some("\"" + k + "\":" + fl.mkString("[", ",", "]"))
-    }.mkString("{", ",", "}")
-    // WHOLE-KIND inflation check (VERDICT r13 #1): the per-sample
-    // outlier rows compare within their reference group, so two
-    // equally-inflated cold samples produce NO row (q147 r13: 415
-    // task-second colds, absent from `outliers`). kind_gap compares
-    // the BEST cold against the BEST warm of the same run — a warm
-    // run holds every cache a cold run holds plus the memo caches, so
-    // cold_best >> warm_best is either named cache-rebuild work
-    // (task_sec shows it) or an anomaly that must carry a cause. One
-    // row per query; with the per-sample rows, every sample >1.5x the
-    // query's best overall sample is now covered by a cause row.
-    val kindGap = results.flatMap { case (k, ss, _, _, _, samples) =>
-      val (colds, warms) = samples.splitAt(ss.length)
-      val okC = colds.filter(_.err.isEmpty)
-      val okW = warms.filter(_.err.isEmpty)
-      if (okC.isEmpty || okW.isEmpty) None else {
-        val bc = okC.minBy(_.wall); val bw = okW.minBy(_.wall)
-        if (bc.wall <= 1.5 * bw.wall || bc.wall < 1.0) None else {
-          val taskR = bc.t.taskSec / bw.t.taskSec.max(1e-9)
-          val why =
-            if (bc.buildSec > 0.5 * (bc.wall - bw.wall))
-              f"at-rest-build: ${bc.buildSec}%.2f s of the cold built warehouse artifacts"
-            else if (taskR > 1.5)
-              f"cold-task-work: cold tasks did $taskR%.1fx the warm task work (memo/index rebuild after the cache clear)"
-            else if (bc.steal.exists(_ > 0.05)) "host-steal"
-            else if (taskR > 1.15)
-              f"cold-task-work-mild: $taskR%.1fx warm task work plus scheduling overhead"
-            else
-              "cold-overhead-not-task: wall gap without matching task gap (scheduler/driver)"
-          Some("\"" + k + "\":" +
-            f"""{"cold_best":${bc.wall}%.2f,"warm_best":${bw.wall}%.2f,""" +
-            f""""cold_task_sec":${bc.t.taskSec}%.1f,"warm_task_sec":${bw.t.taskSec}%.1f,""" +
-            f""""build_sec":${bc.buildSec}%.2f,"cause":${jsonStr(why)}}""")
-        }
-      }
-    }.mkString("{", ",", "}")
     val failures = results.collect { case (k, _, _, _, Some(e), _) =>
       "\"" + k + "\":" + jsonStr(e) }
       .mkString("{", ",", "}")
     val total = results.map(_._3.min).sum
-    // ROUND-OVER-ROUND attribution (VERDICT r12 #3 / r13 #2): the
-    // artifact itself classifies every query that moved >30% against
-    // the prior committed round artifact, so a regressed total names
-    // its causes in the record instead of costing a judge
-    // investigation. Prior = SPARK_GRAFT_BENCH_PRIOR or the
-    // highest-numbered BENCH_r*.json in the cwd.
-    val vsPrior = BenchPrior.compare(results, total)
     // samples whose steal fraction exceeds the flag threshold: these
     // walls are ambient-contended, not the query's own cost
     val stealThreshold = 0.05
@@ -500,49 +409,25 @@ object Bench {
       case (k, _, _, _, _, samples)
         if samples.exists(_.gc > gcThreshold) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
-    // SESSION-2 at-rest proof (VERDICT r10 #3 → r11 #2 → r12 #2): the
-    // amortized family's warehouse artifacts survive the session via
-    // build-complete markers. Round 12 detached the catalog entries
-    // in-JVM; the receipts still inherited the bench JVM's
-    // accumulated JIT/heap/ambient state (q141 27.1 s, q150 8.58 s —
-    // a phase split showed neither was the operator). Round 13 runs
-    // the leg in a FRESH CHILD JVM (the literal driver-restart shape): same
-    // classpath and module flags as this process, its own
+    // SESSION-2 at-rest leg: the amortized family's warehouse
+    // artifacts survive the session via build-complete markers. The
+    // leg runs in a FRESH CHILD JVM (the literal driver-restart shape):
+    // same classpath and module flags as this process, its own
     // SparkSession over the same warehouse dir, so the first sample
     // pays exactly marker re-registration + fresh-JVM first execution
-    // and nothing else. In-JVM fallback retained for environments
-    // where spawning fails (recorded as mode:"in-jvm").
+    // and nothing else.
     val s2Names = Seq("q128_neardup_amortized", "q141_quality_cluster_amortized",
         "q150_graph_amortized", "q176_components_at_rest")
       .filter(n => SparkEntry.queries.contains(n) &&
         only.forall(_.findFirstIn(n).isDefined))
-    val mainBestOf: Map[String, Sample] = results
-      .collect { case (n, _, _, _, _, samples)
-        if samples.exists(_.err.isEmpty) =>
-          n -> samples.filter(_.err.isEmpty).minBy(_.wall) }.toMap
     val session2 =
-      if (s2Names.isEmpty) "{}"
-      else BenchS2.spawn(sfDir, cpus, s2Names, mainBestOf) match {
-        case Some(childJson) => childJson
-        case None => inJvmSession2(spark, meter, sfDir, s2Names, mainBestOf)
-      }
-    // committed soak record (VERDICT r14 #5): tools/bench_soak.py
-    // writes bench_soak.json (run totals + per-query spread percentiles
-    // for this code); embedding it makes the round artifact carry its
-    // own error bar instead of pointing at a doc.
-    val soak =
-      try {
-        val p = java.nio.file.Paths.get("bench_soak.json")
-        if (java.nio.file.Files.isRegularFile(p)) {
-          val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim
-          if (s.startsWith("{") && s.endsWith("}")) s else "null"
-        } else "null"
-      } catch { case _: Throwable => "null" }
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$qs,"parsed":$parsed,"failures":$failures,"outliers":$outliers,"kind_gap":$kindGap,"vs_prior":$vsPrior,"soak":$soak,"session2":$session2,"high_steal":$highSteal,"steal_threshold":$stealThreshold,"high_gc":$highGc,"gc_threshold":$gcThreshold,"warehouse_gc":$whGc,"sf":"$sfDir"}"""
+      if (s2Names.isEmpty) "{}" else BenchS2.spawn(sfDir, cpus, s2Names)
+    val host = hostFacts()
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$qs,"parsed":$parsed,"failures":$failures,"session2":$session2,"high_steal":$highSteal,"steal_threshold":$stealThreshold,"high_gc":$highGc,"gc_threshold":$gcThreshold,"warehouse_gc":$whGc,"sf":${jsonStr(sfDir)},"host":$host}"""
     println(json)
     // Persist the full artifact: captured stdout tails truncate to the
     // last ~2000 chars, which can never hold the 170+-query map — the
-    // FILE is the structured record (driver cwd, judge-readable).
+    // FILE is the structured record.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
@@ -560,427 +445,28 @@ object Bench {
       .mkString("[", ",", "]")
     println(s"""{"bench_summary":{"total":$total,"n_queries":${results.size},""" +
       s""""reps":$reps,"failed":$failNames,"high_steal":$highSteal,""" +
-      s""""high_gc":$highGc,""" +
-      s""""slowest":$slow,"detail":"$outPath"}}""")
+      s""""high_gc":$highGc,"host":$host,""" +
+      s""""slowest":$slow,"detail":${jsonStr(outPath)}}}""")
     spark.stop()
   }
-
-  /** The round-12 in-JVM session-2 leg (detach catalog entries, run
-    * under newSession) — now the FALLBACK when a child JVM cannot be
-    * spawned. Kept because its detach mechanics are what the
-    * PipelinesSpec gate exercises. */
-  private def inJvmSession2(spark: SparkSession, meter: TaskMeter,
-      sfDir: String, s2Names: Seq[String],
-      mainBest: Map[String, Sample]): String = {
-    val detached = graft.model.AtRest.detachGraftTables(spark)
-    val s2 = spark.newSession()
-    org.apache.spark.sql.SparkSession.setActiveSession(s2)
-    // memo caches hold session-1-bound DataFrames; clear under the
-    // ACTIVE new session so the sweep hits the right catalog
-    SparkEntry.clearQueryCaches()
-    val timed = s2Names.map { n =>
-      "\"" + n + "\":{\"first\":" +
-        BenchS2.s2Sample(s2, meter, sfDir, n, mainBest.get(n)) +
-        ",\"second\":" +
-        BenchS2.s2Sample(s2, meter, sfDir, n, mainBest.get(n)) + "}"
-    }
-    org.apache.spark.sql.SparkSession.setActiveSession(spark)
-    SparkEntry.clearQueryCaches()
-    (Seq("\"mode\":\"in-jvm\"", "\"detached\":" + detached) ++ timed)
-      .mkString("{", ",", "}")
-  }
 }
 
-/** Round-over-round attribution (VERDICT r12 #3 / r13 #2). Reads the
-  * prior committed round artifact (json4s — already on Spark's
-  * classpath) and classifies, inside the new artifact itself, every
-  * query whose cold headline moved >30%: prior cold, new cold, the
-  * TASK-WORK ratio vs the prior round's best cold tasks, and a named
-  * cause. The r13 +22% total had to be reverse-engineered by the
-  * judge; this makes the artifact carry the explanation. */
-/** PURE per-row attribution for the vs_prior compare (VERDICT r16
-  * #2): the decision logic used to live inline in the bench loop and
-  * was validated only by contended live runs; here it is a function
-  * of the row's measured inputs alone, so BenchSpec pins the known
-  * shapes (the r16-q171 row, the r15-q172 SMT row, the planted-q10
-  * real regression, an ambient-steal row, a genuine regression with a
-  * loud soak) as fixtures that fail loudly if a future edit re-opens
-  * a closed blind spot. */
-private[graft] object BenchAttribution {
-
-  /** One compared query's evidence: prior headline cold `priorCold`,
-    * committed best cold `cold`, headline-to-headline task/CPU-sec/
-    * shuffle ratios (None when the prior lacks counters), the
-    * committed cold's absolute shuffle MB, the same-code soak's cold
-    * walls for this query, the soak-derived per-query noise floor
-    * (spread p90), and whether any committed cold sample recorded >5%
-    * host steal. */
-  final case class RowIn(
-      priorCold: Double,
-      cold: Double,
-      taskRatio: Option[Double],
-      cpusecRatio: Option[Double],
-      shufRatio: Option[Double],
-      shufMb: Double,
-      soakVals: Seq[Double],
-      noiseFloor: Double,
-      anySteal: Boolean)
-
-  final case class RowOut(regressed: Boolean, cause: String, ambient: Boolean)
-
-  /** Human shuffle-volume phrase: a prior that shuffled ~nothing
-    * makes the ratio meaningless (the r17 dress run printed
-    * "18700000.00x shuffle bytes" for a 0.02 MB committed shuffle
-    * over a ~0 prior), so past 99x the label states the absolute MB
-    * instead. The shuffle-GROWTH override elsewhere keeps using the
-    * raw ratio — growth from ~0 to >8 MB is exactly the plan-change
-    * evidence it exists for. */
-  private def shufTxt(r: Option[Double], mb: Double): String =
-    r.map(rr =>
-      if (rr > 99) f" at $mb%.1f MB shuffle (prior ~0)"
-      else f" at $rr%.2fx shuffle bytes").getOrElse("")
-
-  /** None = the pair did not move enough to attribute (within ±30%,
-    * or both walls sub-second — scheduling-jitter-bound). */
-  def classify(in: RowIn): Option[RowOut] = {
-    val pc = in.priorCold; val c = in.cold
-    if (c <= 1.3 * pc && c >= pc / 1.3 || c.max(pc) < 1.0) return None
-    val shufGrew = in.shufRatio.exists(_ > 1.3) && in.shufMb > 8
-    // the same-code soak's verdict on this query. Quietness is the
-    // band's OWN dispersion anchored at min(prior, band min) under
-    // the measured noise floor — NOT a fixed 1.3× of prior (VERDICT
-    // r16 #1: bench_prior.json IS the soak median file, so when the
-    // prior sits at the band's minimum a legitimate soak sample fell
-    // outside `1.3 × prior` and defeated the branch on exactly the
-    // rows it exists for; r16-q171 wore "real work growth" on a
-    // same-code host burst that way). If prior and every soak sample
-    // sit inside one noise envelope and only the committed cold
-    // clears it, the committed sample is the outlier — a host burst,
-    // not the code (the code is IDENTICAL in all soak runs).
-    val soakQuiet = in.soakVals.nonEmpty && {
-      val quietRef = math.min(pc, in.soakVals.min)
-      in.soakVals.max <= in.noiseFloor * quietRef &&
-        c > in.noiseFloor * in.soakVals.max
-    }
-    val regressed = c > pc
-    val why =
-      if (!regressed) in.taskRatio match {
-        case Some(r) if r < 0.77 =>
-          f"less-task-work: $r%.2fx prior task work (operator/plan change, or the prior round's tasks were inflated)"
-        case Some(_) =>
-          "faster-at-same-task-work: the prior round's wall was inflated (ambient or scheduling)"
-        case None => "no-prior-task-data"
-      }
-      else if (in.anySteal)
-        "ambient-steal: a cold sample recorded >5% host steal this run"
-      // consult the soak BEFORE any CPU-counter-based attribution
-      // (VERDICT r15 #1): contended-SMT CPU counters inflate WITH
-      // wall, so cpusec_ratio alone cannot clear the host. Shuffle
-      // growth overrides: more bytes moved is physical evidence of a
-      // plan change no soak row can explain away (the planted-q10
-      // receipt shows the override is what catches real regressions).
-      else if (soakQuiet && !shufGrew)
-        f"contention-suspect: all ${in.soakVals.length} same-code soak runs put this query at ${in.soakVals.min}%.2f-${in.soakVals.max}%.2f s (prior ${pc}%.2f); only the committed cold moved, at flat shuffle volume${in.shufRatio.filter(_ <= 99).map(r => f" ($r%.2fx bytes)").getOrElse("")} -- host burst, not work growth" +
-          in.cpusecRatio.map(cr => f" [cpusec_ratio $cr%.2f disregarded: contended-SMT CPU counters inflate with wall]").getOrElse("")
-      else {
-        // every regressed label carries its error-bar context inline
-        // (round 16): reference = the WIDEST committed same-code
-        // evidence — the prior headline or the soak band's max,
-        // whichever is larger
-        val floorRef =
-          if (in.soakVals.nonEmpty) in.soakVals.max.max(pc) else pc
-        val inFloor =
-          if (c <= in.noiseFloor * floorRef)
-            f" [within the committed soak noise floor: p90 ${in.noiseFloor}%.2fx over ${if (in.soakVals.nonEmpty) f"soak band ${in.soakVals.min}%.2f-${in.soakVals.max}%.2f s" else "prior"}]"
-          else ""
-        (in.taskRatio, in.cpusecRatio) match {
-          case (Some(t), Some(cr)) if t > 1.3 && cr <= 1.15 =>
-            f"contention-not-work: task wall $t%.1fx prior but task CPU-seconds ~flat ($cr%.2fx) -- whole-host contention the steal counter cannot see" + inFloor
-          case (Some(t), Some(cr)) if t > 1.3 && cr > 1.3 =>
-            f"task-inflation-work: task CPU-seconds grew $cr%.2fx with task wall $t%.1fx" +
-              shufTxt(in.shufRatio, in.shufMb) +
-              " -- real work growth (plan or operator change)" + inFloor
-          case (Some(t), Some(cr)) if t > 1.3 =>
-            f"task-inflation-mixed: task wall $t%.1fx at CPU-seconds $cr%.2fx -- part work, part wait" + inFloor
-          case (Some(t), _) if t <= 1.15 =>
-            "wall-not-task: task work flat vs prior -- scheduler/driver overhead or untracked contention" + inFloor
-          case (Some(t), _) =>
-            f"mild-task-growth: $t%.2fx prior task work" + inFloor
-          case _ => "no-prior-task-data"
-        }
-      }
-    val ambient = regressed && (in.anySteal ||
-      why.startsWith("wall-not-task") ||
-      why.startsWith("contention-not-work") ||
-      why.startsWith("contention-suspect"))
-    Some(RowOut(regressed, why, ambient))
-  }
-}
-
-private[graft] object BenchPrior {
-  import BenchKit._
-  import org.json4s._
-
-  private def num(v: JValue): Option[Double] = v match {
-    case JDouble(d) => Some(d)
-    case JInt(i) => Some(i.toDouble)
-    case JLong(l) => Some(l.toDouble)
-    case JDecimal(d) => Some(d.toDouble)
-    case _ => None
-  }
-
-  /** Load a candidate prior artifact; None if it holds no per-query
-    * data. Accepts BOTH shapes: the bench's own full artifact
-    * ({"metric":...,"queries":{...},"parsed":{...}}) and the driver's
-    * round wrapper ({"n":...,"tail":...,"parsed":<full-or-null>}) —
-    * every committed wrapper so far has parsed:null (the stdout tail
-    * truncates before the map), which is exactly why the bench now
-    * maintains its own committed `bench_prior.json`. */
-  private def load(f: java.io.File): Option[JValue] =
-    try {
-      val j = org.json4s.jackson.JsonMethods.parse(
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-      val inner = j \ "tail" match {
-        case JString(_) => j \ "parsed" // driver wrapper → unwrap
-        case _ => j
-      }
-      inner \ "queries" match {
-        case JObject(fs) if fs.nonEmpty => Some(inner)
-        case _ => None
-      }
-    } catch { case _: Throwable => None }
-
-  def compare(results: Seq[(String, Seq[Double], Seq[Double], Option[Double],
-      Option[String], Seq[Sample])], total: Double): String =
-    try {
-      val rx = "^BENCH_r(\\d+)\\.json$".r
-      val cwdFiles = Option(new java.io.File(".").listFiles())
-        .getOrElse(Array.empty).toSeq
-      // a wrapper qualifies as PRIOR only if its round is complete
-      // (ADVICE r14): once the driver has written THIS round's
-      // BENCH_r*.json, a rerun would otherwise attribute movement
-      // against the same round's earlier run. The last judged round is
-      // read from VERDICT.md's header; wrappers above it are this
-      // round's own artifacts. A missing/unparsable VERDICT (round 1)
-      // falls back to requiring the wrapper's CORRECTNESS sibling.
-      val judgedRound: Option[Int] =
-        try {
-          val src = scala.io.Source.fromFile("VERDICT.md", "UTF-8")
-          val head = try src.getLines().take(3).mkString(" ") finally src.close()
-          "round\\s+(\\d+)".r.findFirstMatchIn(head).map(_.group(1).toInt)
-        } catch { case _: Throwable => None }
-      val wrappers = cwdFiles
-        .flatMap(f => rx.findFirstMatchIn(f.getName)
-          .map(m => (m.group(1).toInt, f)))
-        .filter { case (n, _) => judgedRound match {
-          case Some(r) => n <= r
-          case None => new java.io.File(s"CORRECTNESS_r$n.json").isFile
-        }}
-        .sortBy(-_._1).map(_._2)
-      val siblings = cwdFiles
-        .filter(f => f.getName.startsWith("bench_r") &&
-          f.getName.endsWith(".json"))
-        .sortBy(_.getName).reverse
-      val candidates =
-        sys.env.get("SPARK_GRAFT_BENCH_PRIOR").map(new java.io.File(_)).toSeq ++
-          Seq(new java.io.File("bench_prior.json")) ++ wrappers ++ siblings
-      val prior = candidates.filter(_.isFile)
-        .flatMap(f => load(f).map(f -> _)).headOption
-      prior match {
-        case None => "null"
-        case Some((pf, j)) =>
-          val priorTotal = num(j \ "value")
-          val parsed = j \ "parsed" match {
-            case JObject(fs) => fs.toMap; case _ => Map.empty[String, JValue] }
-          val queriesMap = j \ "queries" match {
-            case JObject(fs) => fs.toMap; case _ => Map.empty[String, JValue] }
-          def priorCold(q: String): Option[Double] =
-            parsed.get(q).flatMap(v => num(v \ "cold"))
-              .orElse(queriesMap.get(q).flatMap(num))
-          // the prior round's HEADLINE cold sample with its task_sec,
-          // cpu_frac and shuf_mb at the same index — located via the
-          // prior's error-free "cold" field (ADVICE r15: `samples`
-          // records ALL cold walls INCLUDING errored reps, so
-          // indexOf(min) could land on a fast-failing rep with ~0
-          // task counters and fabricate huge ratios; "cold" is
-          // min-over-SUCCESSFUL, and its wall is present in samples).
-          // Ratios compare headline-to-headline; a min over mixed
-          // samples could pair a contended wall with a quiet task
-          // count and fabricate a verdict.
-          def priorHead(q: String): Option[(Double, Double, Double)] =
-            parsed.get(q).flatMap { v =>
-              val walls = v \ "samples" match {
-                case JArray(a) => a.flatMap(num); case _ => List.empty[Double] }
-              num(v \ "cold").map(walls.indexOf(_)).filter(_ >= 0).flatMap { i =>
-                def at(k: String): Option[Double] = v \ k match {
-                  case JArray(a) if a.length > i => num(a(i)); case _ => None }
-                for { ts <- at("task_sec"); cf <- at("cpu_frac") }
-                  yield (ts, cf, at("shuf_mb").getOrElse(-1.0))
-              }
-            }
-          // the committed same-code soak: per-query cold walls across
-          // its N runs (read from the run artifacts bench_soak.json
-          // lists) plus the soak's own spread p90 as the noise floor
-          // (ADVICE r15: the floor was hardcoded to r14's 1.62 while
-          // the artifact embedded a 2.80 soak beside it). Provenance
-          // (median_file) is emitted so a stale soak is detectable.
-          val soakJ: Option[JValue] =
-            try {
-              val p = java.nio.file.Paths.get("bench_soak.json")
-              if (java.nio.file.Files.isRegularFile(p))
-                Some(org.json4s.jackson.JsonMethods.parse(new String(
-                  java.nio.file.Files.readAllBytes(p), "UTF-8")))
-              else None
-            } catch { case _: Throwable => None }
-          val soakP90 = soakJ.flatMap(j => num(j \ "query_spread_p90"))
-          val soakProv = soakJ.flatMap(j => j \ "median_file" match {
-            case JString(s) => Some(s); case _ => None })
-          val soakRuns: Seq[JValue] = soakJ.map { j =>
-            val files = j \ "files" match {
-              case JArray(a) => a.collect { case JString(s) => s }; case _ => Nil }
-            files.flatMap { f =>
-              try Some(org.json4s.jackson.JsonMethods.parse(new String(
-                java.nio.file.Files.readAllBytes(
-                  java.nio.file.Paths.get(f)), "UTF-8")))
-              catch { case _: Throwable => None }
-            }
-          }.getOrElse(Nil)
-          val soakQ: Map[String, Seq[Double]] = {
-            val perRun = soakRuns.flatMap { jj =>
-              jj \ "queries" match {
-                case JObject(fs) =>
-                  Some(fs.flatMap { case (k, v) => num(v).map(k -> _) }.toMap)
-                case _ => None
-              }
-            }
-            perRun.flatMap(_.keys).distinct
-              .map(q => q -> perRun.flatMap(_.get(q))).toMap
-          }
-          // the committed run's OWN error bar (VERDICT r16 #5): the
-          // soak runs' total walls give the same-code whole-run band,
-          // so the header states "committed total is X× its soak
-          // median" instead of leaving the reader to cross-reference
-          // the soak artifact before trusting the headline number
-          val soakTotals = soakRuns.flatMap(jj => num(jj \ "value")).sorted
-          val soakTotalMedian =
-            if (soakTotals.isEmpty) None
-            else Some(soakTotals(soakTotals.length / 2))
-          val noiseFloor = soakP90.getOrElse(1.62)
-          var nReg = 0; var nImp = 0; var nAmbient = 0; var nCompared = 0
-          val regCpuRs = scala.collection.mutable.ListBuffer.empty[Double]
-          val regGaps = scala.collection.mutable.ListBuffer.empty[Double]
-          val rows = results.flatMap { case (q, ss, ok, _, err, samples) =>
-            if (err.nonEmpty) None else priorCold(q).flatMap { pc =>
-              nCompared += 1
-              val c = ok.min
-              val okColds = samples.take(ss.length).filter(_.err.isEmpty)
-              if (okColds.isEmpty) None else {
-                val bc = okColds.minBy(_.wall)
-                val head = priorHead(q)
-                val taskR = head.map { case (ts, _, _) => bc.t.taskSec / ts.max(1e-9) }
-                // task CPU-SECONDS ratio (VERDICT r14 #1): task wall
-                // inflating while CPU-seconds stay flat is the
-                // contention signature — the tasks WAITED; real work
-                // growth moves both
-                val cpuR = head.map { case (ts, cf, _) =>
-                  (bc.t.taskSec * bc.t.cpuFrac) / math.max(1e-9, ts * cf) }
-                // shuffle-volume ratio: BYTES MOVED are contention-
-                // invariant, so they discriminate where CPU counters
-                // cannot (a contended SMT core accrues task
-                // CPU-seconds at full rate — VERDICT r15 #1): a plan
-                // or operator change that does more work moves more
-                // bytes; a host burst moves the same bytes slower
-                val shufR = head.collect { case (_, _, sm) if sm >= 0 =>
-                  bc.t.shufMb / sm.max(1e-9) }
-                val anySteal = okColds.flatMap(_.steal).exists(_ > 0.05)
-                // the decision itself is PURE (BenchAttribution) so
-                // BenchSpec pins the known shapes as fixtures
-                BenchAttribution.classify(BenchAttribution.RowIn(
-                  priorCold = pc, cold = c, taskRatio = taskR,
-                  cpusecRatio = cpuR, shufRatio = shufR,
-                  shufMb = bc.t.shufMb, soakVals = soakQ.getOrElse(q, Nil),
-                  noiseFloor = noiseFloor, anySteal = anySteal)).map { out =>
-                  if (out.regressed) nReg += 1 else nImp += 1
-                  if (out.regressed) cpuR.foreach(regCpuRs += _)
-                  if (out.regressed) for (t <- taskR; cr <- cpuR)
-                    regGaps += t / cr.max(1e-9)
-                  if (out.ambient) nAmbient += 1
-                  "\"" + q + "\":" +
-                    f"""{"dir":"${if (out.regressed) "regressed" else "improved"}",""" +
-                    f""""prior_cold":$pc%.2f,"cold":$c%.2f,""" +
-                    s""""task_ratio":${taskR.map(r => f"$r%.2f").getOrElse("null")},""" +
-                    s""""cpusec_ratio":${cpuR.map(r => f"$r%.2f").getOrElse("null")},""" +
-                    s""""cause":${jsonStr(out.cause)}}"""
-                }
-              }
-            }
-          }.mkString("{", ",", "}")
-          // WHOLE-RUN verdict (VERDICT r14 #1), stated once at the top:
-          // many queries regressing TOGETHER at ~flat task CPU-seconds
-          // is a contended host, not 40 independent operator
-          // regressions — the r14 committed artifact hedged each one
-          // individually and misread an ambient burst as work growth.
-          def med(s: scala.collection.mutable.ListBuffer[Double]): Option[Double] = {
-            val v = s.sorted
-            if (v.isEmpty) None else Some(v(v.length / 2))
-          }
-          val medCpuR = med(regCpuRs)
-          // the WAIT GAP: task-wall growth divided by CPU-seconds
-          // growth. Contention inflates wall more than CPU (threads
-          // wait; cache/bandwidth pressure inflates CPU a little);
-          // real work growth moves both together (gap ≈ 1) — measured
-          // under a deliberate 28-thread burn: median gap 1.34 vs
-          // quiet ≈ 1.0.
-          val medGap = med(regGaps)
-          // whole-run trigger (VERDICT r15 #1): ambient-flagged rows
-          // (which now include contention-suspect) can carry the
-          // verdict on their own — r15's run had 31 regressions, 26
-          // of them host-attributable under the soak test, yet said
-          // "isolated-moves" because 31 < 20% of 176 and only the
-          // steal-flagged 10 counted
-          val runVerdict =
-            if (nReg == 0) "no-regressions"
-            else if ((nReg >= 3 && nReg.toDouble > 0.2 * nCompared.max(1) &&
-                (medCpuR.exists(_ <= 1.15) || medGap.exists(_ > 1.25) ||
-                 2 * nAmbient >= nReg)) ||
-                (nAmbient >= 3 && 2 * nAmbient >= nReg))
-              f"whole-run-ambient: $nReg of $nCompared compared queries regressed together with wall outgrowing task CPU-seconds (median cpusec ratio ${medCpuR.map(r => f"$r%.2f").getOrElse("n/a")}, median wait gap ${medGap.map(r => f"$r%.2f").getOrElse("n/a")}, $nAmbient ambient-flagged) -- host contention, not code; re-run in a quiet window before reading any row as a regression"
-            else "isolated-moves"
-          s"""{"prior":${jsonStr(pf.getName)},""" +
-            s""""run_verdict":${jsonStr(runVerdict)},""" +
-            f""""noise_floor":$noiseFloor%.2f,""" +
-            s""""noise_floor_src":${jsonStr(soakP90.map(_ =>
-              "bench_soak.json" + soakProv.map(m => s"(median=$m)").getOrElse(""))
-              .getOrElse("default-r14"))},""" +
-            s""""prior_total":${priorTotal.map(t => f"$t%.1f").getOrElse("null")},""" +
-            f""""total":$total%.1f,""" +
-            s""""soak_total_median":${soakTotalMedian.map(t => f"$t%.1f").getOrElse("null")},""" +
-            s""""total_vs_soak_median":${soakTotalMedian.filter(_ > 0)
-              .map(t => f"${total / t}%.2f").getOrElse("null")},""" +
-            f""""n_compared":$nCompared,""" +
-            f""""n_regressed":$nReg,"n_improved":$nImp,""" +
-            s""""n_regressed_ambient":$nAmbient,"moved":$rows}"""
-      }
-    } catch { case e: Throwable =>
-      s"""{"err":${jsonStr(e.toString.take(160))}}""" }
-}
-
-/** Fresh-JVM session-2 runner (VERDICT r12 #2). Spawned by [[Bench]]
-  * as a child process with this JVM's classpath and module flags; the
-  * child builds its OWN SparkSession over the same warehouse
-  * directory, so its in-memory catalog starts empty and the first
-  * execution of each amortized query must take the marker
-  * re-registration branch — the literal driver-restart shape, with
-  * none of the parent bench's accumulated heap/JIT/storage state in
-  * the receipts. Prints one JSON line (prefix `S2CHILD:`) the parent
-  * embeds verbatim as the artifact's `session2` object. */
+/** Fresh-JVM session-2 runner. Spawned by [[Bench]] as a child
+  * process with this JVM's classpath and module flags; the child
+  * builds its OWN SparkSession over the same warehouse directory, so
+  * its in-memory catalog starts empty and the first execution of each
+  * amortized query must take the marker re-registration branch — the
+  * literal driver-restart shape, with none of the parent bench's
+  * accumulated heap/JIT/storage state in the samples. Takes the query
+  * names as arguments and prints one JSON line (prefix `S2CHILD:`) the
+  * parent embeds verbatim as the artifact's `session2` object. */
 object BenchS2 {
   import BenchKit._
 
-  /** Parent side: fork the child, harvest its JSON line. Returns None
-    * (→ in-JVM fallback) if the fork fails or times out. */
-  def spawn(sfDir: String, cpus: String, names: Seq[String],
-      mainBest: Map[String, Sample]): Option[String] = {
+  /** Parent side: fork the child and harvest its JSON line; a child
+    * that cannot start, times out or prints no result yields
+    * `{"err":...}` instead. */
+  def spawn(sfDir: String, cpus: String, names: Seq[String]): String = {
     try {
       val javaBin = new java.io.File(new java.io.File(
         sys.props("java.home"), "bin"), "java").getAbsolutePath
@@ -991,26 +477,14 @@ object BenchS2 {
       val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
         .getInputArguments.asScala.toSeq
         .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-javaagent"))
-      // carry the FULL best-main reference (wall, task_sec, spill_mb,
-      // cpu_frac, rdd_disk_mb) so the child's cause() compares against
-      // the real baselines, not zeros (ADVICE r13: synthetic 0-spill
-      // references labeled any >8 MB-spill sample 'spill' even when
-      // the main-session best spilled identically)
-      val refs = names.map { n =>
-        val b = mainBest.get(n)
-        s"$n:${b.map(_.wall).getOrElse(-1.0)}:${b.map(_.t.taskSec).getOrElse(-1.0)}" +
-          s":${b.map(_.t.spillMb).getOrElse(0.0)}:${b.map(_.t.cpuFrac).getOrElse(0.0)}" +
-          s":${b.map(_.store.rddDiskMb).getOrElse(0.0)}"
-      }.mkString(",")
       val cmd = (Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", sys.props("java.class.path"), "graft.BenchS2")).asJava
+        Seq("-cp", sys.props("java.class.path"), "graft.BenchS2") ++ names).asJava
       val pb = new ProcessBuilder(cmd)
       pb.directory(new java.io.File(sys.props("user.dir")))
       pb.redirectErrorStream(false)
       val env = pb.environment()
       env.put("SPARK_GRAFT_SF_DIR", sfDir)
       env.put("SPARK_GRAFT_CPUS", cpus)
-      env.put("SPARK_GRAFT_S2_REFS", refs)
       val p = pb.start()
       // drain stderr on a daemon thread so Spark's logging can't fill
       // the pipe and deadlock the child
@@ -1020,10 +494,9 @@ object BenchS2 {
         try { while (br.readLine() != null) () } catch { case _: Throwable => () }
       })
       errDrain.setDaemon(true); errDrain.start()
-      // stdout is drained on a daemon thread too (ADVICE r13): the
-      // old synchronous read-to-EOF ran BEFORE waitFor, so a wedged
-      // child that kept stdout open blocked the bench forever — the
-      // advertised 12-minute timeout could never fire
+      // stdout is drained on a daemon thread too: a synchronous
+      // read-to-EOF before waitFor would let a wedged child that kept
+      // stdout open block the bench past the 12-minute timeout
       @volatile var found: Option[String] = None
       val outDrain = new Thread(() => {
         val br = new java.io.BufferedReader(new java.io.InputStreamReader(
@@ -1039,64 +512,36 @@ object BenchS2 {
       if (!done) p.destroyForcibly()
       else outDrain.join(10000) // let the drain reach EOF before harvesting
       // a complete S2CHILD line is a valid result even when the child
-      // then dawdled past the deadline — don't discard it and re-run
-      // the whole leg in-JVM (ADVICE r13)
-      found
-    } catch { case _: Throwable => None }
+      // then dawdled past the deadline
+      found.getOrElse("{\"err\":" + jsonStr(
+        if (done) s"session-2 child exited ${p.exitValue} without a result"
+        else "session-2 child timed out after 12 min") + "}")
+    } catch { case e: Throwable =>
+      "{\"err\":" + jsonStr(e.toString.takeWhile(_ != '\n').take(160)) + "}" }
   }
 
-  /** One instrumented session-2 sample of query `n`, with the regs
-    * delta the cause classification used emitted in the JSON itself
-    * (ADVICE r12: a second read point invites divergence). */
+  /** One instrumented session-2 sample of query `n`, with the number
+    * of marker re-registrations it made (`regs`). */
   def s2Sample(s: SparkSession, meter: TaskMeter, sfDir: String,
-      n: String, mainBest: Option[Sample]): String = {
+      n: String): String = {
     val r0 = graft.model.BuildMeter.regCount
     try {
       val smp = measure(s, meter)(SparkEntry.queries(n)(s, sfDir))
       smp.err.foreach(e => throw new RuntimeException(e))
-      val regsDelta = graft.model.BuildMeter.regCount - r0
-      val why = mainBest.map { b =>
-        if (smp.wall <= 1.3 * b.wall) "in-line-with-main-session"
-        // the first post-restart run legitimately does MORE than a
-        // main-session sample: marker re-registration DDL plus the
-        // fresh JVM/session's first execution of the whole chain —
-        // name that before reaching for the contention buckets
-        else if (regsDelta > 0 && smp.wall <= 2.0 * b.wall)
-          s"session2-first-run: $regsDelta marker re-registrations + fresh-session first execution"
-        else if (regsDelta > 0)
-          s"session2-first-run-outlier: $regsDelta marker re-registrations + fresh first execution, but wall > 2x best-main -- see jit/gc/task fields"
-        else cause(smp, b, firstCold = false)
-      }.getOrElse("no-main-sample-reference")
       f"""{"wall":${smp.wall}%.3f,"build_sec":${smp.buildSec}%.3f,""" +
-        s""""regs":$regsDelta,""" +
+        s""""regs":${graft.model.BuildMeter.regCount - r0},""" +
         f""""task_sec":${smp.t.taskSec}%.2f,"jobs":${smp.t.jobs},""" +
         f""""cpu_frac":${smp.t.cpuFrac}%.3f,""" +
         f""""gc_frac":${smp.gc}%.3f,"jit_frac":${smp.jit}%.3f,""" +
         f""""codegen_compiles":${smp.codegenCompiles},"codegen_ms":${smp.codegenMs}%.1f,""" +
-        f""""rdd_disk_mb":${smp.store.rddDiskMb}%.1f,""" +
-        mainBest.map(b => f""""best_main_wall":${b.wall}%.3f,"best_main_task_sec":${b.t.taskSec}%.2f,""").getOrElse("") +
-        s""""cause":${jsonStr(why)}}"""
+        f""""rdd_disk_mb":${smp.store.rddDiskMb}%.1f}"""
     } catch { case e: Throwable =>
       "{\"err\":" + jsonStr(e.toString.takeWhile(_ != '\n').take(120)) + "}" }
   }
 
-  /** Child entrypoint. */
+  /** Child entrypoint: the arguments name the queries to sample. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val refs: Seq[(String, Option[Sample])] =
-      sys.env.getOrElse("SPARK_GRAFT_S2_REFS", "").split(",").toSeq
-        .filter(_.nonEmpty).map { r =>
-          val parts = r.split(":")
-          val wall = parts(1).toDouble
-          def f(i: Int) = if (parts.length > i) parts(i).toDouble else 0.0
-          // real best-main task/spill/cpu/disk baselines (ADVICE r13)
-          val best =
-            if (wall < 0) None
-            else Some(Sample(wall, None, None, 0, 0,
-              Tasks(0, 0, parts(2).toDouble, f(4), 0, 0, f(3)), 0,
-              Store(0, 0, f(5)), 0, 0))
-          (parts(0), best)
-        }
     val spark = buildSession()
     val meter = new TaskMeter
     spark.sparkContext.addSparkListener(meter)
@@ -1104,9 +549,9 @@ object BenchS2 {
     // from the same JVM baseline and the remaining first-sample cost
     // is the QUERY's fresh-session cost, not generic Spark startup
     warmSession(spark, sfDir)
-    val timed = refs.map { case (n, best) =>
-      "\"" + n + "\":{\"first\":" + s2Sample(spark, meter, sfDir, n, best) +
-        ",\"second\":" + s2Sample(spark, meter, sfDir, n, best) + "}"
+    val timed = args.toSeq.map { n =>
+      "\"" + n + "\":{\"first\":" + s2Sample(spark, meter, sfDir, n) +
+        ",\"second\":" + s2Sample(spark, meter, sfDir, n) + "}"
     }
     println("S2CHILD:" +
       (Seq("\"mode\":\"fresh-jvm\"") ++ timed).mkString("{", ",", "}"))

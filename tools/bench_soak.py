@@ -1,38 +1,20 @@
 #!/usr/bin/env python3
-"""Soak analysis over N full bench artifacts (VERDICT r13 #8, r15 #5).
+"""Per-query spread over N full `graft.Bench` artifacts of the same code.
 
 Usage:
-  python3 tools/bench_soak.py run1.json run2.json [run3.json ...] \
-      [--max-p90 X] [--cmd 'SPARK_GRAFT_SF_DIR=... sbt -batch "runMain graft.Bench"'] \
-      [--extra-out FILE]
+  python3 tools/bench_soak.py run1.json run2.json [run3.json ...]
 
 Prints per-run totals, the per-query cold spread (max/min ratio across
-runs), the queries whose spread exceeds 1.3x (the bench's own
-regression threshold — these are the queries where a single-run
-cross-round comparison CANNOT distinguish ambient noise from a real
-regression), and a one-line error-bar summary for the round record.
-
---max-p90 (VERDICT r15 #5): if the computed spread p90 exceeds the
-threshold, the soak window itself was ambient-elevated, which weakens
-every downstream vs_prior comparison. With --cmd given, the tool
-re-runs the bench ONCE (writing --extra-out), then selects the
-N-subset of the N+1 runs with the smallest p90 and reports that
-subset (the dropped run is recorded in the summary as
-`dropped_noisy`). Without --cmd it just exits 3 so a wrapper can
-retry in a quieter window.
-
-The summary carries provenance (generated_unix, git_head, files) so a
-stale bench_soak.json from an earlier round is detectable (ADVICE
-r15: the bench embeds this file verbatim as the round's error bar).
+runs), the queries whose spread exceeds 1.3x, and a one-line error bar
+(median, p90 and max spread over the queries of at least one second).
+It reads the artifacts and writes nothing. Every run given is counted:
+the tool never drops a run, so the error bar is that of the runs as
+measured. For a same-host A/B of two checkouts use `tools/bench_ab.py`.
 """
 import argparse
-import itertools
 import json
-import os
 import statistics
-import subprocess
 import sys
-import time
 
 
 def load(paths):
@@ -54,105 +36,38 @@ def analyze(runs):
         if lo > 0:
             spreads.append((hi / lo, q, lo, hi))
     spreads.sort(reverse=True)
-    ratios = [s[0] for s in spreads if s[3] >= 1.0]
-    med = p90 = None
-    if ratios:
-        med = statistics.median(ratios)
-        p90 = sorted(ratios)[int(0.9 * (len(ratios) - 1))]
-    return names, spreads, med, p90
+    return spreads
 
 
-def report(runs, names, spreads, med, p90, dropped=None):
+def report(runs, spreads):
     for p, j in runs:
         hs = len(j.get("high_steal", []))
-        kg = len(j.get("kind_gap", {}))
         print(f"{p}: total={j['value']:.1f}s n={len(j['queries'])} "
-              f"high_steal={hs} kind_gap_rows={kg}")
+              f"high_steal={hs}")
     noisy = [s for s in spreads if s[0] > 1.3 and s[3] >= 1.0]
     print(f"\nqueries with >1.3x cold spread across runs (>=1s): {len(noisy)}")
     for r, q, lo, hi in noisy[:20]:
         per_run = " ".join(f"{j['queries'][q]:.2f}" for _, j in runs)
         print(f"  {q}: {r:.2f}x  [{per_run}]")
-    ratios = [s[0] for s in spreads if s[3] >= 1.0]
+    ratios = sorted(s[0] for s in spreads if s[3] >= 1.0)
     if ratios:
+        med = statistics.median(ratios)
+        p90 = ratios[int(0.9 * (len(ratios) - 1))]
         print(f"\nerror bar over >=1s queries (n={len(ratios)}): "
-              f"median spread {med:.2f}x, p90 {p90:.2f}x, max {max(ratios):.2f}x")
+              f"median spread {med:.2f}x, p90 {p90:.2f}x, max {ratios[-1]:.2f}x")
     totals = [j["value"] for _, j in runs]
     print(f"totals: min {min(totals):.1f}s max {max(totals):.1f}s "
           f"(spread {max(totals)/min(totals):.2f}x)")
-
-    # Summary artifact the bench embeds verbatim as its "soak" field
-    # (VERDICT r14 #5): run totals, the error bar, and which run is the
-    # median — commit the median run as bench_prior.json and this file
-    # alongside it, and the round artifact carries its own error bar.
-    median_file = sorted(zip(totals, [p for p, _ in runs]))[len(runs) // 2][1]
-    git_head = None
-    try:
-        git_head = subprocess.run(["git", "rev-parse", "--short", "HEAD"],
-                                  capture_output=True, text=True,
-                                  timeout=10).stdout.strip() or None
-    except Exception:
-        pass
-    summary = {
-        "runs": [round(t, 1) for t in totals],
-        "min": round(min(totals), 1),
-        "max": round(max(totals), 1),
-        "median_file": median_file,
-        "n_queries": len(names),
-        "query_spread_median": round(med, 3) if med else None,
-        "query_spread_p90": round(p90, 3) if p90 else None,
-        "files": [p for p, _ in runs],
-        "generated_unix": int(time.time()),
-        "git_head": git_head,
-    }
-    if dropped:
-        summary["dropped_noisy"] = dropped
-    with open("bench_soak.json", "w") as f:
-        json.dump(summary, f)
-    print(f"wrote bench_soak.json: {summary}")
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("files", nargs="+")
-    ap.add_argument("--max-p90", type=float, default=None)
-    ap.add_argument("--cmd", default=None,
-                    help="shell command that runs one bench; the tool sets "
-                         "SPARK_GRAFT_BENCH_OUT for it")
-    ap.add_argument("--extra-out", default="bench_soak_extra.json")
     args = ap.parse_args()
     runs = load(args.files)
     if len(runs) < 2:
         sys.exit("need at least two artifacts")
-
-    names, spreads, med, p90 = analyze(runs)
-    dropped = None
-    if args.max_p90 is not None and p90 is not None and p90 > args.max_p90:
-        print(f"\nsoak spread p90 {p90:.2f}x exceeds --max-p90 "
-              f"{args.max_p90:.2f}x: the soak window itself was "
-              f"ambient-elevated")
-        if not args.cmd:
-            sys.exit(3)
-        print(f"re-running one bench via --cmd -> {args.extra_out}")
-        env = dict(os.environ, SPARK_GRAFT_BENCH_OUT=args.extra_out)
-        subprocess.run(args.cmd, shell=True, check=True, env=env)
-        all_runs = runs + load([args.extra_out])
-        # keep the original N-run width: pick the subset with least p90
-        best = None
-        for sub in itertools.combinations(all_runs, len(runs)):
-            _, _, m, p = analyze(list(sub))
-            if p is not None and (best is None or p < best[0]):
-                best = (p, list(sub), m)
-        if best is not None and best[0] < p90:
-            kept = {p for p, _ in best[1]}
-            dropped = [p for p, _ in all_runs if p not in kept]
-            runs, p90, med = best[1], best[0], best[2]
-            names, spreads, med, p90 = analyze(runs)
-            print(f"retry kept {sorted(kept)} (p90 {p90:.2f}x), "
-                  f"dropped {dropped}")
-        else:
-            print("retry did not improve the spread; keeping original runs")
-    report(runs, names, spreads, med, p90, dropped)
+    report(runs, analyze(runs))
 
 
 if __name__ == "__main__":
