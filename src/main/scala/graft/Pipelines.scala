@@ -535,11 +535,7 @@ object Pipelines {
       minQuality: Double = 0.3, nearDupJaccard: Double = 0.8,
       dfCap: Long = 100000L, md5Hashes: Boolean = false): DataFrame = {
     import graft.functions.TextFunctions._
-    // spread first (round 18): the fingerprint pass is the ledger's
-    // per-doc entrance compute — single-task on unsplittable fixture
-    // scans otherwise (the TextDedup.exactDedup argument)
-    val fp = graft.model.SessionTuning.spread(docs.select(col("doc_id"), col("text")))
-      .withColumn("__fp", fingerprint(col("text")))
+    val fp = docs.select(col("doc_id"), col("text")).withColumn("__fp", fingerprint(col("text")))
     val win = fp.groupBy("__fp").agg(min(col("doc_id")).as("__win"))
     // held (round 17): the winner-annotated relation feeds the exact
     // survivor branch (→ near-dup pairs AND the lang/quality scoring)

@@ -2,6 +2,7 @@ package graft
 
 import graft.model.ExpressionMatrix
 import graft.operators._
+import graft.sources.Fixtures.{table => t}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,9 +18,6 @@ import org.apache.spark.sql.functions._
   * so the driver's hash compare is stable across engines.
   */
 object SparkEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** lineitem as a long-form expression matrix: gene = part, sample =
     * supplier, value = extended price. The transcriptomics operators

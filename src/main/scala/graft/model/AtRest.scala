@@ -8,35 +8,8 @@ import org.apache.spark.sql.catalyst.catalog.CatalogTableType
   * The at-rest protocol (TextQueries.ensureTable) keeps warehouse
   * files + a `_graft_complete.json` marker as the durable state and
   * treats the catalog entry as a per-session cache re-declared from
-  * the marker. Testing the RE-DECLARATION path needs a way to reach
-  * the driver-restart shape inside one JVM: `SparkSession.newSession`
-  * shares `SharedState`'s external catalog, so tables registered by
-  * session 1 are still visible to session 2 and `ensureTable`
-  * early-returns — the re-registration branch never runs (ADVICE
-  * r11: the old gate passed vacuously). */
+  * the marker. */
 object AtRest {
-
-  /** Drop every registered `prefix*` table from the (shared) catalog
-    * WITHOUT touching its warehouse files — the in-JVM equivalent of
-    * a driver restart. `InMemoryCatalog.dropTable` deletes a MANAGED
-    * table's directory, so each entry is first flipped to EXTERNAL;
-    * the files and their build-complete markers survive, and the next
-    * `ensureTable` call must take the marker re-registration branch
-    * (observable via [[BuildMeter.regCount]]). Returns the number of
-    * entries detached. */
-  def detachGraftTables(s: SparkSession, prefix: String = "graft_"): Int = {
-    val cat = s.sessionState.catalog
-    val ext = cat.externalCatalog
-    val db = cat.getCurrentDatabase
-    val tbls = ext.listTables(db).filter(_.toLowerCase.startsWith(prefix))
-    tbls.foreach { t =>
-      val ct = ext.getTable(db, t)
-      if (ct.tableType == CatalogTableType.MANAGED)
-        ext.alterTable(ct.copy(tableType = CatalogTableType.EXTERNAL))
-      s.sql(s"DROP TABLE IF EXISTS `$db`.`$t`")
-    }
-    tbls.size
-  }
 
   /** Fingerprint of a fixture's files — at-rest table names carry it
     * so regenerated testdata can never silently reuse a stale

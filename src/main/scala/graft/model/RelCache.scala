@@ -54,7 +54,9 @@ object RelCache {
     * ones. Returns `df` so call sites can bind it inline. */
   def hold(slot: String, df: DataFrame, keep: Int = 1): DataFrame = {
     require(keep >= 1, s"keep must be at least 1, got $keep")
-    df.persist(StorageLevel.MEMORY_AND_DISK)
+    // a same-plan relation already cached (a warm re-run) is reused:
+    // persisting it again only makes Spark warn
+    if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK)
     val evicted = synchronized {
       // drop same-plan twins' references, keep their cache
       val others = slots.getOrElse(slot, Vector.empty).filterNot(p =>

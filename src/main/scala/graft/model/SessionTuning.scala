@@ -3,7 +3,9 @@ package graft.model
 /** The one session factory ([[session]]) and the host-level tuning
   * it applies (round 17, guide §6 "I/O and file layout"). Every
   * entrypoint builds its session here, so the core count, shuffle
-  * partitioning and SQL extensions are decided in one place.
+  * partitioning and SQL extensions are decided in one place. How an
+  * input scan is split is decided where the input is read
+  * ([[graft.sources.Fixtures]]), not here and not in the operators.
   *
   * Shuffle/spill local directories: Spark defaults its local dirs to
   * `java.io.tmpdir` (/tmp), which on this class of host is a slow
@@ -197,79 +199,6 @@ object SessionTuning {
 
   private[graft] def logPolicyOnce(conf: org.apache.spark.SparkConf): Unit =
     if (policyLogged.compareAndSet(false, true)) System.err.println(policyLine(conf))
-
-  /** Spread a relation whose STATIC scan parallelism is below the
-    * session parallelism (round 17): zero-shuffle derivations put
-    * their per-row compute on the SCAN's partitioning, and a
-    * single-row-group parquet file is an unsplittable 1-task scan
-    * (guide §2.5 "input skew: one huge unsplittable file —
-    * repartition immediately after the read"). Scale-adaptive by
-    * construction: a corpus-scale input arrives in ≥ parallelism
-    * splits and takes the no-op branch, so the exchange is never
-    * added at the scale where it would cost corpus volume. Streaming
-    * inputs pass through untouched (micro-batches own their split).
-    *
-    * Partition counts are read STATICALLY (round 18, VERDICT r17 #2 /
-    * ADVICE r17): the old `df.rdd.getNumPartitions` probe forced a
-    * full QueryExecution per call site, and with AQE on it also
-    * MATERIALIZED every upstream shuffle stage at plan-construction
-    * time — work the returned `repartition()` plan does not reuse.
-    * Now:
-    *  - narrow plans over estimable leaves (file scans, checkpointed
-    *    RDDs, local relations — every shingle/gram/winnow input shape)
-    *    estimate split counts from file bytes / RDD partition arrays,
-    *    zero planning;
-    *  - any other plan contains a shuffle-producing operator, whose
-    *    output parallelism is the session's shuffle partitioning
-    *    already — pass through. AQE may still coalesce a tiny shuffle
-    *    below the parallelism, but probing would EXECUTE it; at toy
-    *    scale those inputs are cheap either way and at corpus scale
-    *    the pass-through is exactly right. */
-  def spread(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    if (df.isStreaming) return df
-    val spark = df.sparkSession
-    val target = spark.sparkContext.defaultParallelism
-    staticPartitionEstimate(df) match {
-      case Some(est) if est < target => df.repartition(target)
-      case _ => df
-    }
-  }
-
-  /** Static scan-parallelism estimate from the ANALYZED plan — no
-    * physical planning, no execution. None = the plan contains a
-    * wide/unknown operator (already shuffle-partitioned downstream of
-    * it) or an inestimable leaf. */
-  private[graft] def staticPartitionEstimate(
-      df: org.apache.spark.sql.DataFrame): Option[Long] = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val conf = df.sparkSession.sessionState.conf
-    val maxSplit = math.max(1L, conf.filesMaxPartitionBytes)
-    def walk(p: LogicalPlan): Option[Long] = p match {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          // per-file splits never merge across files; unsplittable
-          // single-row-group fixtures under-estimate toward 1, which
-          // is the conservative (repartition) direction
-          val files = fs.location.listFiles(Nil, Nil).flatMap(_.files)
-          Some(files.map(f => math.max(1L,
-            (f.getLen + maxSplit - 1) / maxSplit)).sum.max(1L))
-        case _ => None
-      }
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        Some(r.rdd.getNumPartitions.toLong)
-      case _: LocalRelation | _: OneRowRelation => Some(1L)
-      case u: Union => u.children.map(walk).reduce((a, b) =>
-        for (x <- a; y <- b) yield x + y)
-      // narrow, partition-preserving wrappers; everything else
-      // (Aggregate, Join, Window, Sort, Distinct, ...) is wide or
-      // unknown -> None
-      case _: Project | _: Filter | _: Generate | _: SubqueryAlias =>
-        walk(p.children.head)
-      case _ => None
-    }
-    walk(df.queryExecution.analyzed)
-  }
 }
 
 /** Registered by [[SessionTuning.tuned]] as an extra listener: Spark

@@ -40,8 +40,7 @@ object Bpe {
 
   /** (word, freq) from the engine tokenizer — the corpus-facing pass. */
   def wordFreqs(docs: DataFrame, text: String = "text"): DataFrame =
-    graft.model.SessionTuning.spread(docs)
-      .select(explode(tokens(col(text))).as("word"))
+    docs.select(explode(tokens(col(text))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
 
   /** Initial symbol relation: characters plus the terminal `</w>`
@@ -241,8 +240,7 @@ object Bpe {
   def wordPieceVocab(sample: DataFrame, maxPieceLen: Int = 4,
       vocabSize: Int = 200, text: String = "text"): DataFrame = {
     require(maxPieceLen >= 1 && vocabSize >= 1)
-    val wf = graft.model.SessionTuning.spread(sample)
-      .select(explode(tokens(col(text))).as("word"))
+    val wf = sample.select(explode(tokens(col(text))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
     val wli = wf
       .withColumn("l", explode(sequence(lit(1),

@@ -308,6 +308,10 @@ object Normalize {
         s"percentile(cast(gc as double), array(${(1 until bins).map(_.toDouble / bins).mkString(",")})) as e")
       .head().getSeq[Double](0).toArray
     val binExpr = edges.foldLeft(lit(0)) { (acc, e) => acc + (col("gc") > e).cast("int") }
+    // a plain persist, not a keep-1 RelCache slot: concurrent chains
+    // in one session each run cqn (Verify runs four queries at once),
+    // and with a slot one chain's hold released another chain's binned
+    // relation mid-query (q69 once read a null bin that way)
     val binned = y.withColumn("__bin", binExpr)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val knotX = binned.groupBy("__bin").agg(avg("gc").as("x"))
@@ -445,8 +449,8 @@ object Normalize {
     val spark = m.df.sparkSession
     import spark.implicits._
     val wRank = Window.partitionBy("sample_id").orderBy(col("value").asc, col("gene_id").asc)
-    val ranked = m.canonical.df.withColumn("__rk", row_number().over(wRank))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ranked = RelCache.hold("normalize.rsn.ranked",
+      m.canonical.df.withColumn("__rk", row_number().over(wRank)))
     val rankMeans = ranked.groupBy("__rk").agg(avg("value").as("__target"))
     val nPerSample = ranked.groupBy("sample_id").agg(count(lit(1)).as("__n"))
     val anchors = ranked.join(rankMeans, Seq("__rk"))

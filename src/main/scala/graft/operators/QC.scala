@@ -89,11 +89,10 @@ object QC {
       .withColumn("value", coalesce(col("value"), lit(0.0)))
     val stats = grid.groupBy("gene_id")
       .agg(avg("value").as("__mu"), stddev_samp("value").as("__sd"))
-    val scaled = grid.join(broadcast(stats), Seq("gene_id"))
+    val scaled = RelCache.hold("qc.pca.scaled", grid.join(broadcast(stats), Seq("gene_id"))
       .withColumn("x",
         when(col("__sd") > 0, (col("value") - col("__mu")) / col("__sd")).otherwise(lit(0.0)))
-      .select("gene_id", "sample_id", "x")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select("gene_id", "sample_id", "x"))
     val sampleIds = samples.orderBy("sample_id").collect().map(_.getString(0))
     // dual only pays off when the G×G collect is actually large: a
     // G ≤ 256 Gramian is ≤ 0.5 MB, and keeping small inputs primal
@@ -191,10 +190,9 @@ object QC {
     }.toSeq.toDF("sample_id", "__f"))
     val lCols = (0 until k).map(d => sum(col("x") * col("__f")(d)).as(s"__l$d"))
     val gi = genes.zipWithIndex.toDF("gene_id", "__gi")
-    val loadDf = scaled.join(facDf, Seq("sample_id"))
+    val loadDf = RelCache.hold("qc.pcaDual.loadings", scaled.join(facDf, Seq("sample_id"))
       .groupBy("gene_id").agg(lCols.head, lCols.tail: _*)
-      .join(broadcast(gi), Seq("gene_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .join(broadcast(gi), Seq("gene_id")))
     // primal sign rule: flip component d iff its largest-|loading|
     // entry is negative; Scala's maxBy keeps the FIRST max, so the
     // tie-break is lowest gene index — max(struct(abs, -gi, sign))
@@ -289,7 +287,8 @@ object QC {
     // a persisted residual join. Medians use Spark's exact-Percentile
     // interpolation formula verbatim so results are bit-identical to
     // the former SQL passes.
-    val se = mapped.select(col("__ps"), col("gene_id"), col("sample_id"), col("value"))
+    val se = RelCache.hold("qc.nuse.se", mapped
+      .select(col("__ps"), col("gene_id"), col("sample_id"), col("value"))
       .as[(String, String, String, Double)]
       .groupByKey(_._1)
       .flatMapGroups { (ps, it) =>
@@ -318,8 +317,7 @@ object QC {
         acc.iterator.collect { case (s, (n, ss)) if n > 1 =>
           (ps, s, math.sqrt(ss / (n.toDouble * (n - 1))))
         }
-      }.toDF("__ps", "sample_id", "__se")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.toDF("__ps", "sample_id", "__se"))
     val medSe = se.groupBy("__ps")
       .agg(pct("__se", 0.5).as("__medse"))
       .filter(col("__medse") > 0)

@@ -28,13 +28,7 @@ object TextDedup {
     * candidate row per fingerprint per partition), so a key with 10⁶
     * copies costs each task one row, never a single-task sort. */
   def exactDedup(docs: DataFrame, id: String = "doc_id", text: String = "text"): DataFrame =
-    // spread first (round 18): the fingerprint tokenize+md5 is the
-    // chain's per-doc entrance compute, and on the harness's
-    // single-row-group fixtures it otherwise runs as ONE task feeding
-    // the min_by exchange (measured: a 3-4 s single-task stage at the
-    // head of every curation chain; guide §2.5 — repartition
-    // immediately after an unsplittable read). No-op at corpus scale.
-    spreadSmall(docs).withColumn("__fp", fingerprint(col(text)))
+    docs.withColumn("__fp", fingerprint(col(text)))
       .groupBy(col("__fp"))
       .agg(min_by(struct(docs.columns.map(col): _*), col(id)).as("__w"))
       .select(col("__w.*"))
@@ -62,9 +56,7 @@ object TextDedup {
   def dedupAgainstReference(docs: DataFrame, refFp: DataFrame,
       fpCol: String = "fp", text: String = "text",
       expectedItems: Long = -1L, fpp: Double = 0.01): DataFrame = {
-    // spread first (round 18) — the incoming side's fingerprint +
-    // Bloom probe is per-doc entrance compute (see exactDedup)
-    val withFp = spreadSmall(docs).withColumn("__fp", fingerprint(col(text)))
+    val withFp = docs.withColumn("__fp", fingerprint(col(text)))
     val n = if (expectedItems > 0L) expectedItems
             else math.max(refFp.count(), 1L)
     val bf = refFp.select(xxhash64(col(fpCol)).as("__k"))
@@ -470,7 +462,7 @@ object TextDedup {
       id: String = "doc_id", text: String = "text"): DataFrame = {
     val stride = if (stride0 <= 0) chunkTokens else stride0
     require(stride <= chunkTokens, "stride beyond the chunk width would skip tokens")
-    val tok = spreadSmall(docs).select(col(id), posexplode(tokens(col(text))).as(Seq("pos", "tk")))
+    val tok = docs.select(col(id), posexplode(tokens(col(text))).as(Seq("pos", "tk")))
     // positive operands, so floor(a/b) is exact integer division and
     // matches DuckDB's `//` in the oracle replay
     val t = col("pos") - chunkTokens + 1
@@ -510,7 +502,7 @@ object TextDedup {
       id: String = "doc_id", text: String = "text"): DataFrame = {
     require(chunkTokens > 0, "chunkTokens must be positive")
     val c = lit(chunkTokens.toLong)
-    val tok = spreadSmall(docs).select(col(id), posexplode(tokens(col(text))).as(Seq("wpos", "word")))
+    val tok = docs.select(col(id), posexplode(tokens(col(text))).as(Seq("wpos", "word")))
     val wDoc = Window.partitionBy(col(id)).orderBy(col("wpos"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // LEFT join + loud failure: an nSub built from a sampled or stale
@@ -664,20 +656,6 @@ object TextDedup {
     }
   }
 
-  /** Spread a relation whose STATIC partition count is below the
-    * session parallelism (round 17): the shingle/gram/winnow
-    * derivations are now zero-shuffle projections, which puts their
-    * per-row compute on the SCAN's partitioning — and this harness's
-    * fixture tables are single-row-group parquet files, an
-    * unsplittable 1-task scan (guide §2.5 "input skew: one huge
-    * unsplittable file — repartition immediately after the read").
-    * Scale-adaptive by construction, not a local tune: a corpus-scale
-    * input arrives in ≥ parallelism splits and takes the no-op
-    * branch, so no exchange is ever added at the scale where it would
-    * cost corpus volume. */
-  private def spreadSmall(df: DataFrame): DataFrame =
-    graft.model.SessionTuning.spread(df)
-
   /** Distinct shingle rows `(id, extras..., s)` — one zero-shuffle
     * projection ([[shingleArray]]) + explode + distinct. The previous
     * posexplode + doc-keyed lead-window formulation paid an exchange
@@ -685,7 +663,7 @@ object TextDedup {
     * started; only the distinct's (id, s)-keyed exchange remains. */
   def shingleRows(docs: DataFrame, shingleWidth: Int, id: String = "doc_id",
       text: String = "text", extras: Seq[String] = Nil): DataFrame =
-    spreadSmall(docs).select((col(id) +: extras.map(col)) :+
+    docs.select((col(id) +: extras.map(col)) :+
         explode(shingleArray(col(text), shingleWidth)).as("s"): _*)
       .filter(col("s") =!= "")
       .distinct()
@@ -1517,11 +1495,7 @@ object TextDedup {
       struct(flags.zip(flagNames).map { case (f, nm) => f.as(nm) } :+
         flags.reduce(_ && _).as("pass"): _*)
     }
-    // spread first (round 18): the rule battery tokenizes every doc —
-    // on the harness's single-row-group fixtures that compute would
-    // otherwise single-task (the exactDedup entrance argument);
-    // no-op at corpus scale and on exchange-bearing inputs
-    spreadSmall(docs).withColumn("__gf", gf)
+    docs.withColumn("__gf", gf)
       .select((col("*") +: (flagNames :+ "pass").map(f =>
         col("__gf").getField(f).as(f))): _*)
       .drop("__gf")
@@ -1678,8 +1652,7 @@ object TextDedup {
     // whole-stream marker), so the dup decision is unchanged.
     // RepeatedSpanRewriteSpec pins equivalence with the round-17
     // formulation (positions are load-bearing).
-    val base = graft.model.SessionTuning.spread(docs)
-      .select(col(id), tokens(col(text)).as("__toks"))
+    val base = docs.select(col(id), tokens(col(text)).as("__toks"))
     val gramArr = graft.functions.TextFunctions.bindOne(col("__toks")) { t =>
       when(size(t) >= n,
         regexp_extract_all(concat_ws(" ", t),
@@ -1766,7 +1739,7 @@ object TextDedup {
     * relation (parquet metadata at rest). */
   def tfIdfTopK(docs: DataFrame, k: Int = 5,
       id: String = "doc_id", text: String = "text"): DataFrame = {
-    val tok = spreadSmall(docs).select(col(id), explode(tokens(col(text))).as("tk"))
+    val tok = docs.select(col(id), explode(tokens(col(text))).as("tk"))
     val tf = tok.groupBy(col(id), col("tk")).agg(count(lit(1)).as("tf"))
     val dfRel = tf.groupBy("tk").agg(count(lit(1)).as("df"))
     val n = docs.count()
@@ -1831,8 +1804,7 @@ object TextDedup {
     // tokens produce the [""]-marker gram array and are dropped, the
     // posexplode-of-empty behaviour.
     val hOf: Column => Column = g => if (md5Hashes) md5(g) else xxhash64(g)
-    spreadSmall(docs)
-      .select(col(id), shingleArray(col(text), k).as("__g"))
+    docs.select(col(id), shingleArray(col(text), k).as("__g"))
       .filter(element_at(col("__g"), 1) =!= "")
       .select(col(id), explode(array_distinct(
         graft.functions.TextFunctions.bindOne(
@@ -2033,5 +2005,5 @@ object TextDedup {
     // projection as [[shingleRows]], duplicates kept (the counting
     // shape) — replaces the posexplode + exchange + sort + lead-window
     // pipeline; the caller's own "" filter keeps empty docs out
-    spreadSmall(docs).select(col(id), explode(shingleArray(col(text), n)).as("s"))
+    docs.select(col(id), explode(shingleArray(col(text), n)).as("s"))
 }

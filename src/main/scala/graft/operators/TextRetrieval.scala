@@ -2,9 +2,9 @@ package graft.operators
 
 import graft.functions.TextFunctions.tokens
 import graft.functions.TopKPairs.top_k_pairs
+import graft.model.RelCache
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.model.SessionTuning.{spread => sp}
 
 /** Keyword retrieval over the document corpus — the ranking side of
   * the curation toolkit (benchmark decontamination triage, targeted
@@ -45,7 +45,7 @@ object TextRetrieval {
       k1: Double = 1.2, b: Double = 0.75,
       id: String = "doc_id", text: String = "text"): DataFrame = {
     val terms = queries.select(col("term")).distinct()
-    val tok = sp(docs).select(col(id), explode(tokens(col(text))).as("tk"))
+    val tok = docs.select(col(id), explode(tokens(col(text))).as("tk"))
     // The ONE pass over the tokenized corpus: per (doc, query term)
     // counts, with every non-query token falling into the doc's single
     // null-term row (broadcast left join marks query terms). The
@@ -56,11 +56,10 @@ object TextRetrieval {
     // tokenization is the dominant cost. What is cached is the
     // POST-aggregation relation: ≤ |docs|·(|query terms|+1) narrow
     // rows, ~the token-count relation's size, spilled to disk when it
-    // outgrows memory and LRU-evicted after the query completes.
-    val grouped = tok
+    // outgrows memory and released by the next invocation's hold.
+    val grouped = RelCache.hold("textretrieval.bm25TopK.grouped", tok
       .join(broadcast(terms), col("tk") === col("term"), "left").drop("tk")
-      .groupBy(col(id), col("term")).agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col(id), col("term")).agg(count(lit(1)).as("cnt")))
     val dl = grouped.groupBy(col(id)).agg(sum(col("cnt")).as("dl"))
     val tf = grouped.filter(col("term").isNotNull)
       .select(col(id), col("term").as("tk"), col("cnt").as("tf"))
@@ -114,7 +113,7 @@ object TextRetrieval {
     * emit no row. */
   def bigramCrossEntropy(docs: DataFrame,
       id: String = "doc_id", text: String = "text"): DataFrame = {
-    val tok = sp(docs).select(col(id), posexplode(tokens(col(text))).as(Seq("pos", "tk")))
+    val tok = docs.select(col(id), posexplode(tokens(col(text))).as(Seq("pos", "tk")))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col(id)).orderBy(col("pos"))
     val pairs = tok.withColumn("w2", lead(col("tk"), 1).over(w))
       .filter(col("w2").isNotNull)
@@ -165,17 +164,17 @@ object TextRetrieval {
     * Returns (id, n_bigrams, xent_kn). */
   def kneserNeyCrossEntropy(docs: DataFrame, discount: Option[Double] = None,
       id: String = "doc_id", text: String = "text"): DataFrame = {
-    val tok = sp(docs).select(col(id), posexplode(tokens(col(text))).as(Seq("pos", "tk")))
+    val tok = docs.select(col(id), posexplode(tokens(col(text))).as(Seq("pos", "tk")))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col(id)).orderBy(col("pos"))
-    val pairs = tok.withColumn("w2", lead(col("tk"), 1).over(w))
-      .filter(col("w2").isNotNull)
-      .select(col(id), col("tk").as("w1"), col("w2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pairs = RelCache.hold("textretrieval.kneserNey.pairs",
+      tok.withColumn("w2", lead(col("tk"), 1).over(w))
+        .filter(col("w2").isNotNull)
+        .select(col(id), col("tk").as("w1"), col("w2")))
     // bigram type counts: read 4x (follower/continuation counts, the
     // discount scalar, the scoring join) — persist the bounded
     // type-grain relation, not the corpus-grain pair stream
-    val c12 = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val c12 = RelCache.hold("textretrieval.kneserNey.c12",
+      pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")))
     // c(w1·) = Σ_w2 c(w1 w2): derive from the bounded type-grain c12,
     // not a second corpus-grain pass over the pair stream
     val c1 = c12.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
@@ -224,7 +223,7 @@ object TextRetrieval {
   def fertilityFilter(docs: DataFrame, nSub: DataFrame,
       quantile: Double = 0.9, id: String = "doc_id",
       text: String = "text"): DataFrame = {
-    val scored = sp(docs).select(col(id), explode(tokens(col(text))).as("word"))
+    val scored = docs.select(col(id), explode(tokens(col(text))).as("word"))
       .groupBy(col(id), col("word")).agg(count(lit(1)).as("cnt"))
       .join(nSub.select(col("word"), col("n_sub")), Seq("word"), "left")
       .withColumn("n_sub",
@@ -246,7 +245,7 @@ object TextRetrieval {
 
   def unigramCrossEntropy(docs: DataFrame,
       id: String = "doc_id", text: String = "text"): DataFrame = {
-    val tok = sp(docs).select(col(id), explode(tokens(col(text))).as("tk"))
+    val tok = docs.select(col(id), explode(tokens(col(text))).as("tk"))
     val freq = tok.groupBy(col("tk")).agg(count(lit(1)).as("tf"))
     val totals = freq.agg(sum("tf").as("n_total"), count(lit(1)).as("vocab"))
     tok.join(freq, Seq("tk")).crossJoin(broadcast(totals))
@@ -334,7 +333,7 @@ object TextRetrieval {
   def dsirLambda(reference: DataFrame, isTarget: Column,
       hexChars: Int = 2, alpha: Double = 1.0,
       text: String = "text"): DataFrame =
-    lambdaFromCounts(sp(reference)
+    lambdaFromCounts(reference
       .select(isTarget.as("__t"), explode(dsirFeatures(col(text))).as("f"))
       .select(col("__t"), dsirBucket(col("f"), hexChars).as("b"))
       .groupBy("__t", "b").agg(count(lit(1)).as("c")), hexChars, alpha)
@@ -345,11 +344,10 @@ object TextRetrieval {
     // ONE tokenize pass (the BM25 single-scan discipline): the cached
     // relation is per-(doc, bucket) feature counts — ≤ |docs|·16^hexChars
     // narrow rows — read by both the λ fit and the per-doc weights
-    val docBucket = sp(docs)
+    val docBucket = RelCache.hold("textretrieval.dsirSelect.docBucket", docs
       .select(col(id), isTarget.as("__t"), explode(dsirFeatures(col(text))).as("f"))
       .select(col(id), col("__t"), dsirBucket(col("f"), hexChars).as("b"))
-      .groupBy(col(id), col("__t"), col("b")).agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col(id), col("__t"), col("b")).agg(count(lit(1)).as("c")))
     val lam = lambdaFromCounts(docBucket, hexChars, alpha)
     val weights = docBucket.join(broadcast(lam), Seq("b"))
       .groupBy(col(id))
@@ -405,12 +403,11 @@ object TextRetrieval {
       alpha: Double = 1.0, hexChars: Int = 3,
       id: String = "doc_id", text: String = "text"): DataFrame = {
     val nBuckets = math.pow(16.0, hexChars)
-    val docBucket = sp(docs)
+    val docBucket = RelCache.hold("textretrieval.qualityClassifierScores.docBucket", docs
       .select(col(id), isPositive.cast("boolean").as("__y"),
         explode(dsirFeatures(col(text))).as("f"))
       .select(col(id), col("__y"), dsirBucket(col("f"), hexChars).as("b"))
-      .groupBy(col(id), col("__y"), col("b")).agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col(id), col("__y"), col("b")).agg(count(lit(1)).as("c")))
     val classCounts = docBucket.groupBy("b")
       .agg(sum(when(col("__y"), col("c")).otherwise(0L)).as("cp"),
         sum(when(!col("__y"), col("c")).otherwise(0L)).as("cn"))
@@ -442,7 +439,7 @@ object TextRetrieval {
       text: String = "text"): (DataFrame, DataFrame) = {
     val spark = train.sparkSession
     val nBuckets = math.pow(16.0, hexChars)
-    val observed = sp(train)
+    val observed = train
       .select(isPositive.cast("boolean").as("__y"),
         explode(dsirFeatures(col(text))).as("f"))
       .select(col("__y"), dsirBucket(col("f"), hexChars).as("b"))
@@ -476,7 +473,7 @@ object TextRetrieval {
   def qualityClassifierApply(docs: DataFrame, weights: DataFrame,
       prior: DataFrame, hexChars: Int = 3,
       id: String = "doc_id", text: String = "text"): DataFrame = {
-    val docBucket = sp(docs)
+    val docBucket = docs
       .select(col(id), explode(dsirFeatures(col(text))).as("f"))
       .select(col(id), dsirBucket(col("f"), hexChars).as("b"))
       .groupBy(col(id), col("b")).agg(count(lit(1)).as("c"))
@@ -518,7 +515,7 @@ object TextRetrieval {
     * reference corpus plus the (n_total, vocab) scalars. Factored so
     * the batch and streaming scorers cannot drift. */
   def unigramLmFit(lmRef: DataFrame, text: String = "text"): (DataFrame, Long, Long) = {
-    val freq = sp(lmRef).select(explode(tokens(col(text))).as("tk"))
+    val freq = lmRef.select(explode(tokens(col(text))).as("tk"))
       .groupBy("tk").agg(count(lit(1)).as("tf"))
     val t = freq.agg(sum("tf").as("n_total"), count(lit(1)).as("vocab")).head()
     (freq, t.getLong(0), t.getLong(1))
@@ -545,7 +542,7 @@ object TextRetrieval {
       langCol: String = "lang", sep: String = "\n",
       headFrac: Double = 1.0 / 3, midFrac: Double = 1.0 / 3,
       id: String = "doc_id", text: String = "text"): DataFrame = {
-    val para = sp(docs).select(col(id), col(langCol).as("lang"),
+    val para = docs.select(col(id), col(langCol).as("lang"),
       posexplode(split(col(text), java.util.regex.Pattern.quote(sep)))
         .as(Seq("ppos", "para")))
     val ptok = para.select(col(id), col("lang"), col("ppos"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.model.ExpressionMatrix
 import graft.operators._
+import graft.sources.Fixtures.{table => t}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -19,9 +20,6 @@ import org.apache.spark.sql.functions._
   * special functions remain on the driver's weaker rows-only check.
   */
 object ExtraQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** avg price per (gene=partkey, sample=suppkey) — the shared matrix
     * for the kernel queries. Memoized per (session, dir, maxGene) and

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.model.ExpressionMatrix
 import graft.operators._
+import graft.sources.Fixtures.{table => t}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,9 +14,6 @@ import org.apache.spark.sql.functions._
   * l_linestatus, biological group = l_returnflag.
   */
 object MetaQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** `events` with a canonical epoch-micros `us` column, regardless of how
     * the generator encoded `ts`: parquet TIMESTAMP(MICROS) resolves to a

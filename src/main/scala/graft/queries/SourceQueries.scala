@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.model.ExpressionMatrix
 import graft.sources.MatrixIO
+import graft.sources.Fixtures.{table => t}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,9 +23,6 @@ import org.apache.spark.sql.functions._
   * bench clock).
   */
 object SourceQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   private def scratch(dir: String, q: String): String = {
     val tag = new java.io.File(dir).getName.toLowerCase.replaceAll("[^a-z0-9]", "_")

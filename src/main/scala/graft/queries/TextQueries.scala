@@ -3,6 +3,7 @@ package graft.queries
 import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
 import graft.operators.{Similarity, TextDedup, TextRetrieval}
+import graft.sources.Fixtures.{table => t}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,9 +17,6 @@ import org.apache.spark.sql.functions._
   * production path uses xxhash64 (see TextFunctions docs).
   */
 object TextQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** At-rest reference near-dup index (VERDICT-r8 #4): the
     * [[TextDedup.nearDupIndex]] band and shingle relations for the

@@ -496,7 +496,7 @@ class PipelinesSpec extends SparkSpec {
     // Detach the catalog entries first (files + markers untouched),
     // then require the re-registration branch to have actually fired
     // (BuildMeter.regCount) with ZERO rebuilds (BuildMeter.count).
-    val detached = graft.model.AtRest.detachGraftTables(spark)
+    val detached = SpecReferences.detachGraftTables(spark)
     assert(detached > 0, "expected registered graft_* tables to detach")
     val s2 = spark.newSession()
     org.apache.spark.sql.SparkSession.setActiveSession(s2)
@@ -532,7 +532,7 @@ class PipelinesSpec extends SparkSpec {
     // session 2 (driver-restart shape): detach the labeling's catalog
     // entry, require the marker RE-REGISTRATION branch with ZERO
     // rebuilds, and the same result
-    val detached = graft.model.AtRest.detachGraftTables(spark, prefix = "graft_cclab_")
+    val detached = SpecReferences.detachGraftTables(spark, prefix = "graft_cclab_")
     assert(detached > 0, "expected a registered graft_cclab_* table to detach")
     val s2 = spark.newSession()
     org.apache.spark.sql.SparkSession.setActiveSession(s2)

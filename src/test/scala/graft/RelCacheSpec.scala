@@ -97,6 +97,57 @@ class RelCacheSpec extends SparkSpec {
     assert(RelCache.liveSlots.values.sum == 0)
   }
 
+  /** CacheManager's WARN messages while `f` runs. Specs silence Spark
+    * below ERROR, so the logger is raised to WARN for the capture and
+    * set back afterwards. */
+  private def cacheManagerWarnings(f: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val name = "org.apache.spark.sql.execution.CacheManager"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("relcache-spec-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    Configurator.setLevel(name, Level.WARN)
+    val lc = ctx.getConfiguration.getLoggerConfig(name)
+    lc.addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    try f
+    finally {
+      lc.removeAppender(capture.getName)
+      Configurator.setLevel(name, Level.ERROR)
+      capture.stop()
+    }
+    seen.toArray.map(_.toString).toSeq
+  }
+
+  test("a second hold of an already cached same-plan relation logs no re-cache warning and keeps the entry") {
+    SparkEntry.clearQueryCaches()
+    assert(persisted == 0)
+    // a warm re-run: the operator rebuilds the same plan and holds it again
+    def rel() = spark.range(0, 1000, 1, 2).selectExpr("id % 7 AS k").groupBy("k").count()
+    RelCache.hold("relcache.spec.twice", rel()).count()
+    var again: org.apache.spark.sql.DataFrame = null
+    val warnings = cacheManagerWarnings {
+      again = RelCache.hold("relcache.spec.twice", rel())
+      again.count()
+    }
+    assert(!warnings.exists(_.contains("already cached")),
+      s"the re-hold persisted an already cached plan: $warnings")
+    assert(persisted == 1, s"$persisted persisted RDDs after holding one plan twice")
+    assert(again.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "the re-held relation lost its cache entry")
+    assert(again.queryExecution.executedPlan.toString.contains("InMemoryTableScan"),
+      "the re-held relation no longer reads the cached entry")
+    RelCache.releaseAll()
+    assert(persisted == 0)
+  }
+
   test("six holds on one slot inside one query all stay live") {
     SparkEntry.clearQueryCaches()
     assert(persisted == 0)

@@ -9,8 +9,9 @@ import java.nio.file.Files
 /** The one session factory: its defaults, what its sessions carry
   * (including the code-generation policy: a compiled class is reused
   * across the queries of a session and across identical subtrees of
-  * one plan), the stale-dir sweep it runs, and a guard that no other
-  * main-source file builds a session or reads the core-count knob. */
+  * one plan), the stale-dir sweep it runs, a guard that no other
+  * main-source file builds a session or reads the core-count knob, and
+  * a guard that no operator spreads its own input. */
 class SessionTuningSpec extends SparkSpec {
 
   test("default cores: SPARK_GRAFT_CPUS, else every available processor") {
@@ -90,22 +91,45 @@ class SessionTuningSpec extends SparkSpec {
     shm.delete()
   }
 
+  /** Main-source `.scala` files under `f` (a file or a directory),
+    * read from the repository root. */
+  private def sources(f: File): Seq[File] = {
+    assert(f.exists, s"${f.getPath} not found: run from the repository root, " +
+      s"not ${new File(".").getAbsolutePath}")
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(sources)
+    else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+  }
+
+  /** `path:line: text` for every line of `files` that `bad` flags. */
+  private def offending(files: Seq[File])(bad: String => Boolean): Seq[String] = for {
+    f <- files
+    (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.zipWithIndex
+    if bad(line)
+  } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+
   test("only SessionTuning builds a session or reads SPARK_GRAFT_CPUS") {
-    val root = new File("src/main/scala")
-    assert(root.isDirectory, s"run from the repository root, not ${new File(".").getAbsolutePath}")
-    def files(f: File): Seq[File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(files)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     val builder = "SparkSession\\s*\\.\\s*builder".r
-    val offenders = for {
-      f <- files(root) if f.getName != "SessionTuning.scala"
-      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq.zipWithIndex
+    val offenders = offending(sources(new File("src/main/scala"))
+        .filter(_.getName != "SessionTuning.scala")) { line =>
       // handing the knob to a child process's environment is not a read
-      if builder.findFirstIn(line).isDefined ||
+      builder.findFirstIn(line).isDefined ||
         (line.contains("SPARK_GRAFT_CPUS") && !line.contains(".put("))
-    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    }
     assert(offenders.isEmpty,
       "build sessions with SessionTuning.session:\n" + offenders.mkString("\n"))
+  }
+
+  test("no operator spreads its input: scan spreading is decided at the fixture reader") {
+    // keyed repartitions (QC.rle's gene layout) are not entrance
+    // spreads and stay allowed; only the spread helpers are flagged
+    val spread = "SessionTuning\\s*\\.\\s*\\{?\\s*spread\\b|\\bspread\\s*=>|spreadSmall".r
+    val offenders = offending(Seq("src/main/scala/graft/operators",
+        "src/main/scala/graft/Pipelines.scala").map(new File(_)).flatMap(sources)) { line =>
+      spread.findFirstIn(line).isDefined
+    }
+    assert(offenders.isEmpty,
+      "operators take their input's partitioning as given (graft.sources.Fixtures " +
+        "decides it):\n" + offenders.mkString("\n"))
   }
 }
 

@@ -1,7 +1,8 @@
 package graft
 
 import graft.operators.{Bpe, DiffExpr, Similarity}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,8 +10,34 @@ import org.apache.spark.sql.functions._
   * the scalable and grouped paths are checked against, the
   * relational BPE segmentation that `Bpe.segmentFast` is gated
   * against, and the all-pairs embedding near-duplicate form that the
-  * banded `TextDedup.embeddingDupPairs` is measured against. */
+  * banded `TextDedup.embeddingDupPairs` is measured against. Also the
+  * in-JVM driver-restart step the at-rest specs need. */
 object SpecReferences {
+
+  /** Drop every registered `prefix*` table from the (shared) catalog
+    * WITHOUT touching its warehouse files — the in-JVM equivalent of
+    * a driver restart. `SparkSession.newSession` shares `SharedState`'s
+    * external catalog, so without this the tables session 1 registered
+    * stay visible to session 2 and `ensureTable` never takes its
+    * re-registration branch. `InMemoryCatalog.dropTable` deletes a
+    * MANAGED table's directory, so each entry is first flipped to
+    * EXTERNAL; the files and their build-complete markers survive, and
+    * the next `ensureTable` call must take the marker re-registration
+    * branch (observable via `BuildMeter.regCount`). Returns the number
+    * of entries detached. */
+  def detachGraftTables(s: SparkSession, prefix: String = "graft_"): Int = {
+    val cat = s.sessionState.catalog
+    val ext = cat.externalCatalog
+    val db = cat.getCurrentDatabase
+    val tbls = ext.listTables(db).filter(_.toLowerCase.startsWith(prefix))
+    tbls.foreach { t =>
+      val ct = ext.getTable(db, t)
+      if (ct.tableType == CatalogTableType.MANAGED)
+        ext.alterTable(ct.copy(tableType = CatalogTableType.EXTERNAL))
+      s.sql(s"DROP TABLE IF EXISTS `$db`.`$t`")
+    }
+    tbls.size
+  }
 
   /** W5/A13 — Benjamini–Hochberg adjustment as one global window
     * program (`DiffExpr.bhWindow`). Identical to R
