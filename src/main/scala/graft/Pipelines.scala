@@ -426,7 +426,7 @@ object Pipelines {
     // evaluates) — and aliased projections defeat exchange reuse, so
     // without a hold the exact-dedup aggregation re-executes from the
     // source per branch (round 17; the minhashLshPairs shRows/cand
-    // holds' argument, one level up). Same RelCache slot lifecycle.
+    // holds' argument, one level up). Same RelCache hold lifecycle.
     val exact = graft.model.RelCache.hold("pipelines.curation.exact", exact0k)
     val pairs = TextDedup
       .minhashLshPairs(exact, k = 8, bands = 4, shingleWidth = 3,

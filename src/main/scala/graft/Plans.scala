@@ -479,16 +479,18 @@ object Plans {
       bucketKey.fold(w)(k => w.bucketBy(8, k).sortBy(k)).saveAsTable(table)
       spark.table(table)
     }
-    val (refFp, _) = graft.operators.TextDedup.winnowIndex(ref, md5Hashes = true)
-    val plainTbl = save(refFp, "graft_winnow_fp_plain", None)
-    val bucketTbl = save(refFp, "graft_winnow_fp_bucketed", Some("h"))
-    // materialize the incoming fingerprints too, so the counted
-    // exchanges are the JOIN's alone, and force the at-scale no-
-    // broadcast regime (the bucketedNearDupDemo convention)
-    val (incFp, _) = graft.operators.TextDedup.winnowIndex(inc, md5Hashes = true)
-    val incTbl = save(incFp.select(col("h"), col("doc_id").as("inc_id")),
-      "graft_winnow_fp_incoming", None)
-    graft.model.RelCache.release("textdedup.winnowIndex")
+    // the index builds' holds go once the tables are written
+    val (plainTbl, bucketTbl, incTbl) = graft.model.RelCache.scope {
+      val (refFp, _) = graft.operators.TextDedup.winnowIndex(ref, md5Hashes = true)
+      // materialize the incoming fingerprints too, so the counted
+      // exchanges are the JOIN's alone, and force the at-scale no-
+      // broadcast regime (the bucketedNearDupDemo convention)
+      val (incFp, _) = graft.operators.TextDedup.winnowIndex(inc, md5Hashes = true)
+      (save(refFp, "graft_winnow_fp_plain", None),
+        save(refFp, "graft_winnow_fp_bucketed", Some("h")),
+        save(incFp.select(col("h"), col("doc_id").as("inc_id")),
+          "graft_winnow_fp_incoming", None))
+    }
     val prevThreshold =
       spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -87,44 +87,11 @@ object ScaleProbe {
       if (c == 0) df
       else df.withColumn("vec_id", col("vec_id") + c * keyShift))
 
-    // 100× chain probe (`runMain graft.ScaleProbe chain100x`): the
-    // brief's bar is 100×, the table above is 10×-deep — this derives
-    // a 100-copy supplier/lineitem axis (part unshifted: the chain's
-    // gene cap holds that axis fixed, exactly like a wider cohort on
-    // the same panel) for ONLY the tables the cheapest full chain
-    // (q68) reads, and wall-clocks the chain at 1× vs 100×. Sample
-    // axis: 2k → 200k samples through CQN → ComBat → SD filter →
-    // voom → arrayWeights REML → eBayes.
-    if (args.contains("chain100x")) {
-      val copies100 = 100
-      val dst100 = s"target/scale/sf10x-v$derivationVersion-c$copies100"
-      val replicate100 = replicateInto(src, dst100, copies100) _
-      replicate100("supplier", (df, c) =>
-        df.withColumn("s_suppkey", col("s_suppkey") + c * keyShift))
-      replicate100("lineitem", (df, c) =>
-        df.withColumn("l_suppkey", col("l_suppkey") + c * keyShift)
-          .withColumn("l_orderkey", col("l_orderkey") + c * keyShift))
-      replicate100("part", (df, c) =>
-        if (c == 0) df
-        else df.withColumn("p_partkey", col("p_partkey") + c * keyShift))
-      spark.range(1000000L).selectExpr("sum(id)").collect()
-      def oneChain(dir: String): Double = {
-        val t0 = System.nanoTime()
-        SparkEntry.queries("q68_e1_chain")(spark, dir).queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val small = math.min(oneChain(src), oneChain(src))
-      val big = oneChain(dst100) // one sample: the 100× run self-warms
-      println(f"[scale] q68_e1_chain(100x)  sf0.1=$small%8.2fs 100x=$big%8.2fs ratio=${big / small}%6.2f")
-      println(f"""[scale-json] {"copies":$copies100,"queries":{"q68_e1_chain_100x":{"sf01":$small%.3f,"x100":$big%.3f,"ratio":${big / small}%.3f}}}""")
-      spark.stop(); return
-    }
-
     // 100× CURATION probe (`runMain graft.ScaleProbe curation100x`):
-    // the corpus-side counterpart of chain100x — 100 perturbed copies
-    // of `documents` through the FULL E4 curation chain (q79: exact
-    // dedup, banded near-dup, lang-id, quality, repetition filter,
-    // benchmark decontamination, PII scrub, token stats). Per-copy
+    // 100 perturbed copies of `documents` through the FULL E4
+    // curation chain (q79: exact dedup, banded near-dup, lang-id,
+    // quality, repetition filter, benchmark decontamination, PII
+    // scrub, token stats). Per-copy
     // text perturbation (`e` → `e<c>`) keeps the corpus genuinely
     // distinct; docs with no `e` stay verbatim across copies and form
     // real 100-member dup clusters — the exact-dedup stage's job.
@@ -151,100 +118,6 @@ object ScaleProbe {
       val big = oneCuration(dst100) // one sample: the 100× run self-warms
       println(f"[scale] $cq(100x) sf0.1=$small%8.2fs 100x=$big%8.2fs ratio=${big / small}%6.2f")
       println(f"""[scale-json] {"copies":$copies100,"queries":{"${cq}_100x":{"sf01":$small%.3f,"x100":$big%.3f,"ratio":${big / small}%.3f}}}""")
-      spark.stop(); return
-    }
-
-    // E3 META-CHAIN 100× probe (`runMain graft.ScaleProbe meta100x`):
-    // the q70 chain (pair ICC → negative-ICC drop → per-platform
-    // eBayes topTable → ICC-weighted Stouffer) at 100× GENES — the
-    // axis that actually grows at corpus scale (the SCALING.md
-    // argument; the cohort axis is contract-bounded). sf0.1 lineitem
-    // carries 20k parts, so the gene cap scales 100 → 10,000 with no
-    // derived parquet. Dominant term: the tiled ICC gramian's O(G·s²)
-    // treeAggregate passes plus the per-gene eBayes relations — all
-    // linear in G, no quadratic anywhere.
-    if (args.contains("meta100x")) {
-      import graft.model.ExpressionMatrix
-      val li0 = spark.read.parquet(s"$src/lineitem.parquet")
-      val groups = spark.read.parquet(s"$src/supplier.parquet").select(
-        col("s_suppkey").cast("string").as("sample_id"),
-        when(col("s_nationkey") % 2 === 0, "A").otherwise("B").as("group"))
-        .localCheckpoint(true)
-      def chain(cap: Int): Double = {
-        val li = li0.filter(col("l_partkey") <= cap)
-        def mat(status: String) = ExpressionMatrix(
-          li.filter(col("l_linestatus") === status)
-            .groupBy(col("l_partkey"), col("l_suppkey"))
-            .agg(avg("l_extendedprice").as("value"))
-            .select(col("l_partkey").cast("string").as("gene_id"),
-              col("l_suppkey").cast("string").as("sample_id"), col("value")))
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        graft.Pipelines.metaAnalysis(Seq("O" -> mat("O"), "F" -> mat("F")),
-          groups, "A", "B").queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      spark.range(1000000L).selectExpr("sum(id)").collect()
-      val small = math.min(chain(100), chain(100))
-      val big = chain(10000) // one sample: the 100× run self-warms
-      println(f"[scale] q70_e3_chain(100x genes) G=100=$small%8.2fs G=10000=$big%8.2fs ratio=${big / small}%6.2f")
-      println(f"""[scale-json] {"queries":{"q70_e3_chain_gene100x":{"g100":$small%.3f,"g10000":$big%.3f,"ratio":${big / small}%.3f}}}""")
-      spark.stop(); return
-    }
-
-    // E3 100× COHORT probe (`runMain graft.ScaleProbe cohort100x`):
-    // VERDICT-r9 #8. The cohort axis is contract-bounded in the
-    // reference (hundreds of samples), and the engine's ICC gramian
-    // makes that bound ARCHITECTURAL: the samples×samples moment
-    // matrices (X₁ᵀX₁, X₂ᵀX₂, X₁ᵀX₂) are tiled for TASK memory
-    // (`spark.graft.icc.tileBytes`) but assembled and broadcast whole
-    // — 3·s²·8 bytes, ~240 GB at s = 100k, out of any broadcast
-    // envelope regardless of tiling. The honest 100× cohort span that
-    // COMPLETES therefore runs from the sf0.01 base (100 suppliers):
-    // 100 copies → 10,000 samples through the FULL q70 E3 chain
-    // (pair ICC → negative-ICC drop → per-platform eBayes topTable →
-    // ICC-weighted Stouffer), gene axis fixed. Dominant term: the ICC
-    // quadratic forms O(G·s²) — 10⁴× the 1× work — absorbed into more
-    // treeAggregate passes by the tile structure, not an OOM (the
-    // round-4 failure mode this guard exists for).
-    if (args.contains("cohort100x")) {
-      import graft.model.ExpressionMatrix
-      val base = sys.env.getOrElse("SPARK_GRAFT_COHORT_BASE",
-        "/root/testdata/sf0.01")
-      val copies100 = 100
-      val dstC = s"target/scale/cohort-v1-c$copies100"
-      val replicateC = replicateInto(base, dstC, copies100) _
-      replicateC("supplier", (df, c) =>
-        df.withColumn("s_suppkey", col("s_suppkey") + c * keyShift))
-      replicateC("lineitem", (df, c) =>
-        df.withColumn("l_suppkey", col("l_suppkey") + c * keyShift)
-          .withColumn("l_orderkey", col("l_orderkey") + c * keyShift))
-      def chain(dir: String): Double = {
-        val li = spark.read.parquet(s"$dir/lineitem.parquet")
-          .filter(col("l_partkey") <= 100)
-        val groups = spark.read.parquet(s"$dir/supplier.parquet").select(
-          col("s_suppkey").cast("string").as("sample_id"),
-          when(col("s_nationkey") % 2 === 0, "A").otherwise("B").as("group"))
-          .localCheckpoint(true)
-        def mat(status: String) = ExpressionMatrix(
-          li.filter(col("l_linestatus") === status)
-            .groupBy(col("l_partkey"), col("l_suppkey"))
-            .agg(avg("l_extendedprice").as("value"))
-            .select(col("l_partkey").cast("string").as("gene_id"),
-              col("l_suppkey").cast("string").as("sample_id"), col("value")))
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        graft.Pipelines.metaAnalysis(Seq("O" -> mat("O"), "F" -> mat("F")),
-          groups, "A", "B").queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      spark.range(1000000L).selectExpr("sum(id)").collect()
-      val small = math.min(chain(base), chain(base))
-      val big = chain(dstC) // one sample: the 100× run self-warms
-      println(f"[scale] q70_e3_chain(100x cohort) s=100=$small%8.2fs " +
-        f"s=10000=$big%8.2fs ratio=${big / small}%6.2f " +
-        "(G fixed at 100; dominant term the O(G*s^2) ICC quadratic forms)")
-      println(f"""[scale-json] {"copies":$copies100,"queries":{"q70_e3_chain_cohort100x":{"s100":$small%.3f,"s10000":$big%.3f,"ratio":${big / small}%.3f}}}""")
       spark.stop(); return
     }
 

@@ -77,7 +77,7 @@ object SparkEntry {
   def clearQueryCaches(): Unit = {
     graft.queries.ExtraQueries.clearCaches()
     graft.operators.Similarity.clearCaches()
-    // operator-held relations (the RelCache slot registry) release
+    // operator-held relations (RelCache holds) release
     // first so the registry holds no dangling references to blocks
     // the blanket sweep below is about to drop anyway
     graft.model.RelCache.releaseAll()

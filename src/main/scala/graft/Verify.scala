@@ -18,7 +18,9 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // Queries run on a small thread pool — Spark schedules concurrent
     // jobs, so independent query dumps overlap their stages and the
-    // wall time drops ~3x vs sequential.
+    // wall time drops ~3x vs sequential. Each query is one RelCache
+    // scope: its holds go when its dump is written, and no other
+    // query's hold can release a relation it still reads.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     // Local-iteration subset: SPARK_GRAFT_ONLY=<regex> restricts the
     // dump (and the oracle json) to matching query names. The driver
@@ -35,7 +37,7 @@ object Verify {
           // driver's hash compare is bit-sensitive.
           import org.apache.spark.sql.functions.{col, lit}
           import org.apache.spark.sql.types.DoubleType
-          try {
+          try graft.model.RelCache.scope {
             val df = fn(spark, sfDir)
             val fixed = df.select(df.schema.fields.map { f =>
               if (f.dataType == DoubleType) (col(f.name) + lit(0.0)).as(f.name)

@@ -2,90 +2,103 @@ package graft.model
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
+import scala.util.control.NonFatal
 
-/** Session-lifetime registry for operator-persisted relations — the
-  * enforced form of the "caller-must-sweep" contract
-  * ([[graft.operators.TextDedup.minhashLshPairs]] and the incremental
-  * index operators persist intermediates that several plan branches
-  * share; the results are lazy, so the operator itself can never know
-  * when it is safe to unpersist).
+/** Lifetime registry for operator-persisted relations. Operators
+  * persist intermediates that several plan branches share
+  * ([[graft.operators.TextDedup.minhashLshPairs]], the incremental
+  * index operators, the DE and QC stage inputs); their results are
+  * lazy, so the operator itself can never know when it is safe to
+  * unpersist. The query that made a hold knows: like each reference
+  * R script's intermediates, a hold lives while its query runs.
   *
-  * Contract (VERDICT r9 #7):
-  *  - every operator persist goes through [[hold]] under a per-
-  *    operator slot name; a RE-invocation of the same operator
-  *    releases the oldest invocation's blocks beyond the slot's `keep`
-  *    depth, so a long-lived session holds at most `keep` live
-  *    invocations' blocks per operator (steady-state bounded by code,
-  *    not by a comment);
-  *  - [[release]]/[[releaseAll]] are the explicit close for callers
-  *    that want the blocks gone before the next invocation (the
-  *    session cache sweep [[graft.SparkEntry.clearQueryCaches]] calls
-  *    [[releaseAll]], so bench cold samples stay honest-cold).
+  * One lifetime rule:
+  *  - a [[hold]] belongs to the innermost open [[scope]] of the thread
+  *    that made it. Threads started inside a scope (an
+  *    `Overlap.inParallel` pool) inherit it, the way they inherit the
+  *    job group. The scope's exit releases its holds, whether the body
+  *    returned or threw;
+  *  - a hold made outside any scope belongs to the session and is
+  *    released only by [[releaseAll]], which the cache sweep
+  *    [[graft.SparkEntry.clearQueryCaches]] calls. Nothing is evicted
+  *    in between, so a lazy chain built before another one still reads
+  *    its holds when its action runs.
   *
-  * Re-invocation with an IDENTICAL plan (a bench warm sample re-
-  * building the same query) must NOT drop the cache it just re-used:
-  * Spark's CacheManager keys entries by canonicalized plan, so
-  * unpersisting the previous invocation's same-plan DataFrame would
-  * evict the new invocation's entry too. [[hold]] therefore forgets a
-  * same-plan (`sameResult`) predecessor without unpersisting it.
-  *
-  * `keep` (round 18, VERDICT r17 #7): operators invoked several times
-  * while building ONE query (bhAdjustScalable per contrast/platform,
-  * moderatedT per platform) pass [[keepPerQuery]], so a later
-  * invocation never releases blocks an earlier invocation's branches
-  * still need at action time.
-  *
-  * Unpersisting a persisted-but-still-referenced relation is always
-  * CORRECT (branches recompute from lineage) — this registry manages
-  * memory lifecycle, never results. */
+  * A release unpersists a relation only when no other live holder
+  * (another open scope, or the session) holds a `sameResult` plan:
+  * Spark's CacheManager keys entries by plan, so two concurrent queries
+  * that build the same relation share one entry. Unpersisting a relation
+  * that a running query still reads is NOT harmless: under Verify's
+  * four concurrent queries it once failed q69 with `ROW_VALUE_IS_NULL`.
+  * Scopes are what rule that out; [[releaseAll]] empties every holder,
+  * open scopes included, so nothing may call it while queries run.
+  * Slot names are labels only ([[liveSlots]]). */
 object RelCache {
-  /** `keep` for operators invoked once per platform or contrast inside
-    * one query. The reference's ceiling is one invocation per
-    * platform: 9 microarray platforms + RNA-seq = 10. Below that, a
-    * later platform's invocation releases an earlier one's blocks while
-    * the query still reads them (still correct: the branches recompute
-    * from lineage). */
-  val keepPerQuery = 10
+  private final class Holder {
+    val held = mutable.ArrayBuffer.empty[(String, DataFrame)]
+  }
 
-  private val slots = scala.collection.mutable.Map.empty[String, Vector[DataFrame]]
+  private val session = new Holder
+  private val open = mutable.LinkedHashSet.empty[Holder]
+  private val current = new InheritableThreadLocal[Holder]
+  private def holders: Seq[Holder] = open.toSeq :+ session
 
-  /** Persist `df` (MEMORY_AND_DISK) under `slot`, keeping the `keep`
-    * most recent distinct-plan relations there and releasing older
-    * ones. Returns `df` so call sites can bind it inline. */
-  def hold(slot: String, df: DataFrame, keep: Int = 1): DataFrame = {
-    require(keep >= 1, s"keep must be at least 1, got $keep")
-    // a same-plan relation already cached (a warm re-run) is reused:
-    // persisting it again only makes Spark warn
-    if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK)
-    val evicted = synchronized {
-      // drop same-plan twins' references, keep their cache
-      val others = slots.getOrElse(slot, Vector.empty).filterNot(p =>
-        try df.queryExecution.analyzed.sameResult(p.queryExecution.analyzed)
-        catch { case _: Throwable => false })
-      slots(slot) = others.takeRight(keep - 1) :+ df
-      others.dropRight(keep - 1)
+  /** Run `body` as one query scope: holds made while it runs, on this
+    * thread or threads it starts, are released when it exits. Scopes
+    * nest; an inner scope releases only its own holds. */
+  def scope[T](body: => T): T = {
+    val outer = current.get
+    val mine = new Holder
+    synchronized(open += mine)
+    current.set(mine)
+    try body
+    finally {
+      current.set(outer)
+      synchronized {
+        open -= mine
+        val others = holders.flatMap(_.held.map(_._2))
+        mine.held.foreach { case (_, df) =>
+          if (!others.exists(sameResult(df, _))) unpersistQuietly(df)
+        }
+        mine.held.clear()
+      }
     }
-    evicted.foreach(unpersistQuietly)
+  }
+
+  /** Persist `df` (MEMORY_AND_DISK) for the innermost open scope, or for
+    * the session outside any scope. Returns `df` so call sites can bind
+    * it inline. */
+  def hold(slot: String, df: DataFrame): DataFrame = synchronized {
+    // a same-plan relation already cached (a warm re-run, or another
+    // query's hold) is shared: persisting it again only makes Spark warn
+    if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK)
+    // a thread can outlive the scope it inherited: its holds go to the
+    // session, where the sweep still finds them
+    val owner = Option(current.get).filter(open.contains).getOrElse(session)
+    owner.held += slot -> df
     df
   }
 
-  /** Explicitly release one operator slot's blocks. */
-  def release(slot: String): Unit =
-    synchronized(slots.remove(slot)).foreach(_.foreach(unpersistQuietly))
-
-  /** Explicit close for the whole registry — every held block is
-    * unpersisted and the bookkeeping cleared. */
-  def releaseAll(): Unit = {
-    val all = synchronized { val v = slots.values.flatten.toSeq; slots.clear(); v }
+  /** The sweep: every holder, open scopes included, is emptied and its
+    * relations unpersisted. */
+  def releaseAll(): Unit = synchronized {
+    val all = holders.flatMap(_.held.map(_._2))
+    holders.foreach(_.held.clear())
     all.foreach(unpersistQuietly)
   }
 
-  /** Slots currently holding blocks, with their live relation counts
+  /** Slots currently holding relations, with their live hold counts
     * (spec introspection). */
-  def liveSlots: Map[String, Int] =
-    synchronized(slots.map { case (k, v) => k -> v.size }.toMap)
+  def liveSlots: Map[String, Int] = synchronized {
+    holders.flatMap(_.held).groupBy(_._1).map { case (slot, hs) => slot -> hs.size }
+  }
+
+  private def sameResult(a: DataFrame, b: DataFrame): Boolean =
+    try a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)
+    catch { case NonFatal(_) => false }
 
   private def unpersistQuietly(df: DataFrame): Unit =
     try df.unpersist(blocking = false)
-    catch { case _: Throwable => () } // a stopped session has no blocks to free
+    catch { case NonFatal(_) => () } // a stopped session has no blocks to free
 }

@@ -134,8 +134,6 @@ object Batch {
     * row-level standardized mean added back at the end. */
   private def combatCore(standardized: DataFrame, iterations: Int,
       parametric: Boolean, nonparametricGeneCap: Int): ExpressionMatrix = {
-    // each chain runs ComBat once and stage-checkpoints its output, so
-    // one live relation per slot (keep = 1) is enough
     val z = RelCache.hold("batch.combat.z", standardized
       .select("gene_id", "sample_id", "batch", "__center", "sigma2", "z"))
     val gb = RelCache.hold("batch.combat.gb", z.groupBy("gene_id", "batch")

@@ -228,10 +228,6 @@ object DiffExpr {
     // gene-grain bounded; executed TWICE (the hyperparameter moment
     // collect below, then the returned plan) — persist so the stats
     // lineage (for the chains: the whole upstream fit) runs once.
-    // Rolling RelCache slot (round 18): metaAnalysis invokes this per
-    // platform inside one query, so the per-invocation blocks roll
-    // out after `keep` invocations instead of accumulating for the
-    // session (VERDICT r17 #7).
     val perGene = RelCache.hold("diffexpr.moderatedt.pergene",
       stats.filter(col(groupCol).isin(groupA, groupB))
       .groupBy(col(gene))
@@ -244,7 +240,7 @@ object DiffExpr {
       .filter(col("k") === 2 && col("n_tot") > 2 && col("ma").isNotNull && col("mb").isNotNull)
       .withColumn("df_resid", col("n_tot") - 2)
       .withColumn("s2", col("ss_resid") / col("df_resid"))
-      .filter(col("s2") > 0), keep = RelCache.keepPerQuery)
+      .filter(col("s2") > 0))
     // method-of-moments on z = log(s2): E[z] and Var[z] give (d0, s0).
     // Null-guarded: an empty perGene (every gene filtered) leaves all
     // three moments NULL, and a single gene leaves zvar NULL — both
@@ -296,8 +292,7 @@ object DiffExpr {
     import spark.implicits._
     // see moderatedT: GLS stats split df (n_obs) from information (n)
     val nDf = if (stats.columns.contains("n_obs")) col("n_obs") else col("n")
-    // see moderatedT: two executions (moments collect + output plan);
-    // rolling RelCache slot, same lifecycle rationale
+    // see moderatedT: two executions (moments collect + output plan)
     val perGene = RelCache.hold("diffexpr.moderatedtall.pergene",
       stats
       .groupBy(col(gene))
@@ -306,7 +301,7 @@ object DiffExpr {
       .filter(col("n_tot") > col("k"))
       .withColumn("df_resid", col("n_tot") - col("k"))
       .withColumn("s2", col("ss_resid") / col("df_resid"))
-      .filter(col("s2") > 0), keep = RelCache.keepPerQuery)
+      .filter(col("s2") > 0))
     // null-guarded like moderatedT: empty/single-gene moment rows
     // degrade to the d0 = 1e6 branch instead of an NPE
     val moments = perGene
@@ -364,10 +359,10 @@ object DiffExpr {
     val cells = joined.groupBy("gene_id", groupCol).agg(avg("value").as("__mu"))
     // gene×sample bounded; referenced by BOTH the unit decomposition
     // and the per-gene group count below — persist or the cell-mean
-    // join lineage executes twice (round 17; sweep-owned lifecycle)
+    // join lineage executes twice (round 17)
     val resid = RelCache.hold("diffexpr.dupcorr.resid",
       joined.join(cells, Seq("gene_id", groupCol))
-        .withColumn("__e", col("value") - col("__mu")), keep = RelCache.keepPerQuery)
+        .withColumn("__e", col("value") - col("__mu")))
     val unit = resid.groupBy(col("gene_id"), col("unit"))
       .agg(avg("__e").as("__eu"), count(lit(1)).as("__m"),
            sum(col("__e") * col("__e")).as("__se2"))
@@ -600,11 +595,10 @@ object DiffExpr {
     // persistence each branch re-executed the ENTIRE upstream lineage
     // — for the DE chains that meant the voom/GLS fit ran ~5× inside
     // one topTable action (round 17: q82's physical plan carried 186
-    // exchanges and re-scanned the checkpointed matrix 8×). Persists
-    // go through rolling RelCache slots (round 18, VERDICT r17 #7):
-    // one query may invoke BH per contrast/platform, so slots roll
-    // instead of releasing the previous invocation mid-query.
-    val base = RelCache.hold("diffexpr.bhadjust.base", df, keep = RelCache.keepPerQuery)
+    // exchanges and re-scanned the checkpointed matrix 8×). One query
+    // may invoke BH per contrast/platform; every invocation's holds
+    // live until that query's RelCache scope exits.
+    val base = RelCache.hold("diffexpr.bhadjust.base", df)
     // n as a DRIVER scalar (round 18, the DE-chain job-floor fix):
     // counting the persisted base materializes it once and replaces
     // the broadcast-count subquery stage inside the action — and the
@@ -628,7 +622,7 @@ object DiffExpr {
         .withColumn("__pid", spark_partition_id())
       val wLocal = Window.partitionBy("__pid").orderBy(orderAsc: _*)
       val withLrk = RelCache.hold("diffexpr.bhadjust.lrk",
-        ranged.withColumn("__lrk", row_number().over(wLocal)), keep = RelCache.keepPerQuery)
+        ranged.withColumn("__lrk", row_number().over(wLocal)))
       val wOff = Window.partitionBy(lit(0)).orderBy(col("__pid").asc)
         .rowsBetween(Window.unboundedPreceding, -1)
       val offs = withLrk.groupBy("__pid").agg(count(lit(1)).as("__cnt"))
@@ -641,7 +635,7 @@ object DiffExpr {
       val wRevLocal = Window.partitionBy("__pid").orderBy(col("__rk").desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val withLmin = RelCache.hold("diffexpr.bhadjust.lmin",
-        cand.withColumn("__lmin", min("__cand").over(wRevLocal)), keep = RelCache.keepPerQuery)
+        cand.withColumn("__lmin", min("__cand").over(wRevLocal)))
       val wRevOff = Window.partitionBy(lit(0)).orderBy(col("__pid").desc)
         .rowsBetween(Window.unboundedPreceding, -1)
       val sufmins = withLmin.groupBy("__pid").agg(min("__cand").as("__pmin"))

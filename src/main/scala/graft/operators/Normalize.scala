@@ -34,10 +34,9 @@ object Normalize {
     val wRank = Window.partitionBy(m.sampleCol).orderBy(m.valueCol.asc, m.geneCol.asc)
     // the ranked relation feeds the rank-mean aggregation AND the
     // join back — persist, or the per-sample sort window (and the
-    // whole upstream) executes twice (round 17); rolling RelCache
-    // slot so a long-lived session stays bounded (round 18)
+    // whole upstream) executes twice (round 17)
     val ranked = RelCache.hold("normalize.quantile.ranked",
-      m.df.withColumn("__rk", row_number().over(wRank)), keep = RelCache.keepPerQuery)
+      m.df.withColumn("__rk", row_number().over(wRank)))
     val rankMeans = ranked.groupBy(col("__rk")).agg(avg(m.valueCol).as("__rkmean"))
     val normed = ranked.join(rankMeans, Seq("__rk"))
       .select(m.geneCol, m.sampleCol, col("__rkmean").as(m.value))
@@ -104,7 +103,7 @@ object Normalize {
     val obs = RelCache.hold("normalize.voom.obs",
       y.join(cells, Seq("gene_id", groupCol))
         .select(col("gene_id"), col("sample_id"), col(groupCol), col("value"),
-          col("__loglib"), col("__mu")), keep = RelCache.keepPerQuery)
+          col("__loglib"), col("__mu")))
     // per-gene trend points (genes with residual df and nonzero SS),
     // collected in the fit's ordering (sx, gene) — gene-grain bounded
     val pts = obs.groupBy("gene_id")
@@ -308,12 +307,7 @@ object Normalize {
         s"percentile(cast(gc as double), array(${(1 until bins).map(_.toDouble / bins).mkString(",")})) as e")
       .head().getSeq[Double](0).toArray
     val binExpr = edges.foldLeft(lit(0)) { (acc, e) => acc + (col("gc") > e).cast("int") }
-    // a plain persist, not a keep-1 RelCache slot: concurrent chains
-    // in one session each run cqn (Verify runs four queries at once),
-    // and with a slot one chain's hold released another chain's binned
-    // relation mid-query (q69 once read a null bin that way)
-    val binned = y.withColumn("__bin", binExpr)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val binned = RelCache.hold("normalize.cqn.binned", y.withColumn("__bin", binExpr))
     val knotX = binned.groupBy("__bin").agg(avg("gc").as("x"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     val medians = binned.groupBy("sample_id", "__bin")

@@ -36,8 +36,7 @@ object QC {
     * exchange"). */
   def rle(m: ExpressionMatrix): DataFrame = {
     val parts = m.df.sparkSession.sessionState.conf.numShufflePartitions
-    val df = RelCache.hold("qc.rle.in",
-      m.df.repartition(parts, m.geneCol), keep = RelCache.keepPerQuery)
+    val df = RelCache.hold("qc.rle.in", m.df.repartition(parts, m.geneCol))
     val med = df.groupBy(m.geneCol)
       .agg(expr(s"percentile(${m.value}, 0.5)").as("__med"))
     df.join(med, Seq(m.gene))
@@ -236,7 +235,7 @@ object QC {
     // the M/A join — see [[rle]] (round 18, the rmaBackground pattern)
     val parts = m.df.sparkSession.sessionState.conf.numShufflePartitions
     val base = RelCache.hold("qc.mastats.in",
-      m.canonical.df.repartition(parts, col("gene_id")), keep = RelCache.keepPerQuery)
+      m.canonical.df.repartition(parts, col("gene_id")))
     val ref = base.groupBy("gene_id")
       .agg(expr("percentile(value, 0.5)").as("__ref"))
     base.join(ref, Seq("gene_id"))

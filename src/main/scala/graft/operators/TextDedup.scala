@@ -86,12 +86,9 @@ object TextDedup {
     * viral-shingle fan-out exactly as in [[minhashLshPairs]].
     *
     * Lifecycle: both shingle relations are persisted (each feeds
-    * several plan branches) through the [[graft.model.RelCache]] slot
-    * registry — a RE-invocation releases the previous invocation's
-    * blocks, so a long-lived session holds at most one invocation's
-    * blocks per operator; [[graft.model.RelCache.releaseAll]] (or the
-    * session sweep [[graft.SparkEntry.clearQueryCaches]]) is the
-    * explicit close. */
+    * several plan branches) as [[graft.model.RelCache]] holds, which
+    * live until the calling query's scope exits (outside a scope,
+    * until the session sweep [[graft.SparkEntry.clearQueryCaches]]). */
   def nearDupAgainstReference(incoming: DataFrame, reference: DataFrame,
       minJaccard: Double = 0.5, k: Int = 8, bands: Int = 4,
       shingleWidth: Int = 3, md5Hashes: Boolean = false,
@@ -1396,9 +1393,8 @@ object TextDedup {
     // without this the corpus tokenizes and simhash-fingerprints TWICE
     // per run (measured: q36 cold 12.6 s in the r8 bench; the bench's
     // honest-cold cache sweep removed the accidental reuse that hid
-    // it). Lifecycle: held in the RelCache slot registry — a
-    // re-invocation releases the previous blocks; releaseAll/the
-    // session sweep is the explicit close.
+    // it). Lifecycle: a RelCache hold, released with the calling
+    // query's scope.
     val blocks = fp.select(col(id), col("simhash"),
       explode(array((0 until nBlocks).map(bInd =>
         concat_ws(":", lit(bInd.toString),
@@ -1832,7 +1828,7 @@ object TextDedup {
     * the denominator is the document's true fingerprint mass. The
     * fingerprint relation is persisted (it feeds sizes + both join
     * sides — aliased projections defeat exchange reuse, the q36
-    * lesson) through the [[graft.model.RelCache]] slot registry, the
+    * lesson) as a [[graft.model.RelCache]] hold, the
     * [[minhashLshPairs]] lifecycle. */
   def winnowOverlap(docs: DataFrame, k: Int = 4, window: Int = 4,
       minShared: Long = 2, dfCap: Long = Long.MaxValue,
@@ -1965,10 +1961,9 @@ object TextDedup {
     * decision stored with the index); incoming sizes come from the
     * uncapped relation so denominators stay true fingerprint mass.
     *
-    * Lifecycle: the incoming fingerprint relation is held in the
-    * [[graft.model.RelCache]] slot registry (it feeds the candidate
-    * join and the size aggregation), the [[minhashLshPairs]]
-    * contract. */
+    * Lifecycle: the incoming fingerprint relation is a
+    * [[graft.model.RelCache]] hold (it feeds the candidate join and
+    * the size aggregation), the [[minhashLshPairs]] lifecycle. */
   def containmentAgainstIndex(incoming: DataFrame, refFp: DataFrame,
       refSizes: DataFrame, k: Int = 4, window: Int = 4,
       minShared: Long = 2, minContainment: Double = 0.8,

@@ -42,12 +42,11 @@ object TextQueries {
           val ref = t(s, dir, "documents").filter(col("doc_id") % 7 < 3)
           TextDedup.nearDupIndex(ref, md5Hashes = true)
         }
-        ensureTable(s, bandsTbl, key, Some((8, "band")), validateCount = true)(built._1)
-        ensureTable(s, shTbl, key, Some((8, "s")), validateCount = true)(built._2)
-        // release through the registry (the relation was held by
-        // nearDupIndex's slot) so liveSlots stays truthful; a no-op
-        // when both tables re-registered from a previous session
-        graft.model.RelCache.release("textdedup.nearDupIndex")
+        // the build's holds go when both tables are written
+        graft.model.RelCache.scope {
+          ensureTable(s, bandsTbl, key, Some((8, "band")), validateCount = true)(built._1)
+          ensureTable(s, shTbl, key, Some((8, "s")), validateCount = true)(built._2)
+        }
       }
     }
     (s.table(bandsTbl), s.table(shTbl))
@@ -413,9 +412,10 @@ object TextQueries {
           val ref = t(s, dir, "documents").filter(col("doc_id") % 7 < 3)
           TextDedup.winnowIndex(ref, k = 4, window = 4, md5Hashes = true)
         }
-        ensureTable(s, fpTbl, key, Some((8, "h")), validateCount = true)(built._1)
-        ensureTable(s, szTbl, key, None, validateCount = true)(built._2)
-        graft.model.RelCache.release("textdedup.winnowIndex")
+        graft.model.RelCache.scope {
+          ensureTable(s, fpTbl, key, Some((8, "h")), validateCount = true)(built._1)
+          ensureTable(s, szTbl, key, None, validateCount = true)(built._2)
+        }
       }
     }
     (s.table(fpTbl), s.table(szTbl))
@@ -451,9 +451,10 @@ object TextQueries {
           val (fp1, _) = TextDedup.winnowIndexDelete(fp0, sz0, takedown)
           TextDedup.winnowIndexCompact(fp1, dfCap = 1)
         }
-        ensureTable(s, fpTbl, key, Some((8, "h")), validateCount = true)(built._1)
-        ensureTable(s, szTbl, key, None, validateCount = true)(built._2)
-        graft.model.RelCache.release("textdedup.winnowIndexCompact")
+        graft.model.RelCache.scope {
+          ensureTable(s, fpTbl, key, Some((8, "h")), validateCount = true)(built._1)
+          ensureTable(s, szTbl, key, None, validateCount = true)(built._2)
+        }
       }
     }
     (s.table(fpTbl), s.table(szTbl))
@@ -482,9 +483,10 @@ object TextQueries {
           val (_, sh1) = TextDedup.nearDupIndexDelete(bands0, sh0, takedown)
           TextDedup.nearDupIndexCompact(sh1, md5Hashes = true, dfCap = 1)
         }
-        ensureTable(s, bandsTbl, key, Some((8, "band")), validateCount = true)(built._1)
-        ensureTable(s, shTbl, key, Some((8, "s")), validateCount = true)(built._2)
-        graft.model.RelCache.release("textdedup.nearDupIndexCompact")
+        graft.model.RelCache.scope {
+          ensureTable(s, bandsTbl, key, Some((8, "band")), validateCount = true)(built._1)
+          ensureTable(s, shTbl, key, Some((8, "s")), validateCount = true)(built._2)
+        }
       }
     }
     (s.table(bandsTbl), s.table(shTbl))

@@ -2,49 +2,66 @@ package graft
 
 import graft.model.RelCache
 import graft.operators.TextDedup
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-/** The persist-lifecycle contract (VERDICT r9 #7): operators that
-  * persist shared intermediates hold them in [[RelCache]] slots, a
-  * re-invocation releases the previous invocation's blocks, and
-  * releaseAll is the explicit close — so a long-lived session can
-  * chain incremental invocations without leaking MEMORY_AND_DISK
-  * blocks, enforced by code rather than a caller-must-sweep comment. */
+/** Gates a task until another thread has made its hold (the concurrent
+  * spec below). Tasks of a local session run in this JVM, so the UDF
+  * reaches the latches through this object. */
+object RelCacheSpecGate {
+  @volatile var started = new java.util.concurrent.CountDownLatch(1)
+  @volatile var held = new java.util.concurrent.CountDownLatch(1)
+  def reset(): Unit = {
+    started = new java.util.concurrent.CountDownLatch(1)
+    held = new java.util.concurrent.CountDownLatch(1)
+  }
+  def pass(): Boolean = {
+    started.countDown()
+    held.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    true
+  }
+}
+
+/** The persist-lifecycle contract: operators hold shared intermediates
+  * in [[RelCache]], a hold lives until the query scope that made it
+  * exits (each test here is one scope, through [[SparkSpec]]), and
+  * releaseAll is the sweep — so neither a concurrent query nor a later
+  * chain can release a relation a query still reads, and a long-lived
+  * session leaks no MEMORY_AND_DISK blocks past its queries. */
 class RelCacheSpec extends SparkSpec {
   import spark.implicits._
 
   private def persisted: Int = spark.sparkContext.getPersistentRDDs.size
+
+  /** Runs `body` on a new thread, which inherits this thread's scope. */
+  private def fork[T](body: => T): java.util.concurrent.FutureTask[T] = {
+    val task = new java.util.concurrent.FutureTask[T](() => body)
+    new Thread(task).start()
+    task
+  }
+
+  private def await[T](task: java.util.concurrent.FutureTask[T]): T =
+    task.get(120, java.util.concurrent.TimeUnit.SECONDS)
 
   test("no leaked blocks after two chained incremental near-dup invocations") {
     SparkEntry.clearQueryCaches()
     assert(persisted == 0, "stale persisted RDDs before the scenario")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val ref = docs.filter(col("doc_id") % 7 < 3)
-    // two DIFFERENT crawls against the same reference — the chained-
-    // session scenario (same plans would share cache entries and prove
-    // nothing about accumulation)
-    val crawl1 = docs.filter(col("doc_id") % 7 === 3)
-    val crawl2 = docs.filter(col("doc_id") % 7 === 4)
-    val r1 = TextDedup.nearDupAgainstReference(crawl1, ref,
-      minJaccard = 0.3, md5Hashes = true)
-    r1.count()
-    val afterFirst = persisted
-    assert(afterFirst > 0, "the operator should persist its shared relations")
-    val r2 = TextDedup.nearDupAgainstReference(crawl2, ref,
-      minJaccard = 0.3, md5Hashes = true)
-    r2.count()
-    // steady state: the second invocation REPLACED the first's blocks
-    // (same-plan reference relation may be shared; nothing accumulates)
-    assert(persisted <= afterFirst,
-      s"chained invocations accumulated blocks: $afterFirst -> $persisted")
-    // every slot the operator used is a keep = 1 slot
-    assert(RelCache.liveSlots.nonEmpty && RelCache.liveSlots.values.forall(_ == 1),
-      s"a keep = 1 slot holds more than one invocation: ${RelCache.liveSlots}")
-    // the explicit close drops everything the operators held
-    RelCache.releaseAll()
-    assert(persisted == 0,
-      s"releaseAll left ${spark.sparkContext.getPersistentRDDs.size} blocks")
-    assert(RelCache.liveSlots.isEmpty)
+    // two DIFFERENT crawls against the same reference, each its own
+    // query — the chained-session scenario
+    Seq(3, 4).foreach { c =>
+      RelCache.scope {
+        TextDedup.nearDupAgainstReference(docs.filter(col("doc_id") % 7 === c), ref,
+          minJaccard = 0.3, md5Hashes = true).count()
+        assert(persisted > 0, "the operator should persist its shared relations")
+        assert(RelCache.liveSlots.nonEmpty && RelCache.liveSlots.values.forall(_ == 1),
+          s"one invocation held a slot twice: ${RelCache.liveSlots}")
+      }
+      assert(persisted == 0, s"crawl $c's scope left $persisted blocks")
+      assert(RelCache.liveSlots.isEmpty)
+    }
   }
 
   test("re-invocation with an IDENTICAL plan keeps the shared cache entry live") {
@@ -72,29 +89,28 @@ class RelCacheSpec extends SparkSpec {
     assert(persisted == 0)
   }
 
-  test("rolling slots stay bounded over many invocations and sweep clean") {
+  test("scoped bhAdjustScalable invocations leave no blocks behind and sweep clean") {
     SparkEntry.clearQueryCaches()
     assert(persisted == 0)
     val docs = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select(col("l_orderkey").as("id"),
         (col("l_extendedprice") % 1.0).as("p"))
-    // more DIFFERENT-plan invocations of the bhAdjustScalable persists
-    // than the slot keeps: the rolling family must cap at its keep
-    // depth, not accumulate (VERDICT r17 #7 — Verify-style sessions
-    // never sweep)
-    val keep = RelCache.keepPerQuery
-    val counts = (1 to keep + 3).map { i =>
-      graft.operators.DiffExpr.bhAdjustScalable(
-        docs.filter(col("id") % 17 === i), "p",
-        Seq(col("id"))).count()
-      persisted
+    // many DIFFERENT-plan invocations, one query each (Verify-style
+    // sessions never sweep): every query's holds go with its scope
+    (1 to 13).foreach { i =>
+      RelCache.scope {
+        graft.operators.DiffExpr.bhAdjustScalable(
+          docs.filter(col("id") % 17 === i), "p", Seq(col("id"))).count()
+        assert(RelCache.liveSlots.get("diffexpr.bhadjust.base").contains(1))
+      }
+      assert(persisted == 0, s"invocation $i's scope left $persisted blocks")
     }
-    assert(counts.last <= counts(keep),
-      s"rolling holds kept accumulating: $counts")
-    assert(RelCache.liveSlots.getOrElse("diffexpr.bhadjust.base", 0) <= keep)
+    // outside a query scope the holds are the session's until the sweep
+    graft.operators.DiffExpr.bhAdjustScalable(docs, "p", Seq(col("id"))).count()
+    assert(RelCache.liveSlots.get("diffexpr.bhadjust.base").contains(1))
     RelCache.releaseAll()
-    assert(persisted == 0, s"releaseAll left rolling blocks: ${RelCache.liveSlots}")
-    assert(RelCache.liveSlots.values.sum == 0)
+    assert(persisted == 0, s"releaseAll left blocks: ${RelCache.liveSlots}")
+    assert(RelCache.liveSlots.isEmpty)
   }
 
   /** CacheManager's WARN messages while `f` runs. Specs silence Spark
@@ -154,15 +170,16 @@ class RelCacheSpec extends SparkSpec {
     // one operator invoked per platform while one query is built: every
     // invocation's relation is still read when the query runs
     val base = spark.range(0, 100, 1, 2).toDF("id")
-    val held = (1 to 6).map(i => RelCache.hold("relcache.spec.per_query",
-      base.selectExpr(s"id * $i AS v"), keep = RelCache.keepPerQuery))
-    val q = held.reduce(_ union _)
-    assert(q.count() == 600)
-    assert(RelCache.liveSlots.get("relcache.spec.per_query").contains(6),
-      s"a hold released an earlier one of the same query: ${RelCache.liveSlots}")
-    assert(persisted == 6, s"$persisted of 6 held relations are persisted")
-    RelCache.releaseAll()
-    assert(persisted == 0)
+    RelCache.scope {
+      val held = (1 to 6).map(i => RelCache.hold("relcache.spec.per_query",
+        base.selectExpr(s"id * $i AS v")))
+      val q = held.reduce(_ union _)
+      assert(q.count() == 600)
+      assert(RelCache.liveSlots.get("relcache.spec.per_query").contains(6),
+        s"a hold released an earlier one of the same query: ${RelCache.liveSlots}")
+      assert(persisted == 6, s"$persisted of 6 held relations are persisted")
+    }
+    assert(persisted == 0, s"the query's scope left $persisted blocks")
   }
 
   test("rolling same-plan re-hold keeps the shared cache entry live") {
@@ -200,23 +217,121 @@ class RelCacheSpec extends SparkSpec {
     assert(persisted == 0 && RelCache.liveSlots.isEmpty)
   }
 
-  test("Batch.combat holds its two intermediates: three runs stay bounded by keep") {
+  test("Batch.combat holds its two intermediates until its query's scope exits") {
     SparkEntry.clearQueryCaches()
     assert(persisted == 0)
-    // three DIFFERENT inputs: each run's relations have new plans, so a
-    // session-lifetime persist would leave 3 × 2 blocks behind
+    // three DIFFERENT inputs, one query each: a session-lifetime persist
+    // would leave 3 × 2 blocks behind
     val batches = (1 to 8).map(s => (s"s$s", if (s <= 4) "b1" else "b2"))
       .toDF("sample_id", "batch")
     (1 to 3).foreach { run =>
       val m = graft.model.ExpressionMatrix((for (g <- 1 to 20; s <- 1 to 8) yield
         (s"g$g", s"s$s", g * 0.5 + ((g * 7 + s * 3 + run) % 11) * 0.3 + (if (s <= 4) 1.0 else 0.0)))
         .toDF("gene_id", "sample_id", "value"))
-      assert(graft.operators.Batch.combat(m, batches).df.count() == 160)
+      RelCache.scope {
+        assert(graft.operators.Batch.combat(m, batches).df.count() == 160)
+        assert(RelCache.liveSlots.get("batch.combat.z").contains(1) &&
+          RelCache.liveSlots.get("batch.combat.gb").contains(1), s"${RelCache.liveSlots}")
+      }
+      assert(persisted == 0, s"$persisted persisted RDDs after ComBat run $run's scope")
     }
-    assert(RelCache.liveSlots.get("batch.combat.z").contains(1) &&
-      RelCache.liveSlots.get("batch.combat.gb").contains(1), s"${RelCache.liveSlots}")
-    assert(persisted <= 2, s"$persisted persisted RDDs after three ComBat runs (keep = 1, 2 slots)")
-    RelCache.releaseAll()
+  }
+
+  test("concurrent holds on one slot: another query's hold leaves a running query's relation cached") {
+    SparkEntry.clearQueryCaches()
+    RelCacheSpecGate.reset()
+    val gate = udf((_: Long) => RelCacheSpecGate.pass())
+    val n = 20000L
+    // query A holds the slot and runs its action; query B holds the same
+    // slot with a different plan while A's tasks are running
+    val a = fork {
+      RelCache.scope {
+        val rel = RelCache.hold("relcache.spec.concurrent",
+          spark.range(0, n, 1, 4).selectExpr("id", "id * 3 AS v"))
+        val total = rel.where(gate(col("id"))).agg(sum("v")).head().getLong(0)
+        (rel, total, rel.storageLevel)
+      }
+    }
+    assert(RelCacheSpecGate.started.await(60, java.util.concurrent.TimeUnit.SECONDS),
+      "query A's action never started")
+    val b = fork {
+      try RelCache.scope {
+        RelCache.hold("relcache.spec.concurrent",
+          spark.range(0, n, 1, 4).selectExpr("id", "id * 5 AS v"))
+      } finally RelCacheSpecGate.held.countDown()
+    }
+    await(b)
+    val (rel, total, levelInQuery) = await(a)
+    assert(total == 3 * n * (n - 1) / 2, s"query A read a wrong sum: $total")
+    assert(levelInQuery != StorageLevel.NONE,
+      "query B's hold released query A's relation while A ran")
+    assert(rel.storageLevel == StorageLevel.NONE, "A's scope exit kept its relation")
+    assert(persisted == 0)
+  }
+
+  test("a lazy chain keeps its holds while a later chain is built: the first minhashLshPairs reads its cache") {
+    SparkEntry.clearQueryCaches()
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    def pairs(d: DataFrame) = TextDedup.minhashLshPairs(d, k = 8, bands = 4,
+      shingleWidth = 3, minJaccard = 0.3, md5Hashes = true)
+    // crawl A's chain, then crawl B's, and only then A's action (the
+    // perfbench text_curation order)
+    val first = pairs(docs.filter(col("doc_id") % 2 === 0))
+    pairs(docs.filter(col("doc_id") % 2 === 1))
+    first.collect()
+    assert(first.queryExecution.executedPlan.toString.contains("InMemoryTableScan"),
+      s"the first chain's holds were released before its action: ${RelCache.liveSlots}")
+  }
+
+  test("two scopes holding one plan share it: it stays cached until the last scope exits") {
+    SparkEntry.clearQueryCaches()
+    def rel() = spark.range(0, 1000, 1, 2).selectExpr("id % 11 AS k").groupBy("k").count()
+    val aHeld, bHeld = new java.util.concurrent.CountDownLatch(1)
+    val aExit, bExit = new java.util.concurrent.CountDownLatch(1)
+    def query(held: java.util.concurrent.CountDownLatch,
+        exit: java.util.concurrent.CountDownLatch) = fork {
+      RelCache.scope {
+        RelCache.hold("relcache.spec.shared", rel()).count()
+        held.countDown()
+        exit.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+    }
+    val a = query(aHeld, aExit)
+    val b = query(bHeld, bExit)
+    assert(aHeld.await(60, java.util.concurrent.TimeUnit.SECONDS) &&
+      bHeld.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    aExit.countDown(); await(a)
+    assert(rel().storageLevel != StorageLevel.NONE,
+      "the first scope's exit released a plan the other scope still holds")
+    assert(RelCache.liveSlots.get("relcache.spec.shared").contains(1))
+    bExit.countDown(); await(b)
+    assert(rel().storageLevel == StorageLevel.NONE, "the last scope's exit kept the plan")
+    assert(persisted == 0)
+  }
+
+  test("a nested scope releases only its own holds, and releaseAll leaves an open scope nothing to release") {
+    SparkEntry.clearQueryCaches()
+    val raw = RelCache.scope {
+      val outer = RelCache.hold("relcache.spec.outer",
+        spark.range(0, 100, 1, 2).selectExpr("id * 2 AS v"))
+      val inner = RelCache.scope {
+        val r = RelCache.hold("relcache.spec.inner",
+          spark.range(0, 100, 1, 2).selectExpr("id * 3 AS v"))
+        r.count()
+        r
+      }
+      assert(inner.storageLevel == StorageLevel.NONE, "the inner scope kept its hold")
+      assert(outer.storageLevel != StorageLevel.NONE, "the inner scope released the outer's hold")
+      assert(RelCache.liveSlots == Map("relcache.spec.outer" -> 1), s"${RelCache.liveSlots}")
+      // the sweep empties open scopes too
+      RelCache.releaseAll()
+      assert(outer.storageLevel == StorageLevel.NONE && RelCache.liveSlots.isEmpty)
+      // a persist made after the sweep is not this scope's to release
+      outer.persist()
+    }
+    assert(raw.storageLevel != StorageLevel.NONE,
+      "the scope's exit released a relation the sweep had already taken from it")
+    raw.unpersist()
     assert(persisted == 0)
   }
 }

@@ -686,11 +686,11 @@ class StreamOpsSpec extends SparkSpec {
     val ref = docsB.filter(col("doc_id") % 7 < 3).select("doc_id", "text")
     val inc = docsB.filter(col("doc_id") % 7 >= 3).select("doc_id", "text")
     // batch answer: the q142 operator's keep set at the q142 thresholds
-    val (refFp, refSizes) = TextDedup.winnowIndex(ref, k = 4, window = 4,
-      md5Hashes = true)
-    val refFpStatic = refFp.localCheckpoint(true)
-    val refSizesStatic = refSizes.localCheckpoint(true)
-    graft.model.RelCache.release("textdedup.winnowIndex")
+    val (refFpStatic, refSizesStatic) = graft.model.RelCache.scope {
+      val (refFp, refSizes) = TextDedup.winnowIndex(ref, k = 4, window = 4,
+        md5Hashes = true)
+      (refFp.localCheckpoint(true), refSizes.localCheckpoint(true))
+    }
     val batchKept = TextDedup.containmentAgainstIndex(inc, refFpStatic,
         refSizesStatic, k = 4, window = 4, minShared = 2,
         minContainment = 0.8, md5Hashes = true)
@@ -737,10 +737,11 @@ class StreamOpsSpec extends SparkSpec {
     val ref = Seq((1L, a),
       (2L, "a completely different english story about the sea and the ships that sail it " * 3))
       .toDF("doc_id", "text")
-    val (fp0r, sz0r) = TextDedup.winnowIndex(ref, k = 4, window = 4,
-      md5Hashes = true)
-    val fp0 = fp0r.localCheckpoint(true); val sz0 = sz0r.localCheckpoint(true)
-    graft.model.RelCache.release("textdedup.winnowIndex")
+    val (fp0, sz0) = graft.model.RelCache.scope {
+      val (fp0r, sz0r) = TextDedup.winnowIndex(ref, k = 4, window = 4,
+        md5Hashes = true)
+      (fp0r.localCheckpoint(true), sz0r.localCheckpoint(true))
+    }
     val (fp1r, sz1r) = TextDedup.winnowIndexDelete(fp0, sz0, Seq(1L).toDF("doc_id"))
     val fp1 = fp1r.localCheckpoint(true); val sz1 = sz1r.localCheckpoint(true)
     def verdicts(fp: org.apache.spark.sql.DataFrame,
@@ -778,14 +779,16 @@ class StreamOpsSpec extends SparkSpec {
     val b = "an entirely separate english essay about rivers and the valleys they carve through stone " * 3
     val ref0 = Seq((1L, a)).toDF("doc_id", "text")
     val accepted = Seq((11L, b)).toDF("doc_id", "text") // crawl-1 acceptance
-    val (fp0r, sz0r) = TextDedup.winnowIndex(ref0, k = 4, window = 4,
-      md5Hashes = true)
-    val fp0 = fp0r.localCheckpoint(true); val sz0 = sz0r.localCheckpoint(true)
-    graft.model.RelCache.release("textdedup.winnowIndex")
-    val (fp1r, sz1r) = TextDedup.winnowIndexUpsert(fp0, sz0, accepted,
-      k = 4, window = 4, md5Hashes = true)
-    val fp1 = fp1r.localCheckpoint(true); val sz1 = sz1r.localCheckpoint(true)
-    graft.model.RelCache.release("textdedup.winnowIndexUpsert")
+    val (fp0, sz0) = graft.model.RelCache.scope {
+      val (fp0r, sz0r) = TextDedup.winnowIndex(ref0, k = 4, window = 4,
+        md5Hashes = true)
+      (fp0r.localCheckpoint(true), sz0r.localCheckpoint(true))
+    }
+    val (fp1, sz1) = graft.model.RelCache.scope {
+      val (fp1r, sz1r) = TextDedup.winnowIndexUpsert(fp0, sz0, accepted,
+        k = 4, window = 4, md5Hashes = true)
+      (fp1r.localCheckpoint(true), sz1r.localCheckpoint(true))
+    }
     def verdicts(fp: org.apache.spark.sql.DataFrame,
         sz: org.apache.spark.sql.DataFrame, name: String): Map[Long, Boolean] = {
       val input = MemoryStream[(Timestamp, Long, String)]

@@ -11,7 +11,7 @@ set -u
 N=${1:-6}
 SF=${2:-/root/testdata/sf0.01}
 LOG=${3:-/tmp/q142_repro.log}
-cd /root/repo
+cd "$(dirname "$0")/.."
 echo "=== q142 repro: $N iterations over $SF ===" | tee -a "$LOG"
 for i in $(seq 1 "$N"); do
   out="/tmp/q142_repro_$i"
