@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.SampleSheet
 import graft.model.{ExpressionMatrix, Workspace}
 import graft.operators._
 import org.apache.spark.sql.DataFrame
@@ -117,13 +118,20 @@ object Pipelines {
     val filtered = ExpressionMatrix(Workspace.stageCheckpoint(
       Filters.topFracBySdNonZero(adjusted, sdFrac)
         .canonical.df, "comb_closed_filtered"))
-    // REML arrayWeights enter the fit as WLS sufficient statistics;
-    // with technical replicates declared, the fit is the exact GLS
-    // with the REML duplicateCorrelation consensus — limma's
-    // `lmFit(eset, design, weights=arrayw, block=...,
-    // correlation=corfit$consensus)` gls.series branch
-    // (DiffExpression_closedPlatform.R:456-507)
-    val stats = replicates match {
+    DiffExpr.moderatedTopTable(
+      closedPlatformStats(filtered, groups, replicates, remlIters, remlTol),
+      "group", groupA, groupB)
+  }
+
+  /** The E1 fit over the filtered matrix: REML arrayWeights enter the
+    * fit as WLS sufficient statistics; with technical replicates
+    * declared, the fit is the exact GLS with the REML
+    * duplicateCorrelation consensus — limma's `lmFit(eset, design,
+    * weights=arrayw, block=..., correlation=corfit$consensus)`
+    * gls.series branch (DiffExpression_closedPlatform.R:456-507). */
+  private def closedPlatformStats(filtered: ExpressionMatrix, groups: DataFrame,
+      replicates: Option[DataFrame], remlIters: Int, remlTol: Double): DataFrame =
+    replicates match {
       case Some(reps) =>
         // the REML array-weight fit and the duplicate-correlation
         // consensus are INDEPENDENT eager fits over the same filtered
@@ -138,16 +146,14 @@ object Pipelines {
         ))(_.apply())
         val weights = weightsAny.asInstanceOf[DataFrame]
         val rho = rhoAny.asInstanceOf[Double]
-        val obsW = filtered.canonical.df
-          .join(broadcast(weights), Seq("sample_id"))
+        // array weights are gene-constant per-observation weights
+        val obsW = SampleSheet.collect(weights, "weights", Seq("weight"))
+          .attach(filtered.canonical.df)
         DiffExpr.groupStatsGlsObs(obsW, groups, reps, rho)
       case None => DiffExpr.groupStatsWeighted(filtered, groups,
         DiffExpr.arrayWeightsReml(filtered, groups,
           maxIter = remlIters, tol = remlTol))
     }
-    DiffExpr.topTable(
-      DiffExpr.moderatedT(stats, "group", groupA, groupB).withColumnRenamed("p_mod", "p"))
-  }
 
   /** E1 multi-contrast — the reference's actual invocation shape: with
     * k ≥ 2 groups declared, ONE run fits all C(k,2) pairwise contrasts
@@ -183,24 +189,8 @@ object Pipelines {
     val filtered = ExpressionMatrix(Workspace.stageCheckpoint(
       Filters.topFracBySdNonZero(adjusted, sdFrac)
         .canonical.df, "comb_closed_multi_filtered"))
-    val stats = replicates match {
-      case Some(reps) =>
-        // overlap the two independent fits — see closedPlatformDE
-        val Seq(weightsAny, rhoAny) = Overlap.inParallel[() => Any, Any](Seq(
-          () => DiffExpr.arrayWeightsReml(filtered, groups,
-            maxIter = remlIters, tol = remlTol),
-          () => DiffExpr.duplicateCorrelationReml(filtered, reps, groups)._2
-        ))(_.apply())
-        val weights = weightsAny.asInstanceOf[DataFrame]
-        val rho = rhoAny.asInstanceOf[Double]
-        val obsW = filtered.canonical.df
-          .join(broadcast(weights), Seq("sample_id"))
-        DiffExpr.groupStatsGlsObs(obsW, groups, reps, rho)
-      case None => DiffExpr.groupStatsWeighted(filtered, groups,
-        DiffExpr.arrayWeightsReml(filtered, groups,
-          maxIter = remlIters, tol = remlTol))
-    }
-    val de = DiffExpr.moderatedTAll(stats)
+    val de = DiffExpr.moderatedTAll(
+      closedPlatformStats(filtered, groups, replicates, remlIters, remlTol))
     DiffExpr.decideTests(
       DiffExpr.bhAdjustGrouped(de, "p_mod", Seq(col("contrast")), Seq(col("gene_id"))),
       pAdj = "p_bh", lfc = "log2fc", alpha = alpha, minLfc = minLfc)
@@ -224,8 +214,7 @@ object Pipelines {
       replicates: Option[DataFrame] = None, voomSpan: Double = 0.5): DataFrame = {
     val stats = openPlatformStats(counts, outliers, batches, groups, sdFrac,
       geneInfo, replicates, voomSpan)
-    DiffExpr.topTable(
-      DiffExpr.moderatedT(stats, "group", groupA, groupB).withColumnRenamed("p_mod", "p"))
+    DiffExpr.moderatedTopTable(stats, "group", groupA, groupB)
   }
 
   /** E2 multi-contrast — the open-platform script runs the identical
@@ -608,8 +597,8 @@ object Pipelines {
     * fits (`DiffExpression_closedPlatform.R:546,598-633`) — and feeds
     * its col-8 (log2FC) and col-11 (BH-ADJUSTED moderated p) into the
     * ICC-weighted Stouffer (`:1068-1228`). So each platform runs
-    * [[DiffExpr.moderatedT]] + [[DiffExpr.topTable]] (its own eBayes
-    * hyperparameters, its own BH), not a Welch test. */
+    * [[DiffExpr.moderatedTopTable]] (its own eBayes hyperparameters,
+    * its own BH), not a Welch test. */
   def metaAnalysis(platforms0: Seq[(String, ExpressionMatrix)], groups: DataFrame,
       groupA: String, groupB: String): DataFrame = {
     // Stage boundary: each platform matrix is hit by many actions
@@ -640,10 +629,7 @@ object Pipelines {
     // concurrently — each construction runs the platform's
     // hyperparameter moment collect)
     val topTables = Overlap.inParallel(platforms) { case (name, m) =>
-      val stats = DiffExpr.groupStats(m, groups)
-      name -> DiffExpr.topTable(
-        DiffExpr.moderatedT(stats, "group", groupA, groupB)
-          .withColumnRenamed("p_mod", "p"))
+      name -> DiffExpr.moderatedTopTable(DiffExpr.groupStats(m, groups), "group", groupA, groupB)
     }
     metaAnalysisFromTopTables(topTables, meanIcc)
   }

@@ -90,8 +90,12 @@ object RelCache {
 
   /** Slots currently holding relations, with their live hold counts
     * (spec introspection). */
-  def liveSlots: Map[String, Int] = synchronized {
-    holders.flatMap(_.held).groupBy(_._1).map { case (slot, hs) => slot -> hs.size }
+  def liveSlots: Map[String, Int] =
+    liveHolds.groupBy(_._1).map { case (slot, hs) => slot -> hs.size }
+
+  /** Every live hold with its slot (spec introspection). */
+  private[graft] def liveHolds: Seq[(String, DataFrame)] = synchronized {
+    holders.flatMap(_.held).toSeq
   }
 
   private def sameResult(a: DataFrame, b: DataFrame): Boolean =

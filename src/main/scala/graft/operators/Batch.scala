@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.SampleSheet
 import graft.model.{ExpressionMatrix, RelCache}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -11,15 +12,21 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first decomposition:
   *
+  *  0. the batch (and covariate) sheets are sample-grain: collected
+  *     once to the driver and read per cell through a
+  *     [[graft.functions.SampleSheet]] lookup, the reference's
+  *     sample-length `batch` vector, never joined;
   *  1. standardize — null model: z = (x − α̂_g)/σ̂_g from per-gene
   *     grand stats; covariate model (`combatWithCovariates`): OLS fit
   *     of value ~ batch + group with the shared-design trick (XᵀX from
   *     the batch×group contingency counts, inverted once on the
-  *     driver; per-gene Xᵀy one aggregation; β̂ row-local algebra),
+  *     driver; per-gene Xᵀy one window sum; β̂ row-local algebra),
   *     pooled residual variance, covariate effect kept in the
-  *     standardized mean;
+  *     standardized mean. Every per-gene statistic is a window over
+  *     the gene partition, so the cells are never joined back to a
+  *     gene-grain relation;
   *  2. per-(gene, batch) location/scale estimates (γ̂, δ̂²) — one agg;
-  *  3. EB hyperparameters per batch — one tiny per-batch agg;
+  *  3. EB hyperparameters per batch — one tiny per-batch collect;
   *  4. posterior (γ*, δ²*): parametric via sva's `it.sol` fixed point
   *     (bounded row-local loop), or nonparametric via the reference's
   *     log-likelihood-weighted `int.eprior` patch
@@ -28,20 +35,20 @@ import org.apache.spark.sql.functions._
   *  5. adjust: x* = σ̂_g · (z − γ*)/√δ²* + standardized mean.
   *
   * Everything shuffles on gene; no collect of any gene-sized relation
-  * (driver-side collects are the p×p design and per-batch hyperpriors).
+  * (driver-side collects are the sample sheets and per-batch
+  * hyperpriors, from which the p×p design is built).
   */
 object Batch {
 
   def combat(m: ExpressionMatrix, batches: DataFrame, batchCol: String = "batch",
       iterations: Int = 30, parametric: Boolean = true,
       nonparametricGeneCap: Int = 20000): ExpressionMatrix = {
-    val df = m.canonical.df.join(broadcast(batches.withColumnRenamed(batchCol, "batch")),
-      Seq("sample_id"))
     // null covariate model: standardized mean = per-gene grand mean
-    val grand = df.groupBy("gene_id")
-      .agg(avg("value").as("__center"), var_samp("value").as("sigma2"))
+    val standardized = SampleSheet.collect(batches, "batches", Seq(batchCol))
+      .attach(geneCells(m)).withColumnRenamed(batchCol, "batch")
+      .withColumn("__center", avg("value").over(perGene))
+      .withColumn("sigma2", var_samp("value").over(perGene))
       .filter(col("sigma2") > 0)
-    val standardized = df.join(grand, Seq("gene_id"))
       .withColumn("z", (col("value") - col("__center")) / sqrt(col("sigma2")))
     combatCore(standardized, iterations, parametric, nonparametricGeneCap)
   }
@@ -54,17 +61,18 @@ object Batch {
       batchCol: String = "batch", covCol: String = "group",
       iterations: Int = 30, parametric: Boolean = true,
       nonparametricGeneCap: Int = 20000): ExpressionMatrix = {
-    val meta = batches.withColumnRenamed(batchCol, "batch")
-      .join(covariates.withColumnRenamed(covCol, "__cov"), Seq("sample_id"))
-    val df = m.canonical.df.join(broadcast(meta), Seq("sample_id"))
+    val b = SampleSheet.collect(batches, "batches", Seq(batchCol))
+    val cov = SampleSheet.collect(covariates, "covariates", Seq(covCol))
+    val df = cov.attach(b.attach(geneCells(m)))
+      .withColumnRenamed(batchCol, "batch").withColumnRenamed(covCol, "__cov")
 
-    // ONE collect feeds the whole driver-side design: the level sets
-    // are exactly the cells' key projections (every meta row lands in
-    // a cell), so the two separate distinct-collect actions this used
-    // to run are derivable for free (round 17 — three driver actions
-    // to one on the q44/q66/q67 construction path)
-    val cells = meta.groupBy("batch", "__cov").agg(count(lit(1)).as("n"))
-      .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
+    // the whole driver-side design comes from the two sheets: joint
+    // sample counts per (batch, covariate) level over the samples in
+    // both, and the level sets as their key projections
+    val cells = (b.samples intersect cov.samples).toSeq
+      .groupBy(s => (b.values(batchCol)(s).asInstanceOf[String],
+        cov.values(covCol)(s).asInstanceOf[String]))
+      .map { case (k, ss) => k -> ss.size.toLong }
     val batchLevels = cells.keys.map(_._1).toSeq.distinct.sorted
     val covLevels = cells.keys.map(_._2).toSeq.distinct.sorted
     val covNonRef = covLevels.drop(1) // model.matrix(~f) drops the reference level
@@ -88,22 +96,19 @@ object Batch {
     val nTotal = cells.values.sum.toDouble
 
     // per-gene Xᵀy, then β̂ = (XᵀX)⁻¹Xᵀy as row-local column algebra
+    def xty(c: Column): Column = coalesce(sum(when(c, col("value"))).over(perGene), lit(0.0))
     val xtyCols =
-      batchLevels.map(b =>
-        coalesce(sum(when(col("batch") === b, col("value"))), lit(0.0)).as(s"__xty_$b")) ++
-      covNonRef.map(c =>
-        coalesce(sum(when(col("__cov") === c, col("value"))), lit(0.0)).as(s"__xty_c_$c"))
+      batchLevels.map(b => xty(col("batch") === b).as(s"__xty_$b")) ++
+      covNonRef.map(c => xty(col("__cov") === c).as(s"__xty_c_$c"))
     val xtyVec: Seq[Column] =
       batchLevels.map(b => col(s"__xty_$b")) ++ covNonRef.map(c => col(s"__xty_c_$c"))
     def betaExpr(i: Int): Column =
       (0 until p).map(j => lit(inv(i)(j)) * xtyVec(j)).reduce(_ + _)
-    val betas = df.groupBy("gene_id").agg(xtyCols.head, xtyCols.tail: _*)
-      .select(col("gene_id") +:
-        (0 until p).map(i => betaExpr(i).as(s"__beta_$i")): _*)
+    val withBeta = df.select(col("*") +: xtyCols: _*)
+      .select(col("*") +: (0 until p).map(i => betaExpr(i).as(s"__beta_$i")): _*)
 
     // fitted = β_batch + β_cov; standardized mean keeps grand + cov
     // (grand mean = Σ_b (n_b/n)·β_b, sva's n.batches/n.array weights)
-    val joined = df.join(betas, Seq("gene_id"))
     val batchBeta = batchLevels.zipWithIndex
       .map { case (b, i) => when(col("batch") === b, col(s"__beta_$i")) }
       .reduce(_ otherwise _)
@@ -115,24 +120,30 @@ object Batch {
     val grandMean = batchLevels.zipWithIndex.map { case (b, i) =>
       lit(covLevels.map(c => nOf(b, c)).sum / nTotal) * col(s"__beta_$i")
     }.reduce(_ + _)
-    val withFit = joined
+    val withFit = withBeta
       .withColumn("__fit", batchBeta + covShift)
       .withColumn("__center", grandMean + covShift)
     // squared residual as an explicit product (not pow): x*x is the
     // same IEEE op on every engine, pow(x, 2) is only 1-ulp-accurate
-    val pooled = withFit.groupBy("gene_id")
-      .agg((sum((col("value") - col("__fit")) * (col("value") - col("__fit"))) / lit(nTotal))
-        .as("sigma2"))
+    val standardized = withFit
+      .withColumn("sigma2", sum((col("value") - col("__fit")) * (col("value") - col("__fit")))
+        .over(perGene) / lit(nTotal))
       .filter(col("sigma2") > 0)
-    val standardized = withFit.join(pooled, Seq("gene_id"))
       .withColumn("z", (col("value") - col("__center")) / sqrt(col("sigma2")))
     combatCore(standardized, iterations, parametric, nonparametricGeneCap)
   }
 
+  /** The cells of `m` that have a gene: a null gene has no per-gene
+    * statistics (equi-join semantics). */
+  private def geneCells(m: ExpressionMatrix): DataFrame =
+    m.canonical.df.filter(col("gene_id").isNotNull)
+
+  private val perGene = Window.partitionBy("gene_id")
+
   /** Steps 2-5 over a standardized relation with columns (gene_id,
     * sample_id, batch, value, __center, sigma2, z). `__center` is the
     * row-level standardized mean added back at the end. */
-  private def combatCore(standardized: DataFrame, iterations: Int,
+  private[graft] def combatCore(standardized: DataFrame, iterations: Int,
       parametric: Boolean, nonparametricGeneCap: Int): ExpressionMatrix = {
     val z = RelCache.hold("batch.combat.z", standardized
       .select("gene_id", "sample_id", "batch", "__center", "sigma2", "z"))
@@ -153,23 +164,27 @@ object Batch {
     *    g* = (n τ² γ̂ + δ²* γ̄)/(n τ² + δ²*)
     *    δ²* = (b + ½Σ(z−g*)²) / (n/2 + a − 1), with Σ(z−g*)² =
     *          (n−1)δ̂² + n(γ̂ − g*)²  [sufficient statistics only].
-    * Hyperpriors are per-batch moment estimates (rows = #batches); the
-    * iteration is row-local given the broadcast hyperparameters, so it
-    * runs as a typed map — a bounded Scala loop per (gene, batch) row. */
+    * Hyperpriors are per-batch moment estimates (rows = #batches),
+    * collected to the driver; the iteration is row-local given them, so
+    * it runs as a typed map — a bounded Scala loop per (gene, batch)
+    * row. */
   private def parametricPosterior(gb: DataFrame, iterations: Int): DataFrame = {
-    val hyper = gb.groupBy("batch").agg(
+    val hyper = gb.filter(col("batch").isNotNull).groupBy("batch").agg(
         avg("gamma_hat").as("gamma_bar"), var_samp("gamma_hat").as("tau2"),
         avg("delta2_hat").as("d_bar"), var_samp("delta2_hat").as("d_var"))
       .withColumn("a_prior", (lit(2.0) * col("d_var") + col("d_bar") * col("d_bar")) / col("d_var"))
       .withColumn("b_prior", (col("d_bar") * col("d_var") + col("d_bar") * col("d_bar") * col("d_bar")) / col("d_var"))
+      .select("batch", "gamma_bar", "tau2", "a_prior", "b_prior")
+      .collect().map(r => r.getString(0) ->
+        ((r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))).toMap
     val spark = gb.sparkSession
     import spark.implicits._
-    gb.join(broadcast(hyper), Seq("batch"))
+    gb.filter(col("batch").isNotNull)
       .select(col("gene_id"), col("batch"), col("n_b").cast("double"),
-        col("gamma_hat"), col("delta2_hat"),
-        col("gamma_bar"), col("tau2"), col("a_prior"), col("b_prior"))
-      .as[(String, String, Double, Double, Double, Double, Double, Double, Double)]
-      .map { case (gene, batch, n, gammaHat, delta2Hat, gammaBar, tau2, aPrior, bPrior) =>
+        col("gamma_hat"), col("delta2_hat"))
+      .as[(String, String, Double, Double, Double)]
+      .map { case (gene, batch, n, gammaHat, delta2Hat) =>
+        val (gammaBar, tau2, aPrior, bPrior) = hyper(batch)
         var gStar = gammaHat
         var dStar = delta2Hat
         var i = 0

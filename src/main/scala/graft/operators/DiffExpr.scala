@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.StatKernels
+import graft.functions.{SampleSheet, StatKernels}
 import graft.model.{ExpressionMatrix, RelCache}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -16,13 +16,17 @@ import org.apache.spark.sql.functions._
   * a method-of-moments fit over the per-gene variances (Smyth 2004).
   * That fit needs two scalar moments of log s² — computed as one tiny
   * aggregate, not a collect of per-gene data.
+  *
+  * Sample sheets (groups, array weights, replicate units) enter as
+  * driver-side [[graft.functions.SampleSheet]] lookups, not joins: a
+  * cell relation never exchanges or broadcasts against a sheet.
   */
 object DiffExpr {
 
   /** Per-(gene, group) sufficient statistics: the whole lmFit input. */
   def groupStats(m: ExpressionMatrix, groups: DataFrame,
       groupCol: String = "group"): DataFrame =
-    m.df.join(broadcast(groups), Seq(m.sample))
+    SampleSheet.collect(groups, "groups", Seq(groupCol), m.sample).attach(m.df, m.sample)
       .groupBy(m.geneCol, col(groupCol))
       .agg(count(m.valueCol).as("n"), avg(m.valueCol).as("mean"),
            var_samp(m.valueCol).as("var"))
@@ -37,9 +41,8 @@ object DiffExpr {
     * [[welchT]]/[[moderatedT]]. */
   def groupStatsWeighted(m: ExpressionMatrix, groups: DataFrame, weights: DataFrame,
       groupCol: String = "group"): DataFrame =
-    m.canonical.df
-      .join(broadcast(groups), Seq("sample_id"))
-      .join(broadcast(weights), Seq("sample_id"))
+    SampleSheet.collect(weights, "weights", Seq("weight")).attach(
+      SampleSheet.collect(groups, "groups", Seq(groupCol)).attach(m.canonical.df))
       .groupBy(col("gene_id"), col(groupCol))
       .agg(sum("weight").as("__sw"), sum(col("weight") * col("weight")).as("__sw2"),
            sum(col("weight") * col("value")).as("__swx"),
@@ -64,7 +67,7 @@ object DiffExpr {
     * with [[groupStats]] — drop-in for [[welchT]]/[[moderatedT]]. */
   def groupStatsObsWeighted(vw: DataFrame, groups: DataFrame,
       groupCol: String = "group"): DataFrame =
-    vw.join(broadcast(groups), Seq("sample_id"))
+    SampleSheet.collect(groups, "groups", Seq(groupCol)).attach(vw)
       .groupBy(col("gene_id"), col(groupCol))
       .agg(sum("weight").as("__sw"), sum(col("weight") * col("weight")).as("__sw2"),
            sum(col("weight") * col("value")).as("__swx"),
@@ -87,10 +90,11 @@ object DiffExpr {
     * (gene_id, sample_id, value, weight); `arrayW` is sample-keyed
     * (sample_id, weight). Output is voom-shaped — drop-in for
     * [[groupStatsObsWeighted]]. */
-  def combineObsWeights(obsW: DataFrame, arrayW: DataFrame): DataFrame =
-    obsW.join(broadcast(arrayW.withColumnRenamed("weight", "__aw")), Seq("sample_id"))
-      .withColumn("weight", col("weight") * col("__aw"))
-      .drop("__aw")
+  def combineObsWeights(obsW: DataFrame, arrayW: DataFrame): DataFrame = {
+    val aw = SampleSheet.collect(arrayW, "array weights", Seq("weight"))
+    obsW.filter(aw.contains(col("sample_id")))
+      .withColumn("weight", col("weight") * aw("weight", col("sample_id")))
+  }
 
   /** A11 blocking wiring, fast approximation (the exact fit is
     * [[groupStatsGlsObs]], which the chains use): each group's sample
@@ -130,38 +134,29 @@ object DiffExpr {
     * `vw` is an observation-grain relation (gene_id, sample_id,
     * value, weight) — join gene-constant array weights in, or pass
     * the voom output directly; `replicates` maps sample_id → unit
-    * (samples missing from it become singleton units). Two keyed
+    * (samples missing from it become singleton units). Both sheets
+    * are driver lookups, checked there: a duplicate sample_id, or a
+    * unit spanning two groups (which breaks the nested-blocks premise
+    * of the closed-form CS algebra), fails with a named `require`
+    * instead of producing plausible but wrong statistics. Two keyed
     * shuffles: (gene, group, unit) then (gene, group). */
   def groupStatsGlsObs(vw: DataFrame, groups: DataFrame, replicates: DataFrame,
       rho: Double, groupCol: String = "group"): DataFrame = {
     require(rho > -1.0 && rho < 1.0, s"consensus rho must be in (-1, 1), got $rho")
-    // Fail-fast contract checks on the (sample-grain, broadcast-sized)
-    // replicates relation: a duplicate sample_id would silently
-    // MULTIPLY observations through the left join below, and a unit
-    // spanning two groups violates the nested-blocks premise the
-    // closed-form CS algebra rests on — either produces plausible but
-    // wrong sufficient statistics with no error. One tiny aggregation
-    // at plan-construction time (the relation is sample-grain).
+    val g = SampleSheet.collect(groups, "groups", Seq(groupCol))
+    val reps = SampleSheet.collect(replicates, "replicates", Seq("unit"))
     locally {
-      val r = replicates.select(col("sample_id"), col("unit"))
-        .join(groups.select(col("sample_id"), col(groupCol)), Seq("sample_id"), "left")
-        .agg(count(lit(1)).as("rows"),
-             countDistinct(col("sample_id")).as("samples"),
-             countDistinct(col("unit")).as("units"),
-             countDistinct(col("unit"), col(groupCol)).as("unit_groups"))
-        .head()
-      require(r.getLong(0) == r.getLong(1),
-        s"replicates has duplicate sample_id rows (${r.getLong(0)} rows, " +
-          s"${r.getLong(1)} distinct samples) — each sample maps to one unit")
-      require(r.getLong(3) <= r.getLong(2),
-        s"a replicate unit spans more than one $groupCol (${r.getLong(2)} units, " +
-          s"${r.getLong(3)} (unit, $groupCol) pairs) — blocks must be nested in groups")
+      val units = reps.values("unit").toSeq.collect { case (s, u) if u != null =>
+        u -> g.values(groupCol).get(s).filter(_ != null) }
+      val spanning = units.groupBy(_._1).collect {
+        case (u, gs) if gs.flatMap(_._2).distinct.size > 1 => u.toString }.toSeq.sorted
+      require(spanning.isEmpty,
+        s"a replicate unit spans more than one $groupCol (${spanning.take(3).mkString(", ")})" +
+          " — blocks must be nested in groups")
     }
-    val withUnit = vw.join(broadcast(groups.select(col("sample_id"), col(groupCol))),
-        Seq("sample_id"))
-      .join(broadcast(replicates.select(col("sample_id"), col("unit"))),
-        Seq("sample_id"), "left")
-      .withColumn("unit", coalesce(col("unit"), concat(lit("__self_"), col("sample_id"))))
+    val withUnit = g.attach(vw)
+      .withColumn("unit", coalesce(reps("unit", col("sample_id")),
+        concat(lit("__self_"), col("sample_id"))))
     val perUnit = withUnit.groupBy(col("gene_id"), col(groupCol), col("unit"))
       .agg(count(lit(1)).as("__m"),
            sum("weight").as("__sw"),
@@ -220,14 +215,34 @@ object DiffExpr {
     * groupA − groupB. The hyperparameter fit aggregates two scalars —
     * no per-gene collect. */
   def moderatedT(stats: DataFrame, groupCol: String, groupA: String, groupB: String,
-      gene: String = "gene_id"): DataFrame = {
+      gene: String = "gene_id"): DataFrame =
+    moderatedTFit(stats, groupCol, groupA, groupB, gene)._1
+
+  /** A12 + A13 fused — the limma chain's `eBayes` then `topTable`
+    * (`DiffExpression_closedPlatform.R:546,600`): [[moderatedT]] with
+    * `p_mod` named `p`, BH-adjusted into `p_bh` and sorted by p, i.e.
+    * `topTable(moderatedT(...).withColumnRenamed("p_mod", "p"))`. The
+    * eBayes moment collect also counts the genes, so BH runs with that
+    * n (the [[bhWindow]] program, or the stitch above
+    * `spark.graft.bh.smallThreshold`) and needs no hold or count job of
+    * its own. */
+  def moderatedTopTable(stats: DataFrame, groupCol: String, groupA: String,
+      groupB: String, gene: String = "gene_id"): DataFrame = {
+    val (mt, n) = moderatedTFit(stats, groupCol, groupA, groupB, gene)
+    bhWithCount(mt.withColumnRenamed("p_mod", "p"), "p", Seq(col(gene)), n, "p_bh")
+      .orderBy(col("p").asc, col(gene).asc)
+  }
+
+  /** [[moderatedT]] and its gene count, from one moment collect. */
+  private def moderatedTFit(stats: DataFrame, groupCol: String, groupA: String,
+      groupB: String, gene: String): (DataFrame, Long) = {
     // GLS stats ([[groupStatsGlsObs]]) carry the true observation
     // count separately from the effective information `n`: df comes
     // from observations (limma's N − k), the SE term from `n`
     val nDf = if (stats.columns.contains("n_obs")) col("n_obs") else col("n")
-    // gene-grain bounded; executed TWICE (the hyperparameter moment
-    // collect below, then the returned plan) — persist so the stats
-    // lineage (for the chains: the whole upstream fit) runs once.
+    // gene-grain bounded, and read twice (the moment collect below,
+    // then the returned plan): the hold runs the stats lineage (for
+    // the chains: the whole upstream fit) once
     val perGene = RelCache.hold("diffexpr.moderatedt.pergene",
       stats.filter(col(groupCol).isin(groupA, groupB))
       .groupBy(col(gene))
@@ -241,14 +256,14 @@ object DiffExpr {
       .withColumn("df_resid", col("n_tot") - 2)
       .withColumn("s2", col("ss_resid") / col("df_resid"))
       .filter(col("s2") > 0))
-    // method-of-moments on z = log(s2): E[z] and Var[z] give (d0, s0).
-    // Null-guarded: an empty perGene (every gene filtered) leaves all
-    // three moments NULL, and a single gene leaves zvar NULL — both
-    // degrade to the d0 = 1e6 branch over however many rows remain
-    // instead of an opaque NPE.
+    // method-of-moments on z = log(s2): E[z] and Var[z] give (d0, s0),
+    // plus the gene count. Null-guarded: an empty perGene (every gene
+    // filtered) leaves all three moments NULL, and a single gene
+    // leaves zvar NULL — both degrade to the d0 = 1e6 branch over
+    // however many rows remain instead of an opaque NPE.
     val moments = perGene
       .select(avg(log(col("s2"))).as("zbar"), var_samp(log(col("s2"))).as("zvar"),
-              avg(col("df_resid").cast("double")).as("dbar"))
+              avg(col("df_resid").cast("double")).as("dbar"), count(lit(1)).as("n"))
       .collect()(0)
     val zbar = if (moments.isNullAt(0)) 0.0 else moments.getDouble(0)
     val zvar = if (moments.isNullAt(1)) 0.0 else moments.getDouble(1)
@@ -262,13 +277,14 @@ object DiffExpr {
     // previously inflated s0² by (d0/d)² and zeroed every moderated t)
     val s02 = math.exp(zbar + StatKernels.digamma(d0 / 2.0) - StatKernels.digamma(dbar / 2.0) +
       math.log(dbar / d0))
-    perGene
+    val mt = perGene
       .withColumn("s2_post", (lit(d0) * lit(s02) + col("df_resid") * col("s2")) / (lit(d0) + col("df_resid")))
       .withColumn("log2fc", col("ma") - col("mb"))
       .withColumn("t_mod", col("log2fc") / sqrt(col("s2_post") * (lit(1.0) / col("na") + lit(1.0) / col("nb"))))
       .withColumn("df_total", col("df_resid") + lit(d0))
       .withColumn("p_mod", graft.functions.StatFunctions.tP2(col("t_mod"), col("df_total")))
       .select(col(gene), col("log2fc"), col("t_mod"), col("df_total"), col("p_mod"))
+    (mt, moments.getLong(3))
   }
 
   /** A12 multi-contrast — the reference fits ALL C(k,2) pairwise
@@ -349,20 +365,21 @@ object DiffExpr {
     * keyed aggregation: σ̂u² = (MSB − MSW)/m̄, ρ_g = σ̂u²/(σ̂u² + MSW),
     * consensus = tanh(mean Fisher-z) exactly as limma combines genes.
     * `replicates` maps sample_id → (unit, rep); `groups` supplies the
-    * fixed effect. Fully distributed: one shuffle per keyed step,
-    * only the scalar consensus leaves the cluster. */
+    * fixed effect. Fully distributed: one shuffle per keyed step (the
+    * cell means are a (gene, group) window, not a join back), only the
+    * scalar consensus leaves the cluster. */
   def duplicateCorrelationReml(m: ExpressionMatrix, replicates: DataFrame,
       groups: DataFrame, groupCol: String = "group"): (DataFrame, Double) = {
-    val joined = m.canonical.df
-      .join(broadcast(replicates), Seq("sample_id"))
-      .join(broadcast(groups), Seq("sample_id"))
-    val cells = joined.groupBy("gene_id", groupCol).agg(avg("value").as("__mu"))
+    val joined = SampleSheet.collect(groups, "groups", Seq(groupCol)).attach(
+      SampleSheet.collect(replicates, "replicates", Seq("unit")).attach(m.canonical.df))
     // gene×sample bounded; referenced by BOTH the unit decomposition
     // and the per-gene group count below — persist or the cell-mean
-    // join lineage executes twice (round 17)
+    // lineage executes twice (round 17). A cell with a null gene or
+    // group has no cell mean and drops (equi-join semantics).
     val resid = RelCache.hold("diffexpr.dupcorr.resid",
-      joined.join(cells, Seq("gene_id", groupCol))
-        .withColumn("__e", col("value") - col("__mu")))
+      joined.filter(col("gene_id").isNotNull && col(groupCol).isNotNull)
+        .withColumn("__e", col("value") -
+          avg("value").over(Window.partitionBy(col("gene_id"), col(groupCol)))))
     val unit = resid.groupBy(col("gene_id"), col("unit"))
       .agg(avg("__e").as("__eu"), count(lit(1)).as("__m"),
            sum(col("__e") * col("__e")).as("__se2"))
@@ -398,7 +415,8 @@ object DiffExpr {
     * Fisher z over genes. `replicates` maps sample_id → (unit, rep).
     * One aggregation per step, fully distributed until the scalar. */
   def duplicateCorrelation(m: ExpressionMatrix, replicates: DataFrame): (DataFrame, Double) = {
-    val wide = m.canonical.df.join(broadcast(replicates), Seq("sample_id"))
+    val wide = SampleSheet.collect(replicates, "replicates", Seq("unit", "rep"))
+      .attach(m.canonical.df)
       .groupBy(col("gene_id"), col("unit"))
       .agg(max(when(col("rep") === 1, col("value"))).as("v1"),
            max(when(col("rep") === 2, col("value"))).as("v2"))
@@ -445,7 +463,7 @@ object DiffExpr {
       priorN: Double = 10.0): DataFrame = {
     val spark = m.df.sparkSession
     import spark.implicits._
-    val base = m.canonical.df.join(broadcast(groups), Seq("sample_id"))
+    val base = SampleSheet.collect(groups, "groups", Seq(groupCol)).attach(m.canonical.df)
       .select(col("gene_id"), col("sample_id"), col(groupCol).as("__grp"), col("value"))
     val keys = base.groupBy("sample_id", "__grp").count()
       .select("sample_id", "__grp").collect()
@@ -539,7 +557,7 @@ object DiffExpr {
     * pass. */
   def arrayWeights(m: ExpressionMatrix, groups: DataFrame,
       groupCol: String = "group"): DataFrame = {
-    val withGroup = m.canonical.df.join(broadcast(groups), Seq("sample_id"))
+    val withGroup = SampleSheet.collect(groups, "groups", Seq(groupCol)).attach(m.canonical.df)
     val cellMeans = withGroup.groupBy("gene_id", groupCol)
       .agg(avg("value").as("__mu"))
     val resid = withGroup.join(cellMeans, Seq("gene_id", groupCol))
@@ -589,8 +607,6 @@ object DiffExpr {
     * in one range partition, so ranks stitch exactly. */
   def bhAdjustScalable(df: DataFrame, p: String, tiebreak: Seq[Column],
       out: String = "p_bh"): DataFrame = {
-    val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
     // The stitch fans the input into several consumers, and without
     // persistence each branch re-executed the ENTIRE upstream lineage
     // — for the DE chains that meant the voom/GLS fit ran ~5× inside
@@ -604,7 +620,14 @@ object DiffExpr {
     // the broadcast-count subquery stage inside the action — and the
     // count picks the path below, making the operator scale-adaptive
     // instead of paying the multi-stage stitch on gene-grain inputs.
-    val n = base.count()
+    bhWithCount(base, p, tiebreak, base.count(), out)
+  }
+
+  /** BH over `df` whose row count `n` the caller already knows. */
+  private def bhWithCount(df: DataFrame, p: String, tiebreak: Seq[Column], n: Long,
+      out: String): DataFrame = {
+    val spark = df.sparkSession
+    val parts = spark.sessionState.conf.numShufflePartitions
     val smallMax = spark.conf.getOption("spark.graft.bh.smallThreshold")
       .map(_.toLong).getOrElse(100000L)
     if (n <= smallMax) {
@@ -615,10 +638,10 @@ object DiffExpr {
       // two persisted window passes + two broadcast joins. The
       // single-partition window is exactly what `n ≤ smallMax` makes
       // safe; data-sized relations take the stitch below.
-      bhWindow(base, p, Nil, tiebreak, lit(n), out)
+      bhWindow(df, p, Nil, tiebreak, lit(n), out)
     } else {
       val orderAsc = col(p).asc +: tiebreak.map(_.asc)
-      val ranged = base.repartitionByRange(parts, orderAsc: _*)
+      val ranged = df.repartitionByRange(parts, orderAsc: _*)
         .withColumn("__pid", spark_partition_id())
       val wLocal = Window.partitionBy("__pid").orderBy(orderAsc: _*)
       val withLrk = RelCache.hold("diffexpr.bhadjust.lrk",

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{RmaBgParams, StatAlgebra}
+import graft.functions.{RmaBgParams, SampleSheet, StatAlgebra}
 import graft.model.{ExpressionMatrix, RelCache}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -92,16 +92,23 @@ object Normalize {
       robustIters: Int = 3, groupCol: String = "group"): DataFrame = {
     val spark = counts.df.sparkSession
     val c = counts.canonical.df
-    val libs = c.groupBy("sample_id").agg(sum("value").as("__lib"))
-    val meanLogLib = libs.agg(avg(log2(col("__lib") + 1.0))).head().getDouble(0)
+    // library sizes are sample-grain: one collect gives both the
+    // per-cell lookup and the mean log library size
+    val libs = SampleSheet.collect(c.groupBy("sample_id").agg(sum("value").as("__lib")),
+      "library sizes", Seq("__lib"))
+    val logLibs = libs.values("__lib").toSeq.sortBy(_._1).collect {
+      case (_, l: Double) if l + 1.0 > 0 => StrictMath.log(l + 1.0) / StrictMath.log(2.0) }
+    val meanLogLib = logLibs.sum / logLibs.size
     val log2e6 = math.log(1e6) / math.log(2.0)
-    val y = c.join(libs, Seq("sample_id"))
-      .withColumn("__loglib", log2(col("__lib") + 1.0))
-      .withColumn("value", log2((col("value") + 0.5) / (col("__lib") + 1.0) * 1e6))
-      .join(broadcast(groups.select(col("sample_id"), col(groupCol))), Seq("sample_id"))
-    val cells = y.groupBy(col("gene_id"), col(groupCol)).agg(avg("value").as("__mu"))
+    val lib = libs("__lib", col("sample_id"))
+    val y = SampleSheet.collect(groups, "groups", Seq(groupCol)).attach(c)
+      .withColumn("__loglib", log2(lib + 1.0))
+      .withColumn("value", log2((col("value") + 0.5) / (lib + 1.0) * 1e6))
+    // cell means as a (gene, group) window; a cell with a null gene or
+    // group has none and drops (equi-join semantics)
     val obs = RelCache.hold("normalize.voom.obs",
-      y.join(cells, Seq("gene_id", groupCol))
+      y.filter(col("gene_id").isNotNull && col(groupCol).isNotNull)
+        .withColumn("__mu", avg("value").over(Window.partitionBy(col("gene_id"), col(groupCol))))
         .select(col("gene_id"), col("sample_id"), col(groupCol), col("value"),
           col("__loglib"), col("__mu")))
     // per-gene trend points (genes with residual df and nonzero SS),

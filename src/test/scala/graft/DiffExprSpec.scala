@@ -87,6 +87,31 @@ class DiffExprSpec extends SparkSpec {
     assert(out.forall(_.getAs[Double]("df_total") > 4.0))
   }
 
+  test("moderatedTopTable equals topTable over moderatedT: rows, p_bh and order, zero and one gene too") {
+    def fixture(genes: Int) = {
+      val rows = for { g <- 1 to genes; i <- 1 to 6 } yield {
+        val grp = if (i <= 3) "A" else "B"
+        (s"g$g", s"s$i", 5.0 + (if (grp == "A" && g % 3 == 0) 1.0 else 0.0) +
+          ((g * 31 + i * 17) % 7 - 3) * 0.1, grp)
+      }
+      val m = ExpressionMatrix(rows.toDF("gene_id", "sample_id", "value", "g").drop("g"))
+      DiffExpr.groupStats(m, rows.map(r => (r._2, r._4)).distinct.toDF("sample_id", "group"))
+    }
+    // 40 genes; one gene (zvar NULL: the d0 = 1e6 branch); zero genes
+    // (every gene fails the variance filter)
+    for ((name, stats) <- Seq("40 genes" -> fixture(40), "1 gene" -> fixture(1),
+        "0 genes" -> fixture(4).filter(col("gene_id") === "none"))) {
+      val fused = DiffExpr.moderatedTopTable(stats, "group", "A", "B").collect().toSeq
+      val twoStep = DiffExpr.topTable(
+        DiffExpr.moderatedT(stats, "group", "A", "B").withColumnRenamed("p_mod", "p"))
+        .collect().toSeq
+      assert(fused == twoStep, name)
+      assert(fused.nonEmpty == (name != "0 genes"), name)
+    }
+    assert(DiffExpr.moderatedTopTable(fixture(1), "group", "A", "B").head()
+      .getAs[Double]("df_total") > 1e6)
+  }
+
   test("quantileNormalize equalizes per-sample distributions and preserves ranks") {
     val rows = Seq(
       ("g1", "s1", 1.0), ("g2", "s1", 5.0), ("g3", "s1", 3.0),

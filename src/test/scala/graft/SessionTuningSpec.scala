@@ -131,6 +131,47 @@ class SessionTuningSpec extends SparkSpec {
       "operators take their input's partitioning as given (graft.sources.Fixtures " +
         "decides it):\n" + offenders.mkString("\n"))
   }
+
+  /** Lines `from` (a member's first line) up to the next member of the
+    * same object, as (1-based line number, text). */
+  private def member(lines: Seq[String], from: Int): Seq[(Int, String)] = {
+    val next = "^  (?:private(?:\\[\\w+\\])? )?(?:def|val|lazy val|object) |^  /\\*\\*|^}".r
+    val end = lines.indexWhere(l => next.findFirstIn(l).isDefined, from + 1)
+    (from until (if (end < 0) lines.length else end)).map(i => (i + 1, lines(i)))
+  }
+
+  test("sample sheets enter the statistics chain as lookups, not broadcast joins") {
+    def read(p: String) = {
+      val f = new File(p)
+      assert(f.exists, s"$p not found: run from the repository root")
+      scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq
+    }
+    def defs(p: String, names: Set[String]): Seq[(String, Int, String)] = {
+      val lines = read(p)
+      val start = "^  (?:private )?def (\\w+)[(\\[]".r
+      lines.indices.flatMap { i =>
+        start.findFirstMatchIn(lines(i)).filter(m => names(m.group(1))).toSeq
+          .flatMap(_ => member(lines, i))
+      }.map { case (n, l) => (p, n, l) }
+    }
+    def whole(p: String) = read(p).zipWithIndex.map { case (l, i) => (p, i + 1, l) }
+    val guarded = whole("src/main/scala/graft/operators/DiffExpr.scala") ++
+      whole("src/main/scala/graft/operators/Batch.scala") ++
+      defs("src/main/scala/graft/operators/Normalize.scala", Set("voom")) ++
+      defs("src/main/scala/graft/Pipelines.scala", Set("closedPlatformDE",
+        "closedPlatformDEMulti", "closedPlatformStats", "openPlatformDE",
+        "openPlatformDEMulti", "openPlatformStats", "metaAnalysis"))
+    assert(guarded.exists(_._3.contains("def voom(")) &&
+      guarded.exists(_._3.contains("def openPlatformStats(")), "guarded members not found")
+    // a join may wrap onto the next line; the BH stitch's partition-
+    // offset joins are not sample-grain and stay
+    val text = guarded.map(_._3).mkString("\n")
+    val lineAt = guarded.map(g => s"${g._1}:${g._2}").toIndexedSeq
+    val offenders = "\\.join\\(\\s*broadcast\\((?!offs\\)|sufmins\\))".r.findAllMatchIn(text)
+      .map(m => lineAt(text.substring(0, m.start).count(_ == '\n'))).toSeq
+    assert(offenders.isEmpty, "join sample sheets through graft.functions.SampleSheet " +
+      "lookups, not broadcast joins:\n" + offenders.mkString("\n"))
+  }
 }
 
 /** Holds a graft local dir's lock the way a live JVM does, until its

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{Bpe, DiffExpr, Similarity}
+import graft.model.ExpressionMatrix
+import graft.operators.{Batch, Bpe, DiffExpr, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.CatalogTableType
 import org.apache.spark.sql.expressions.Window
@@ -10,9 +11,24 @@ import org.apache.spark.sql.functions._
   * the scalable and grouped paths are checked against, the
   * relational BPE segmentation that `Bpe.segmentFast` is gated
   * against, and the all-pairs embedding near-duplicate form that the
-  * banded `TextDedup.embeddingDupPairs` is measured against. Also the
-  * in-JVM driver-restart step the at-rest specs need. */
+  * banded `TextDedup.embeddingDupPairs` is measured against, and the
+  * join form of ComBat's null-model standardization that the lookup
+  * and window form is checked against. Also the in-JVM driver-restart
+  * step the at-rest specs need. */
 object SpecReferences {
+
+  /** `Batch.combat` with its standardization in join form: the batch
+    * sheet broadcast-joined on sample_id, the per-gene grand stats
+    * joined back on gene_id. */
+  def combatJoined(m: ExpressionMatrix, batches: DataFrame): ExpressionMatrix = {
+    val df = m.canonical.df.join(broadcast(batches), Seq("sample_id"))
+    val grand = df.groupBy("gene_id")
+      .agg(avg("value").as("__center"), var_samp("value").as("sigma2"))
+      .filter(col("sigma2") > 0)
+    Batch.combatCore(df.join(grand, Seq("gene_id"))
+      .withColumn("z", (col("value") - col("__center")) / sqrt(col("sigma2"))),
+      iterations = 30, parametric = true, nonparametricGeneCap = 20000)
+  }
 
   /** Drop every registered `prefix*` table from the (shared) catalog
     * WITHOUT touching its warehouse files — the in-JVM equivalent of
