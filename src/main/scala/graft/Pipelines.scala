@@ -414,8 +414,12 @@ object Pipelines {
     // loser anti-join below (where the pushed-down lang/quality filter
     // evaluates) — and aliased projections defeat exchange reuse, so
     // without a hold the exact-dedup aggregation re-executes from the
-    // source per branch (round 17; the minhashLshPairs shRows/cand
-    // holds' argument, one level up). Same RelCache hold lifecycle.
+    // source per branch (round 17; the minhashLshPairs shRows hold's
+    // argument, one level up). Same RelCache hold lifecycle. Every
+    // stage under it reads its input once: a join back onto a stage's
+    // own input would get the same two differently pruned copies, and
+    // so run the whole reference stage twice inside this hold
+    // (paragraphDedup has no join-back for that reason).
     val exact = graft.model.RelCache.hold("pipelines.curation.exact", exact0k)
     val pairs = TextDedup
       .minhashLshPairs(exact, k = 8, bands = 4, shingleWidth = 3,

@@ -263,38 +263,58 @@ object TextDedup {
     * survive with empty text — the length/quality stage downstream
     * owns the drop decision.
     *
-    * Scale shape: the keep-first winner per paragraph is
-    * `min(struct(id, pos))` — a partial-aggregatable form (map-side
-    * combine reduces each paragraph to ONE candidate row per task), so
-    * a viral boilerplate paragraph with 10⁶ copies — the exact thing
-    * this operator exists to remove — costs each task one row instead
-    * of concentrating its whole duplicate mass in a single-task
-    * `row_number` sort. The winner row carries (id, pos, para), so no
-    * join-back is needed; reassembly is one doc-grain shuffle. The
-    * reassembly's array transform is one interpreted call per DOC row
-    * (not per token) — far off the gram-fan-out hot path where HOFs
-    * are banned. Empty paragraphs (consecutive separators) are dropped
-    * before the aggregation so they cannot become a viral dedup key.
-    * This aggregation form is also the stateful-streaming shape (one
-    * state row per paragraph — [[graft.streaming.StreamOps]]). */
+    * Scale shape: one read of `docs`, two keyed aggregations, no
+    * join-back. Each document explodes to a SENTINEL row at position 0,
+    * which carries the document's non-text columns as one struct (null
+    * on every paragraph row), plus one row per non-empty paragraph
+    * (empty paragraphs from consecutive separators are dropped, so
+    * they cannot become a viral dedup key). The first aggregation is
+    * keyed by the paragraph, or by the doc id for a sentinel: its
+    * keep-first winner `min(struct(id, pos))` is partial-
+    * aggregatable (map-side combine reduces each paragraph to ONE
+    * candidate row per task), so a viral boilerplate paragraph with
+    * 10⁶ copies — the exact thing this operator exists to remove —
+    * costs each task one row, and the sentinels of one id collect into
+    * one list. The second aggregation, keyed by doc id, reassembles the
+    * winning paragraphs in position order (one interpreted array
+    * transform per DOC row, far off the gram-fan-out hot path where
+    * HOFs are banned) next to that list, which explodes back to one
+    * output row per input row. So duplicate ids keep every row, each
+    * with the union of their winning paragraphs, and a null id keeps
+    * its rows with empty text while its paragraphs still win, as the
+    * join-back form (`SpecReferences.paragraphDedupJoined`) gives.
+    * Output columns: `id`, the other columns in input order, `text`.
+    * The paragraph aggregation is also the stateful-streaming shape
+    * (one state row per paragraph — [[graft.streaming.StreamOps]]). */
   def paragraphDedup(docs: DataFrame, sep: String = "\n", id: String = "doc_id",
       text: String = "text"): DataFrame = {
-    val paras = docs
-      .select(col(id), posexplode(split(col(text),
-        java.util.regex.Pattern.quote(sep))).as(Seq("pos", "para")))
-      .filter(length(col("para")) > 0)
-    // min over struct = lexicographic (id asc, pos asc) — the same
-    // deterministic keep-first the window form computed
-    val keep = paras.groupBy(col("para"))
-      .agg(min(struct(col(id), col("pos"))).as("__w"))
-      .select(col("__w")(id).as(id), col("__w")("pos").as("pos"), col("para"))
-    val rebuilt = keep.groupBy(col(id))
-      .agg(array_join(
-        expr("transform(array_sort(collect_list(struct(pos, para))), x -> x.para)"),
-        sep).as(text))
-    // column-preserving: everything except the text column rides along
-    docs.drop(text).join(rebuilt, Seq(id), "left")
-      .withColumn(text, coalesce(col(text), lit("")))
+    val rest = docs.columns.filterNot(_ == text)
+    val meta = struct(rest.map(col).toSeq: _*)
+    val rows = docs
+      .select(col(id), meta.as("__m"), posexplode(concat(array(lit(null).cast("string")),
+        coalesce(split(col(text), java.util.regex.Pattern.quote(sep)),
+          array().cast("array<string>")))).as(Seq("pos", "para")))
+      .filter(col("pos") === 0 || length(col("para")) > 0)
+      .select(col("para"), when(col("pos") === 0, col(id)).as("__sid"),
+        when(col("pos") > 0, struct(col(id), col("pos"))).as("__p"),
+        when(col("pos") === 0, col("__m")).as("__m"))
+    // min over struct = lexicographic (id asc, pos asc): deterministic
+    // keep-first, with a null id first as in any ascending order
+    val keep = rows.groupBy(col("para"), col("__sid"))
+      .agg(min(col("__p")).as("__w"), collect_list(col("__m")).as("__ms"))
+    val byDoc = keep
+      .select(when(col("para").isNull, col("__sid")).otherwise(col("__w")(id)).as("__id"),
+        when(col("para").isNotNull, struct(col("__w")("pos"), col("para"))).as("__p"),
+        when(col("para").isNull, col("__ms")).as("__ms"))
+      .groupBy(col("__id"))
+      .agg(collect_list(col("__p")).as("__ps"), first(col("__ms"), ignoreNulls = true).as("__ms"))
+    val rebuilt = array_join(
+      transform(array_sort(col("__ps")), p => p("para")), sep)
+    byDoc
+      .select(explode(col("__ms")).as("__m"),
+        coalesce(when(col("__id").isNotNull, rebuilt), lit("")).as(text))
+      .select(((id +: rest.filterNot(_ == id)).map(c => col("__m")(c).as(c)) :+
+        col(text)).toSeq: _*)
   }
 
   /** Deterministic per-key quota sampling — the domain/language
@@ -747,7 +767,6 @@ object TextDedup {
         Seq("band"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b", "sz_a", "sz_b").distinct()
-    graft.model.RelCache.hold("textdedup.minhashLshPairs.cand", cand)
     // Jaccard relationally: |A∩B| by joining shingle rows on the
     // shingle string, |A∪B| from the carried per-doc counts.
     val inter = cand
@@ -759,11 +778,18 @@ object TextDedup {
     // join-back that re-attaches zero-inter pairs is needed only for
     // minJaccard = 0 — the [[nearDupAgainstIndex]] inner-verify
     // argument, applied at the source (round 17: one pair-volume
-    // exchange + sort saved on every thresholded call site)
+    // exchange + sort saved on every thresholded call site). Only
+    // that join-back reads `cand` a second time, so only it holds
+    // `cand`: a hold read once is a materialization, and its cached
+    // plan would pin the candidate join's broadcast relation for the
+    // life of the query.
     val withInter =
       if (minJaccard > 0.0) inter
-      else cand.join(inter.select("id_a", "id_b", "inter"),
-        Seq("id_a", "id_b"), "left").na.fill(0L, Seq("inter"))
+      else {
+        graft.model.RelCache.hold("textdedup.minhashLshPairs.cand", cand)
+        cand.join(inter.select("id_a", "id_b", "inter"),
+          Seq("id_a", "id_b"), "left").na.fill(0L, Seq("inter"))
+      }
     withInter
       .withColumn("jaccard",
         col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))

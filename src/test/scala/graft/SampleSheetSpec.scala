@@ -3,11 +3,7 @@ package graft
 import graft.functions.SampleSheet
 import graft.model.{ExpressionMatrix, RelCache}
 import graft.operators.{Batch, DiffExpr, Normalize}
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.{SparkPlan, ReusedSubqueryExec}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sample sheets enter the statistics chain as driver-side lookups
@@ -122,18 +118,6 @@ class SampleSheetSpec extends SparkSpec {
       .contains("groups has duplicate sample_id rows"))
   }
 
-  /** Broadcast exchanges in a cached plan, stopping at the cached
-    * relations it reads (their own holds are walked separately). */
-  private def broadcastsUnder(p: SparkPlan): Seq[String] = p match {
-    case a: AdaptiveSparkPlanExec => broadcastsUnder(a.executedPlan)
-    case q: QueryStageExec => broadcastsUnder(q.plan)
-    case r: ReusedExchangeExec => broadcastsUnder(r.child)
-    case r: ReusedSubqueryExec => broadcastsUnder(r.child)
-    case b: BroadcastExchangeExec => b.simpleString(200) +: broadcastsUnder(b.child)
-    case _: InMemoryTableScanExec => Nil
-    case other => (other.children ++ other.subqueries).flatMap(broadcastsUnder)
-  }
-
   test("no statistics-layer hold pins a broadcast relation") {
     // closed platform: 2 datasets × 3 genes × 2 probes × 4 samples
     val probeRows = for {
@@ -189,8 +173,6 @@ class SampleSheetSpec extends SparkSpec {
         .toDF("sample_id", "group")).df
     ).foreach(df => assert(df.collect().nonEmpty))
 
-    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager
     val checked = RelCache.liveHolds.filter { case (slot, df) =>
       !before.exists(_ eq df) &&
         (slot.startsWith("diffexpr.") || slot.startsWith("batch.") || slot == "normalize.voom.obs")
@@ -200,10 +182,7 @@ class SampleSheetSpec extends SparkSpec {
       "batch.combat.gb", "normalize.voom.obs").subsetOf(checked.map(_._1).toSet),
       s"holds made: ${checked.map(_._1).distinct}")
     val pinned = checked.flatMap { case (slot, df) =>
-      val cached = cm.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]])
-      assert(cached.isDefined, s"$slot is held but not in the CacheManager")
-      broadcastsUnder(cached.get.cachedRepresentation.cacheBuilder.cachedPlan)
-        .map(b => s"$slot: $b")
+      HeldPlans.broadcasts(HeldPlans.cachedPlan(spark, df)).map(b => s"$slot: $b")
     }
     assert(pinned.isEmpty, "held relations with a broadcast exchange:\n" + pinned.mkString("\n"))
   }

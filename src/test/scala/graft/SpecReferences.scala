@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * against, and the all-pairs embedding near-duplicate form that the
   * banded `TextDedup.embeddingDupPairs` is measured against, and the
   * join form of ComBat's null-model standardization that the lookup
-  * and window form is checked against. Also the in-JVM driver-restart
-  * step the at-rest specs need. */
+  * and window form is checked against, and the join-back form of
+  * paragraph dedup. Also the in-JVM driver-restart step the at-rest
+  * specs need. */
 object SpecReferences {
 
   /** `Batch.combat` with its standardization in join form: the batch
@@ -60,6 +61,27 @@ object SpecReferences {
     * `p.adjust(method="BH")`. */
   def bhAdjust(df: DataFrame, p: String, tiebreak: Seq[Column], out: String = "p_bh"): DataFrame =
     DiffExpr.bhWindow(df, p, Nil, tiebreak, count(lit(1)).over(Window.partitionBy()), out)
+
+  /** Join-back form of `TextDedup.paragraphDedup`: the keep-first
+    * winner per paragraph, paragraphs reassembled per id, and the
+    * rebuilt text left-joined back onto the input by id (so the input
+    * is read twice). */
+  def paragraphDedupJoined(docs: DataFrame, sep: String = "\n", id: String = "doc_id",
+      text: String = "text"): DataFrame = {
+    val paras = docs
+      .select(col(id), posexplode(split(col(text),
+        java.util.regex.Pattern.quote(sep))).as(Seq("pos", "para")))
+      .filter(length(col("para")) > 0)
+    val keep = paras.groupBy(col("para"))
+      .agg(min(struct(col(id), col("pos"))).as("__w"))
+      .select(col("__w")(id).as(id), col("__w")("pos").as("pos"), col("para"))
+    val rebuilt = keep.groupBy(col(id))
+      .agg(array_join(
+        expr("transform(array_sort(collect_list(struct(pos, para))), x -> x.para)"),
+        sep).as(text))
+    docs.drop(text).join(rebuilt, Seq(id), "left")
+      .withColumn(text, coalesce(col(text), lit("")))
+  }
 
   /** All-pairs exact form of `TextDedup.embeddingDupPairs`, via
     * [[Similarity.cosinePairs]]. Quadratic — bounded relations only. */
