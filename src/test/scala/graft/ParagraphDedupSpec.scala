@@ -2,7 +2,7 @@ package graft
 
 import graft.model.RelCache
 import graft.operators.TextDedup
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
